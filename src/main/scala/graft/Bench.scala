@@ -58,24 +58,36 @@ object Bench {
     // single-shot total is dominated by where that stall lands. Caches
     // and sink tables are cleared between runs, so run 2 re-executes
     // the full plan — only JIT/page-cache warmth carries over.
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    // A query that throws is a FAILURE, not a fast query: its status is
+    // "err:<class>" and it is left out of every timing map and the
+    // total. Only NonFatal is caught — a VM error must crash the bench.
+    val attempted = SparkEntry.queries.map { case (name, fn) =>
       val runs = (1 to 2).map { _ =>
         val l0 = loadAvg
         val c0 = CpuMeter.snap()
         val t0 = System.nanoTime()
-        try { materialize(fn(spark, sfDir)) } catch { case _: Throwable => () }
+        val err =
+          try { materialize(fn(spark, sfDir)); None }
+          catch { case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name failed: $e")
+            Some(s"err:${e.getClass.getSimpleName}") }
         val t = (System.nanoTime() - t0) / 1e9
         val cd = CpuMeter.delta(c0, CpuMeter.snap())
         // streaming queries leave memory-sink tables behind; drop them
         // so driver heap doesn't degrade later queries
         spark.catalog.clearCache()
         spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
-        (t, l0, cd)
+        (t, l0, cd, err)
       }
       // keep the load/CPU deltas sampled around the run that won the
       // min: that is the run the reported number came from
-      name -> runs.minBy(_._1)
+      val (t, l0, cd, _) = runs.minBy(_._1)
+      name -> (runs.flatMap(_._4).headOption.getOrElse("ok"), (t, l0, cd))
     }
+    val statuses = attempted.map { case (k, (st, _)) => s"\"" + k + "\":\"" + st + "\"" }
+      .mkString("{", ",", "}")
+    val results = attempted.collect { case (k, ("ok", r)) => k -> r }
+    val failed = attempted.size - results.size
     val qs = results.map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // sibling maps, same keys as "queries": 1-min loadavg when the
@@ -115,7 +127,7 @@ object Bench {
       val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
       if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"load":$loads,"steal_cpu_s":$steals,"iowait_cpu_s":$iowaits,"other_cpu_s":$others,"gc_cpu_s":$gcs,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"status":$statuses,"failed":$failed,"load":$loads,"steal_cpu_s":$steals,"iowait_cpu_s":$iowaits,"other_cpu_s":$others,"gc_cpu_s":$gcs,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"}"""
     // stdout carries a COMPACT line only (total + the 12 slowest
     // queries): the driver's stdout harvester keeps a bounded tail of
     // the sbt output, and the full 154-query line (~7 KB) has started
@@ -135,7 +147,7 @@ object Bench {
     // from 154 to 12 entries instead of failing loudly (round-8 ADVICE)
     val topQs = results.toSeq.sortBy(-_._2._1).take(12)
       .map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"n_queries":${results.size},"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"$sumOther%.1f"},"steal_cpu_s_sum":${f"$sumSteal%.1f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha","full":"$fullName"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"n_queries":${attempted.size},"failed":$failed,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"$sumOther%.1f"},"steal_cpu_s_sum":${f"$sumSteal%.1f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha","full":"$fullName"}""")
     // ALSO land the line in a file: the driver's stdout harvester has
     // truncated the sbt tail before (BENCH_r04 kept 63/135 timings), and
     // per-query history is the regression signal — it must survive

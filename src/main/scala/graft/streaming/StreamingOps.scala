@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.{QueryModule, Tbl}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
@@ -266,24 +266,26 @@ object StreamingOps extends QueryModule {
 
   /** Stateful streams pay a per-(partition × store instance × batch)
     * load+commit cost — including the zero-input watermark-advance batch
-    * — so the state partition count is a per-stream sizing decision:
-    * size it to the stream's state volume, not the session-wide shuffle
-    * default. Measured 2× end to end on the stream-stream join at ~40k
-    * state rows (commit 6d8d8dc). The count is a deployment knob
-    * (`spark.graft.statePartitions` conf, or SPARK_GRAFT_STATE_PARTITIONS
-    * env), defaulting to 16 — the default was 8 while each store
-    * instance's commit cost ~400 ms (FileContext checkpoint manager, now
-    * fixed): with commits at ~10 ms the heavy stream (s1, 200k puts) runs
-    * ~25% faster at 16 (4.3→3.4 s measured back-to-back) and 32 regresses
-    * (instance machinery competes with the 32 task threads), so 16 is the
-    * measured sweet spot for the bench's state volumes; a 100 TB stream
-    * raises it to match executor count × state volume. NOTE: streaming
-    * state partitioning is frozen into the checkpoint at first start —
-    * pick for the target scale, not the backfill. */
+    * — so the state partition count is a per-stream sizing decision,
+    * not the session-wide shuffle default. The default is one store
+    * instance per core, capped at 16: `min(16, defaultParallelism)`.
+    * Partitions beyond the core count only queue the same per-instance
+    * open/load/commit in extra task waves. Measured on a 4-core VM
+    * (perfbench registry_streams, 10 seeds): median wall 54.6 s at 16
+    * partitions vs 39.9 s at 4, and 8 about the same as 4; per pass,
+    * state instances 80→20, load 4.3→0.9 s, commit 2.9→0.8 s, with rows
+    * updated and execution time unchanged. The cap of 16 is the
+    * 32-core result (16 beat both 8 and 32: past 16 the instance
+    * machinery competes with the task threads). Streams whose key count
+    * the query fixes below that pass `keyDomain` (see
+    * [[withStatePartitions]]). `spark.graft.statePartitions` sets the
+    * count outright — for a deployment sizing to executor count × state
+    * volume. NOTE: streaming state partitioning is frozen into the
+    * checkpoint at first start — pick for the target scale, not the
+    * backfill. */
   private def statePartitions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.statePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS")) match {
-      case None => 16
+    s.conf.getOption("spark.graft.statePartitions") match {
+      case None => math.min(16, s.sparkContext.defaultParallelism)
       case Some(v) =>
         // fail with the offending value, not a bare NumberFormatException
         // five stack frames into stream planning
@@ -406,8 +408,8 @@ object StreamingOps extends QueryModule {
 
   /** T4 complete mode: running per-type counts. withStatePartitions:
     * the key domain IS the 5 event types — 5 keys of state have no
-    * business paying 16 store instances' worth of per-batch
-    * load+commit. */
+    * business paying more store instances' worth of per-batch
+    * load+commit than that. */
   private def streamCompleteCounts(s: SparkSession, d: String): DataFrame =
     withStatePartitions(s, keyDomain = 5) {
       import s.implicits._
@@ -621,20 +623,43 @@ object StreamingOps extends QueryModule {
     * is a stateless codegen map fused into job 1's span; the only
     * exchange is the groupByKey(mmsi) into the state store, identical
     * to s2's — at 100 TB the chained form costs exactly one shuffle
-    * more than nothing. */
+    * more than nothing. A message whose timestamp missed job 1's
+    * pattern is dropped in job 2 ([[chainedJob2]]), not a failed batch. */
   private def streamChainedFlagship(s: SparkSession, d: String): DataFrame =
     withStatePartitions(s) { streamChainedFlagshipInner(s, d) }
 
   private def streamChainedFlagshipInner(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import StatefulOps._
     val features = AisPipeline.preprocess(syntheticAisEnvelope(s, d))
     // job-1 → job-2 wire: to_json(struct(*)) (`preprocess.py:68`) …
     val wire = features.select(AisPipeline.toJsonEnvelope(features))
-    // … re-parsed by predict_path's schema — by FIELD NAME, so job 2
-    // neither knows nor cares that job 1's struct also carried
-    // course_over_ground ahead of rate_of_turn (`predict_path.py:34-46`)
-    val feats2 = wire
+    val ranked = chainedJob2(wire)
+    runToTable(s, ranked.toDF(), "s_chained_flagship", OutputMode.Update())
+      // output quantization identical to s8's (floor-not-round rationale
+      // there); rn makes the per-vessel ordering explicit
+      .select($"mmsi", $"rn", $"ts_us", $"speed_over_ground",
+              (floor($"rate_of_turn" * 1000000.0) / 1000000.0)
+                .as("rate_of_turn"),
+              $"longitude", $"latitude",
+              round($"cartesian_x", 2).as("cartesian_x"),
+              round($"cartesian_y", 2).as("cartesian_y"))
+      .orderBy($"mmsi", $"rn")
+  }
+
+  /** Job #2 of the s34 chain (`predict_path.py:21-69`): re-parse job
+    * 1's JSON envelope with predict_path's schema — by FIELD NAME, so
+    * job 2 neither knows nor cares that job 1's struct also carried
+    * course_over_ground ahead of rate_of_turn (`predict_path.py:34-46`)
+    * — and keep the latest 3 positions per vessel in keyed state.
+    * A message whose `timestamp_utc` missed job 1's pattern reaches
+    * the wire with a null timestamp (P8's null-on-miss contract); it is
+    * dropped here, before the typed `Feat` view, whose primitive
+    * `ts_us` cannot hold a null, and a position with no time cannot be
+    * ranked among a vessel's latest anyway. */
+  private[graft] def chainedJob2(wire: DataFrame): Dataset[StatefulOps.RankedFeat] = {
+    import wire.sparkSession.implicits._
+    import StatefulOps._
+    wire
       .selectExpr("CAST(value AS STRING) AS value")
       .select(from_json($"value", AisPipeline.featureSchema).as("message"))
       .select($"message.mmsi".as("mmsi"),
@@ -646,21 +671,11 @@ object StreamingOps extends QueryModule {
               $"message.latitude".as("latitude"),
               $"message.cartesian_x".as("cartesian_x"),
               $"message.cartesian_y".as("cartesian_y"))
+      .where($"ts_us".isNotNull)
       .as[Feat]
-    val ranked = feats2
       .groupByKey(_.mmsi)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         last3FeatPerKey _)
-    runToTable(s, ranked.toDF(), "s_chained_flagship", OutputMode.Update())
-      // output quantization identical to s8's (floor-not-round rationale
-      // there); rn makes the per-vessel ordering explicit
-      .select($"mmsi", $"rn", $"ts_us", $"speed_over_ground",
-              (floor($"rate_of_turn" * 1000000.0) / 1000000.0)
-                .as("rate_of_turn"),
-              $"longitude", $"latitude",
-              round($"cartesian_x", 2).as("cartesian_x"),
-              round($"cartesian_y", 2).as("cartesian_y"))
-      .orderBy($"mmsi", $"rn")
   }
 
   /** s35: the s34 chain's CHECKPOINT read back through Spark 4's

@@ -596,7 +596,6 @@ class StatefulOpsSpec extends SparkSpec {
     // under the new arrival only if the ≤3-row ring survived the
     // checkpoint THROUGH the whole chain: parse, filter, envelope
     // round-trip, and the flatMapGroupsWithState store together.
-    import org.apache.spark.sql.functions.{col, from_json, unix_micros}
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("chain_restart_src").toString
@@ -615,23 +614,8 @@ class StatefulOpsSpec extends SparkSpec {
         .parquet(srcDir)
       // job 1 → wire → job 2, exactly the s34 plan
       val features = graft.streaming.AisPipeline.preprocess(raw)
-      val wire = features.select(graft.streaming.AisPipeline.toJsonEnvelope(features))
-      val feats2 = wire.selectExpr("CAST(value AS STRING) AS value")
-        .select(from_json(col("value"),
-          graft.streaming.AisPipeline.featureSchema).as("message"))
-        .select(col("message.mmsi").as("mmsi"),
-                unix_micros(col("message.timestamp_utc")).as("ts_us"),
-                col("message.speed_over_ground").as("speed_over_ground"),
-                col("message.course_over_ground").as("course_over_ground"),
-                col("message.rate_of_turn").as("rate_of_turn"),
-                col("message.longitude").as("longitude"),
-                col("message.latitude").as("latitude"),
-                col("message.cartesian_x").as("cartesian_x"),
-                col("message.cartesian_y").as("cartesian_y"))
-        .as[Feat]
-      val ranked = feats2.groupByKey(_.mmsi)
-        .flatMapGroupsWithState(OutputMode.Update,
-          GroupStateTimeout.NoTimeout)(last3FeatPerKey _)
+      val ranked = graft.streaming.StreamingOps.chainedJob2(
+        features.select(graft.streaming.AisPipeline.toJsonEnvelope(features)))
       val q = ranked.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
@@ -1008,7 +992,6 @@ class StatefulOpsSpec extends SparkSpec {
     // from_json input) over a genuine MULTI-batch MemoryStream — the
     // cross-batch state path the AvailableNow oracle run can't reach.
     import graft.streaming.AisPipeline
-    import org.apache.spark.sql.functions._
     implicit val ctx = spark.sqlContext
     def msg(tsS: String, mmsi: Int, lon: Double, lat: Double, sog: Double) =
       s"""{"timestamp_utc":"2021-04-05 $tsS""" + "Z\"," +
@@ -1017,20 +1000,8 @@ class StatefulOpsSpec extends SparkSpec {
       s""""rate_of_turn":2.0,"message_type":1}"""
     val input = MemoryStream[String]
     val features = AisPipeline.preprocess(input.toDF())
-    val feats2 = features.select(AisPipeline.toJsonEnvelope(features))
-      .selectExpr("CAST(value AS STRING) AS value")
-      .select(from_json($"value", AisPipeline.featureSchema).as("m"))
-      .select($"m.mmsi".as("mmsi"), unix_micros($"m.timestamp_utc").as("ts_us"),
-              $"m.speed_over_ground".as("speed_over_ground"),
-              $"m.course_over_ground".as("course_over_ground"),
-              $"m.rate_of_turn".as("rate_of_turn"),
-              $"m.longitude".as("longitude"), $"m.latitude".as("latitude"),
-              $"m.cartesian_x".as("cartesian_x"),
-              $"m.cartesian_y".as("cartesian_y"))
-      .as[Feat]
-    val ranked = feats2.groupByKey(_.mmsi)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        last3FeatPerKey _)
+    val ranked = graft.streaming.StreamingOps.chainedJob2(
+      features.select(AisPipeline.toJsonEnvelope(features)))
     val q = ranked.toDF().writeStream.format("memory").queryName("t_s34")
       .outputMode("update").start()
     try {
@@ -1050,6 +1021,95 @@ class StatefulOpsSpec extends SparkSpec {
       // derived features survived the JSON hop bit-exactly
       assert(top.head.rate_of_turn == (2.0 / 4.733) * (2.0 / 4.733))
     } finally q.stop()
+  }
+
+  test("s34 job 2 drops a message whose timestamp_utc missed the pattern") {
+    // P8 maps a pattern miss to a null timestamp (try_to_timestamp), and
+    // job 1 keeps that row; job 2 must drop it before the typed Feat
+    // view (primitive ts_us) instead of failing the whole batch with
+    // NOT_NULL_ASSERT_VIOLATION
+    import graft.streaming.AisPipeline
+    implicit val ctx = spark.sqlContext
+    def msg(ts: String, mmsi: Int, sog: Double) =
+      s"""{"timestamp_utc":"$ts","mmsi":$mmsi,"position":"POINT (110.5 10.25)",""" +
+      s""""speed_over_ground":$sog,"course_over_ground":100.0,""" +
+      s""""rate_of_turn":2.0,"message_type":1}"""
+    val bad = msg("05/04/2021 10:00:01", 7, 2.0)
+    // the bad row really does reach the wire with a null timestamp
+    assert(AisPipeline.preprocess(Seq(bad).toDF("value"))
+      .where($"timestamp_utc".isNull).count() == 1)
+    val input = MemoryStream[String]
+    val features = AisPipeline.preprocess(input.toDF())
+    val ranked = graft.streaming.StreamingOps.chainedJob2(
+      features.select(AisPipeline.toJsonEnvelope(features)))
+    val q = ranked.toDF().writeStream.format("memory").queryName("t_s34_bad_ts")
+      .outputMode("update").start()
+    try {
+      input.addData(msg("2021-04-05 10:00:00Z", 7, 1.0), bad,
+                    msg("2021-04-05 10:00:02Z", 8, 3.0))
+      q.processAllAvailable() // rethrows if the batch failed
+      val rows = spark.table("t_s34_bad_ts").as[RankedFeat].collect()
+      assert(rows.map(r => (r.mmsi, r.rn, r.speed_over_ground)).toSet ==
+        Set((7, 1, 1.0), (8, 1, 3.0)))
+    } finally q.stop()
+  }
+
+  /** Run a registry entry at sf0.001; return its output rows (sorted
+    * strings) and the state partition dirs its stream checkpointed. */
+  private def runEntry(name: String): (Seq[String], Int) = {
+    val rows = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
+      .collect().map(_.toString).toSeq.sorted
+    val parts = Option(new java.io.File(
+        graft.streaming.StreamingOps.lastCheckpointDir, "state/0").listFiles)
+      .toSeq.flatten.count(f => f.isDirectory && f.getName.forall(_.isDigit))
+    (rows, parts)
+  }
+
+  private def withStatePartitionConf[T](v: String)(f: => T): T = {
+    val prev = spark.conf.getOption("spark.graft.statePartitions")
+    spark.conf.set("spark.graft.statePartitions", v)
+    try f finally prev match {
+      case Some(p) => spark.conf.set("spark.graft.statePartitions", p)
+      case None => spark.conf.unset("spark.graft.statePartitions")
+    }
+  }
+
+  test("state partitions default to min(16, defaultParallelism)") {
+    val cores = spark.sparkContext.defaultParallelism
+    val shufflePrev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(runEntry("s2_stream_last3")._2 == math.min(16, cores))
+    // keyDomain caps the count: s5's state holds the 5 event types
+    assert(runEntry("s5_stream_complete")._2 == math.min(math.min(16, cores), 5))
+    withStatePartitionConf("16") {
+      assert(runEntry("s5_stream_complete")._2 == 5)
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
+  }
+
+  test("spark.graft.statePartitions overrides the default and is restored") {
+    val shufflePrev = spark.conf.get("spark.sql.shuffle.partitions")
+    val knobPrev = spark.conf.getOption("spark.graft.statePartitions")
+    val (atDefault, _) = runEntry("s2_stream_last3")
+    val (atTwo, parts) = withStatePartitionConf("2") { runEntry("s2_stream_last3") }
+    assert(parts == 2)
+    assert(spark.conf.getOption("spark.graft.statePartitions") == knobPrev)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
+    // the output does not depend on the partition count
+    def md5(rows: Seq[String]) = java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8")).toSeq
+    assert(atDefault.nonEmpty)
+    assert(md5(atTwo) == md5(atDefault))
+  }
+
+  test("a malformed spark.graft.statePartitions fails with its value") {
+    val e = intercept[IllegalArgumentException] {
+      withStatePartitionConf("four") { runEntry("s2_stream_last3") }
+    }
+    assert(e.getMessage.contains("must be a positive int, got 'four'"))
+    val z = intercept[IllegalArgumentException] {
+      withStatePartitionConf("0") { runEntry("s2_stream_last3") }
+    }
+    assert(z.getMessage.contains("must be positive, got 0"))
   }
 
   test("featDescOrdering: second-granularity ts ties break on lon/lat/sog/cog desc") {
