@@ -1,45 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** One-off decade-scale audits (round-7 VERDICT items #4/#5), kept as a
-  * main so the measurements are reproducible, not archaeology:
-  *
-  *   runMain graft.Audit minhash <sfDir>   — stage-level wall breakdown
-  *     of dd_minhash_lsh (shingle scan vs digest/minhash vs band join vs
-  *     verify); pair with SPARK_GRAFT_PROFILE=1 (the tap lives in
-  *     DedupOps.minhashLsh so it prices the REAL persisted plan).
+/** Decade-scale audit of the ed≤2 fuzzy join's blocking relation
+  * (round-7 VERDICT item #5), kept as a main so the measurement is
+  * reproducible, not archaeology:
   *
   *   runMain graft.Audit j9skew <sfDir>    — variant-hash key
-  *     distribution of the ed≤2 fuzzy join's blocking relation: bucket
-  *     size histogram + the candidate-pair mass each bucket size
-  *     contributes (sum over buckets of C(sz,2)). A heavy key would
-  *     show as top-bucket >> p99; near-singleton buckets mean the
-  *     equi-join has no skew to fix.
+  *     distribution: bucket size histogram + the candidate-pair mass
+  *     each bucket size contributes (sum over buckets of C(sz,2)). A
+  *     heavy key would show as top-bucket >> p99; near-singleton
+  *     buckets mean the equi-join has no skew to fix.
   */
 object Audit {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
-    val cmd = args.headOption.getOrElse("minhash")
+    val cmd = args.headOption.getOrElse("j9skew")
     val sfDir = args.lift(1).getOrElse("/tmp/graft_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Tbl.sparkLocalDir)
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     cmd match {
-      case "minhash" =>
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries("dd_minhash_lsh")(spark, sfDir).count()
-        System.err.println(
-          f"[profile] minhash TOTAL    ${(System.nanoTime() - t0) / 1e9}%7.1fs rows=$n")
-
       case "j9skew" =>
         // the ed≤2 blocking relation, via the SAME builder the query
         // runs (FuzzyJoinOps.deletionKeyed) — the audit measures the

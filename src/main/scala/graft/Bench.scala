@@ -1,5 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+/** The one timing main: `runMain graft.Bench` times every registry
+  * entry; `runMain graft.Bench q1 q2 …` times only the named ones, with
+  * the same runs, materialization and per-query fields, so a filtered
+  * number and a full-run number are one measurement. Data directory:
+  * `SPARK_GRAFT_SF_DIR`; extra session confs: `SPARK_GRAFT_CONF`. */
 object Bench {
   /** Full materialization via the noop DSv2 sink — every output column
     * is computed and every operator executes, unlike `.count()`, which
@@ -13,19 +18,58 @@ object Bench {
     * bench lines used count(), so agg-final entries there UNDER-state
     * true materialization cost — cross-ROUND deltas stay comparable
     * (same harness both sides), cross-HARNESS ones don't (SURVEY §13). */
-  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
+
+  /** Drops what a query leaves in the session: cached plans and the
+    * memory-sink tables streaming queries write, so driver heap doesn't
+    * degrade later queries. */
+  private[graft] def reset(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
+  }
+
+  /** The entries a run times: the whole registry, or the named entries
+    * in the order given. An unknown name fails before any timing. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query ${unknown.mkString(", ")}; valid names: " +
+      all.keys.toSeq.sorted.mkString(" "))
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
+  /** JSON string literal: quotes, backslashes and ALL control chars
+    * (<0x20) escaped — a tab or CR in oracle SQL or an
+    * env-provided value would otherwise corrupt the artifact. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Provenance round: one past the highest CORRECTNESS_rNN.json in
+    * the working directory (those are written at round end, so during
+    * round N the highest on disk is N-1). */
+  private[graft] def round: Int =
+    Option(new java.io.File(".").listFiles()).toSeq.flatten
+      .flatMap(f => "CORRECTNESS_r(\\d+)\\.json".r
+        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
+      .maxOption.map(_ + 1).getOrElse(0)
 
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
+    val selected = select(args.toSeq)
+    val filtered = args.nonEmpty
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Tbl.sparkLocalDir)
-      .getOrCreate()
+    val cpus = Session.cpus
+    val conf = Session.envConf
+    val spark = Session.local(cpus, conf)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on
     // whichever query the Map happens to order first. The streaming
@@ -35,8 +79,7 @@ object Bench {
     try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => }
     try {
       materialize(SparkEntry.queries("s5_stream_complete")(spark, "/root/testdata/sf0.001"))
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
+      reset(spark)
     } catch { case _: Throwable => }
     // host-contention self-adjudication (round-10 verdict item #3):
     // every round since r2 some entries inflate 2-30x under external
@@ -61,7 +104,7 @@ object Bench {
     // A query that throws is a FAILURE, not a fast query: its status is
     // "err:<class>" and it is left out of every timing map and the
     // total. Only NonFatal is caught — a VM error must crash the bench.
-    val attempted = SparkEntry.queries.map { case (name, fn) =>
+    val attempted = selected.map { case (name, fn) =>
       val runs = (1 to 2).map { _ =>
         val l0 = loadAvg
         val c0 = CpuMeter.snap()
@@ -73,10 +116,7 @@ object Bench {
             Some(s"err:${e.getClass.getSimpleName}") }
         val t = (System.nanoTime() - t0) / 1e9
         val cd = CpuMeter.delta(c0, CpuMeter.snap())
-        // streaming queries leave memory-sink tables behind; drop them
-        // so driver heap doesn't degrade later queries
-        spark.catalog.clearCache()
-        spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
+        reset(spark)
         (t, l0, cd, err)
       }
       // keep the load/CPU deltas sampled around the run that won the
@@ -88,46 +128,41 @@ object Bench {
       .mkString("{", ",", "}")
     val results = attempted.collect { case (k, ("ok", r)) => k -> r }
     val failed = attempted.size - results.size
-    val qs = results.map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def resMap(f: ((Double, Double, CpuMeter.Delta)) => String) =
+      results.map { case (k, r) => s"\"" + k + "\":" + f(r) }.mkString("{", ",", "}")
+    val qs = resMap(_._1.toString)
     // sibling maps, same keys as "queries": 1-min loadavg when the
     // reported run started, and the run's interference CPU-second
     // deltas (existing consumers of "queries" unaffected)
-    val loads = results.map { case (k, (_, l, _)) =>
-      s"\"" + k + "\":" + f"$l%.2f" }.mkString("{", ",", "}")
-    def cdMap(f: CpuMeter.Delta => Double) = results.map { case (k, (_, _, cd)) =>
-      s"\"" + k + "\":" + f"${f(cd)}%.1f" }.mkString("{", ",", "}")
-    val steals = cdMap(_.stealS)
-    val iowaits = cdMap(_.iowaitS)
-    val others = cdMap(_.otherS)
-    val gcs = cdMap(_.gcS)
+    val loads = resMap(r => f"${r._2}%.2f")
+    def cdMap(f: CpuMeter.Delta => Double) = resMap(r => f"${f(r._3)}%.1f")
     val loadEnd = loadAvg
-    val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
+    val total = results.map(_._2._1).sum
     // −1 when EVERY per-query delta is the −1 unavailable sentinel
     // (round-13 ADVICE: a 0.0 sum on a meterless platform was
     // indistinguishable from a genuinely interference-free run)
     def sumOrUnavailable(f: CpuMeter.Delta => Double): Double = {
-      val vs = results.values.map(v => f(v._3)).toSeq
+      val vs = results.map(r => f(r._2._3))
       if (vs.nonEmpty && vs.forall(_ < 0)) -1.0 else vs.filter(_ >= 0).sum
     }
-    val sumOther = sumOrUnavailable(_.otherS)
-    val sumSteal = sumOrUnavailable(_.stealS)
     // provenance on every JSONL line (round-5 VERDICT item #8): the
     // driver's stdout harvester truncates, so cross-round per-query
     // diffs read this file — each line must say WHICH round/commit it
-    // measured. Round = the driver's correctness file counter + 1
-    // (CORRECTNESS_rNN.json are written at round end, so during round
-    // N the highest on disk is N-1); sha = current HEAD.
-    val round = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .flatMap(f => "CORRECTNESS_r(\\d+)\\.json".r
-        .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-      .maxOption.map(_ + 1).getOrElse(0)
+    // measured, and under which extra confs.
+    val round = this.round
     val sha = try {
       val p = new ProcessBuilder("git", "rev-parse", "--short", "HEAD").start()
       val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
       if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
     } catch { case scala.util.control.NonFatal(_) => "unknown" }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"status":$statuses,"failed":$failed,"load":$loads,"steal_cpu_s":$steals,"iowait_cpu_s":$iowaits,"other_cpu_s":$others,"gc_cpu_s":$gcs,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"}"""
+    // a filtered run says which entries it timed; only a full run
+    // writes (and names) the per-round full dump
+    val filter =
+      if (filtered) selected.map(e => jstr(e._1)).mkString(",\"filter\":[", ",", "]")
+      else ""
+    val confStr = jstr(Session.show(conf))
+    val provenance = s""""ncpu":$ncpu,"cpus":$cpus,"conf":$confStr,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha"$filter"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"status":$statuses,"failed":$failed,"load":$loads,"steal_cpu_s":${cdMap(_.stealS)},"iowait_cpu_s":${cdMap(_.iowaitS)},"other_cpu_s":${cdMap(_.otherS)},"gc_cpu_s":${cdMap(_.gcS)},"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},$provenance}"""
     // stdout carries a COMPACT line only (total + the 12 slowest
     // queries): the driver's stdout harvester keeps a bounded tail of
     // the sbt output, and the full 154-query line (~7 KB) has started
@@ -145,9 +180,10 @@ object Bench {
     // "top_queries", NOT "queries": the subset must not wear the full
     // map's key — an unaware cross-round consumer would silently narrow
     // from 154 to 12 entries instead of failing loudly (round-8 ADVICE)
-    val topQs = results.toSeq.sortBy(-_._2._1).take(12)
+    val topQs = results.sortBy(-_._2._1).take(12)
       .map { case (k, (v, _, _)) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"n_queries":${attempted.size},"failed":$failed,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"$sumOther%.1f"},"steal_cpu_s_sum":${f"$sumSteal%.1f"},"ncpu":$ncpu,"cpus":$cpus,"sf":"$sfDir","runs_per_query":2,"stat":"min","round":$round,"sha":"$sha","full":"$fullName"}""")
+    val full = if (filtered) "" else s""","full":"$fullName""""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","top_queries":$topQs,"n_queries":${attempted.size},"failed":$failed,"load_start":${f"$loadStart%.2f"},"load_end":${f"$loadEnd%.2f"},"other_cpu_s_sum":${f"${sumOrUnavailable(_.otherS)}%.1f"},"steal_cpu_s_sum":${f"${sumOrUnavailable(_.stealS)}%.1f"},$provenance$full}""")
     // ALSO land the line in a file: the driver's stdout harvester has
     // truncated the sbt tail before (BENCH_r04 kept 63/135 timings), and
     // per-query history is the regression signal — it must survive
@@ -169,11 +205,12 @@ object Bench {
     // rounds running, so the FULL timing map is also written to a file
     // named for the round — one line, overwritten on re-runs within the
     // round, so the driver ships all timings without depending on stdout
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get(fullName),
-      (line + "\n").getBytes("UTF-8"))
-    catch { case e if scala.util.control.NonFatal(e) =>
-      System.err.println(s"bench full-file write failed: $e") }
+    if (!filtered)
+      try java.nio.file.Files.write(
+        java.nio.file.Paths.get(fullName),
+        (line + "\n").getBytes("UTF-8"))
+      catch { case e if scala.util.control.NonFatal(e) =>
+        System.err.println(s"bench full-file write failed: $e") }
     spark.stop()
   }
 }

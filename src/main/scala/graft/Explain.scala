@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit aid: print the formatted executed plan of registered
   * queries without running them to completion.
@@ -12,11 +11,7 @@ object Explain {
     // Bench/Verify shell must not change those runs' plans (r15 ADVICE)
     if (sys.env.contains("SPARK_GRAFT_UNROLL_PLANS"))
       System.setProperty("graft.unrollPlans", "1")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", Tbl.sparkLocalDir)
-      .getOrCreate()
+    val spark = Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val (names, dir) =
       if (args.length > 1 && new java.io.File(args.last).isDirectory)

@@ -45,13 +45,9 @@ object KryoProbe {
   }
 
   private def evict(): Unit = {
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.storage.StorageLevel
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("kryo-evict-probe")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // Session.local runs no JvmOpens check, so the crash stays reachable
+    val spark = Session.local(2)
     val sc = spark.sparkContext
     sc.setLogLevel(sys.env.getOrElse("KRYO_PROBE_LOG", "WARN"))
     // Array[Byte] rows, NOT strings: SizeEstimator prices byte arrays

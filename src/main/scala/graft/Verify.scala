@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names (fast local iteration)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // streaming embodiments land in a memory sink before the parquet
-      // dump; at sf10 (10M events) a windowed agg's sink rows exceed the
-      // 1g default. Single-JVM local mode: "driver results" and executor
-      // memory are the same heap, so the cap is pure ceremony here — a
-      // cluster deployment sinks to files/kafka, never collect
-      .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Tbl.sparkLocalDir)
-      .getOrCreate()
+    val spark = Session.local()
     // INFO shows BlockManager eviction decisions (the small-heap stress
     // repro of the round-13 gate crash reads block ids from it)
     spark.sparkContext.setLogLevel(
@@ -37,24 +23,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // drop memory-sink tables left by streaming queries
-      spark.catalog.clearCache()
-      spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
+      Bench.reset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -916,7 +916,7 @@ object AnalyticsOps extends QueryModule {
     // (returnflag × linestatus) grid (≤6 rows — sums/min/max re-fold
     // associatively), cut lineage with localCheckpoint so the two
     // derivations below don't re-execute the 10.8 GB-at-sf100p scan.
-    // The checkpoint runs at CONSTRUCTION time; Bench/TimeOne time the
+    // The checkpoint runs at CONSTRUCTION time; Bench times the
     // builder call itself, so published walls include this scan (see
     // the fuller timing/reentrancy note on sqlUdf below).
     val base = Tbl.lineitem(s, d)
@@ -1024,8 +1024,8 @@ object AnalyticsOps extends QueryModule {
     // Timing + reentrancy contract (round-11 ADVICE): the grid below is
     // built EAGERLY (localCheckpoint) at DataFrame-construction time, so
     // the events scan runs when this builder is called, not when the
-    // returned plan executes. Bench/TimeOne evaluate the builder INSIDE
-    // their timed region (`materialize(fn(spark, dir))` — argument
+    // returned plan executes. Bench evaluates the builder INSIDE
+    // its timed region (`materialize(fn(spark, dir))` — argument
     // evaluation is timed), so published walls DO include the scan;
     // only a consumer that times `.collect()` on a pre-built DataFrame
     // would under-state it. The session-level temp names (ev_sqludf,

@@ -139,21 +139,6 @@ object DedupOps extends QueryModule {
             $"l.doc_id" < $"r.doc_id")
       .select($"l.doc_id".as("a"), $"r.doc_id".as("b"))
       .distinct()
-    // stage-level wall attribution for the decade audits (Audit.scala):
-    // docs/sigs are persisted, so each count prices exactly one stage —
-    // shingle scan, digest+minhash, band explode, band join+distinct
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      def t(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        System.err.println(
-          f"[profile] minhash $label%-8s ${(System.nanoTime() - t0) / 1e9}%7.1fs rows=$n")
-      }
-      t("shingles") { docs.count() }
-      t("sigs") { sigs.count() }
-      t("bands") { bands.count() }
-      t("pairs") { pairs.count() }
-    }
     val withSets = pairs
       .join(docs.select($"doc_id".as("a"), $"sh".as("sha")), "a")
       .join(docs.select($"doc_id".as("b"), $"sh".as("shb")), "b")

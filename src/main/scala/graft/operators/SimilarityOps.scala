@@ -430,89 +430,42 @@ object SimilarityOps extends QueryModule {
     * reaches 0.6) it is ≈31%, which the single 8-plane table of round 2
     * put at ≈1.6%. The threshold is a corpus property, not an engine
     * parameter; the banded structure is what ships to 100 TB. */
-  private val NeardupBroadcastCeiling = 4000000L // ~1 GB of 256 B embeddings
-
   private def embeddingNeardup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val emb = Tbl.embeddings(s, d)
-    val n = embCount(s, d)
-    val rows = neardupRows(n)
+    val rows = neardupRows(embCount(s, d))
     val planes = constVectors(s, d, NeardupBands * rows)
-    // SPARK_GRAFT_EMB_NEARDUP ∈ {auto, broadcast, fused}; auto = fused.
-    // The broadcast variant is retained knob-only for comparison runs —
-    // round-10 measurements had fused FASTER at every decade (sf0.1
-    // 0.8 vs 1.1 s, sf10p 2.4 vs 4.2 s, sf100p 19 vs 175 s warm): the
-    // broadcast path probes 83M+ candidate pairs against two ~550 MB
-    // hashed relations (random access), where fused streams sorted
-    // runs — and above the 4M-vector ceiling broadcast can't run at
-    // all. System property first (in-process spec override), env next.
-    val fused = sys.props.get("graft.emb.neardup")
-        .orElse(sys.env.get("SPARK_GRAFT_EMB_NEARDUP")).getOrElse("auto") match {
-      case "broadcast" => false
-      case _           => true
-    }
-    if (!fused) {
-      require(n <= NeardupBroadcastCeiling,
-        s"broadcast re-attach needs the corpus driver-resident: $n vectors " +
-        s"> $NeardupBroadcastCeiling ceiling — use the fused (default) path")
-      // narrow signature relation (vec_id, band, bkt): the 8× explode
-      // carries 3 longs per row, never the 64-float embedding; persisted —
-      // both sides of the candidate self-join read it, and the 8r dot
-      // products per row are the expensive part of this plan
-      val sig = emb
-        .select($"vec_id",
-                posexplode(bandSignatures(planes, rows)).as(Seq("band", "bkt")))
-        .persist()
-      val cand = sig.as("l")
-        .join(sig.as("r"),
-              $"l.band" === $"r.band" && $"l.bkt" === $"r.bkt" &&
-              $"l.vec_id" < $"r.vec_id")
-        .select($"l.vec_id".as("a"), $"r.vec_id".as("b"))
-        .distinct()
-      // Re-attach embeddings via ONE canonically-named broadcast relation
-      // aliased per side — identical subtrees, so ReuseExchange builds the
-      // ~n·256 B broadcast ONCE instead of twice (the round-9 shape
-      // broadcast two differently-aliased projections: 2× resident on the
-      // driver and every executor, a tight fit at the ceiling). The only
-      // wide exchange stays 16-byte id pairs.
-      val e = broadcast(emb.select($"vec_id", $"embedding"))
-      cand
-        .join(e.as("ea"), $"a" === $"ea.vec_id")
-        .join(e.as("eb"), $"b" === $"eb.vec_id")
-        .select($"a", $"b",
-                cos6(dot($"ea.embedding", $"eb.embedding")).as("cosine"))
-        .where($"cosine" >= NeardupMinCosine)
-        .orderBy($"a", $"b")
-    } else {
-      // DEFAULT: fuse verify into the bucket self-join — the embedding
-      // rides the SIGNATURE exchange (NeardupBands rows/vector ×
-      // ~280 B ≈ 2.2 KB/vector, linear by construction) and the cosine
-      // is computed where the collision is found, so no exchange ever
-      // carries a per-PAIR payload. The round-9 sf100p fallback attached
-      // embeddings to candidate pairs instead: at occupancy-bound
-      // ~83 pairs/vector × 272 B ≈ 22 KB/vector through the second
-      // join's exchange — the >80 GB spill that killed the run. 10× less
-      // exchange mass here, and per-vector cost is a constant (2.2 KB)
-      // at ANY corpus size: 10⁹ vectors → 2.2 TB shuffled ≈ 2.2 GB/
-      // executor on a 1000-executor fleet.
-      // Price: a pair colliding in m>1 bands folds its dot product m
-      // times (≤8, 64 FLOPs each) before the distinct — compute noise
-      // next to the exchange it removes. Filter-then-distinct keeps the
-      // distinct's input at verified pairs only; same final set as
-      // distinct-then-verify because cos6 is deterministic per pair.
-      val sigE = emb
-        .select($"vec_id", $"embedding",
-                posexplode(bandSignatures(planes, rows)).as(Seq("band", "bkt")))
-      sigE.as("l")
-        .join(sigE.as("r"),
-              $"l.band" === $"r.band" && $"l.bkt" === $"r.bkt" &&
-              $"l.vec_id" < $"r.vec_id")
-        .select($"l.vec_id".as("a"), $"r.vec_id".as("b"),
-                cos6(dot($"l.embedding", $"r.embedding")).as("cosine"))
-        .where($"cosine" >= NeardupMinCosine)
-        .distinct()
-        .orderBy($"a", $"b")
-    }
+    // Verify is fused into the bucket self-join — the embedding
+    // rides the SIGNATURE exchange (NeardupBands rows/vector ×
+    // ~280 B ≈ 2.2 KB/vector, linear by construction) and the cosine
+    // is computed where the collision is found, so no exchange ever
+    // carries a per-PAIR payload. The round-9 sf100p fallback attached
+    // embeddings to candidate pairs instead: at occupancy-bound
+    // ~83 pairs/vector × 272 B ≈ 22 KB/vector through the second
+    // join's exchange — the >80 GB spill that killed the run. 10× less
+    // exchange mass here, and per-vector cost is a constant (2.2 KB)
+    // at ANY corpus size: 10⁹ vectors → 2.2 TB shuffled ≈ 2.2 GB/
+    // executor on a 1000-executor fleet. It also beat re-attaching
+    // embeddings to candidate pairs through a broadcast at every decade
+    // measured in round 10 (sf0.1 0.8 vs 1.1 s, sf10p 2.4 vs 4.2 s,
+    // sf100p 19 vs 175 s warm), and needs no driver-resident corpus.
+    // Price: a pair colliding in m>1 bands folds its dot product m
+    // times (≤8, 64 FLOPs each) before the distinct — compute noise
+    // next to the exchange it removes. Filter-then-distinct keeps the
+    // distinct's input at verified pairs only; same final set as
+    // distinct-then-verify because cos6 is deterministic per pair.
+    val sigE = emb
+      .select($"vec_id", $"embedding",
+              posexplode(bandSignatures(planes, rows)).as(Seq("band", "bkt")))
+    sigE.as("l")
+      .join(sigE.as("r"),
+            $"l.band" === $"r.band" && $"l.bkt" === $"r.bkt" &&
+            $"l.vec_id" < $"r.vec_id")
+      .select($"l.vec_id".as("a"), $"r.vec_id".as("b"),
+              cos6(dot($"l.embedding", $"r.embedding")).as("cosine"))
+      .where($"cosine" >= NeardupMinCosine)
+      .distinct()
+      .orderBy($"a", $"b")
   }
 
   private val embeddingNeardupSql =

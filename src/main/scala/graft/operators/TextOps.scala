@@ -352,7 +352,7 @@ object TextOps extends QueryModule {
     // the corpus), and the token stream is scanned exactly twice
     // (once into the counts agg, once through the broadcast join); a
     // separate 1-row total relation would recompute the counts subtree.
-    // Measured and rejected alternative (sf10p, TimeOne best-of-2):
+    // Measured and rejected alternative (sf10p, per-query best-of-2):
     // reducing the stream once to (doc_id, token, c) and weighting both
     // consumers — 38.7/33.0 s vs this shape's 42.3/32.1 s, a wash warm,
     // because the saved second explode is repaid by a NEW wide exchange

@@ -235,28 +235,6 @@ object StreamingOps extends QueryModule {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-    // profiling tap (SPARK_GRAFT_STREAM_DEBUG=1): per-batch durationMs
-    // breakdown — how much of a stream's wall is planning vs state
-    // commit vs the actual work. Reads recentProgress before stop().
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-      q.recentProgress.foreach { p =>
-        System.err.println(
-          s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}")
-        p.stateOperators.foreach { so =>
-          System.err.println(
-            s"[stream]   state op=${so.operatorName} rows=${so.numRowsTotal} " +
-            s"updated=${so.numRowsUpdated} updMs=${so.allUpdatesTimeMs} " +
-            s"rmMs=${so.allRemovalsTimeMs} commitMs=${so.commitTimeMs}")
-          // provider-internal latency breakdown (RocksDB: flush/checkpoint/
-          // fileSync/changelog...) — nonzero entries only, sorted desc
-          import scala.jdk.CollectionConverters._
-          val hot = so.customMetrics.asScala.filter(_._2 > 0L).toSeq
-            .sortBy(-_._2).take(12)
-          if (hot.nonEmpty) System.err.println(
-            hot.map { case (k, v) => s"$k=$v" }
-              .mkString("[stream]     ", " ", ""))
-        }
-      }
     q.stop()
     // release this run's provider instances (maps/RocksDB handles) now
     // instead of leaving them for the maintenance pass to walk

@@ -6,8 +6,8 @@ import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, Encoder
 import org.apache.avro.util.Utf8
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, DoubleType, LongType, StringType, StructField, StructType}
@@ -105,19 +105,8 @@ object AvroEnvelope {
     ExpressionUtils.column(AvroDecodeEnvelope(ExpressionUtils.expression(bin)))
 
   /** SQL-name registration for sessions not built with GraftExtensions. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(encodeName))) {
-      reg.registerFunction(
-        FunctionIdentifier(encodeName),
-        new ExpressionInfo(classOf[AvroEncodeEnvelope].getName, encodeName),
-        (args: Seq[Expression]) => AvroEncodeEnvelope(args))
-      reg.registerFunction(
-        FunctionIdentifier(decodeName),
-        new ExpressionInfo(classOf[AvroDecodeEnvelope].getName, decodeName),
-        (args: Seq[Expression]) => AvroDecodeEnvelope(args.head))
-    }
-  }
+  def ensureRegistered(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, encodeName, decodeName)
 }
 
 /** (long, long, long, string, double) → Avro-binary envelope. */

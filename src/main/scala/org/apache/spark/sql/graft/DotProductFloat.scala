@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graft
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -75,13 +78,33 @@ object DotProductFloat {
 
   /** SQL-name registration for sessions not built with
     * [[GraftExtensions]] (the driver constructs its own SparkSession). */
-  def ensureRegistered(spark: SparkSession): Unit = {
+  def ensureRegistered(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, name)
+}
+
+/** The engine's native SQL functions, one row each. Both registration
+  * paths read this table: [[GraftExtensions]] injects every row, and
+  * each function object's `ensureRegistered` registers its own rows in
+  * a session built without the extensions. */
+object NativeFunctions {
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn[DotProductFloat](DotProductFloat.name)(a => DotProductFloat(a(0), a(1))),
+    fn[DotProductInt](DotProductInt.name)(a => DotProductInt(a(0), a(1))),
+    fn[AvroEncodeEnvelope](AvroEnvelope.encodeName)(AvroEncodeEnvelope(_)),
+    fn[AvroDecodeEnvelope](AvroEnvelope.decodeName)(a => AvroDecodeEnvelope(a.head)),
+    fn[ProtoEncodeEnvelope](ProtoEnvelope.encodeName)(ProtoEncodeEnvelope(_)),
+    fn[ProtoDecodeEnvelope](ProtoEnvelope.decodeName)(a => ProtoDecodeEnvelope(a.head)))
+
+  private def fn[T: ClassTag](name: String)(build: FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo(classTag[T].runtimeClass.getName, name), build)
+
+  /** Registers the named rows in `spark`'s function registry; a name
+    * already registered is left as it is. */
+  def register(spark: SparkSession, names: String*): Unit = {
     val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name))) {
-      reg.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[DotProductFloat].getName, name),
-        (args: Seq[Expression]) => DotProductFloat(args(0), args(1)))
+    all.foreach { case (id, info, build) =>
+      if (names.contains(id.funcName) && !reg.functionExists(id))
+        reg.registerFunction(id, info, build)
     }
   }
 }
@@ -100,29 +123,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // in TopKPerKeyStrategy instead, which matches WindowGroupLimit on
     // the fully optimized plan (pinned by PlanSpec's extensions-path test).
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    ext.injectFunction((
-      FunctionIdentifier(DotProductFloat.name),
-      new ExpressionInfo(classOf[DotProductFloat].getName, DotProductFloat.name),
-      (args: Seq[Expression]) => DotProductFloat(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(DotProductInt.name),
-      new ExpressionInfo(classOf[DotProductInt].getName, DotProductInt.name),
-      (args: Seq[Expression]) => DotProductInt(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(AvroEnvelope.encodeName),
-      new ExpressionInfo(classOf[AvroEncodeEnvelope].getName, AvroEnvelope.encodeName),
-      (args: Seq[Expression]) => AvroEncodeEnvelope(args)))
-    ext.injectFunction((
-      FunctionIdentifier(AvroEnvelope.decodeName),
-      new ExpressionInfo(classOf[AvroDecodeEnvelope].getName, AvroEnvelope.decodeName),
-      (args: Seq[Expression]) => AvroDecodeEnvelope(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier(ProtoEnvelope.encodeName),
-      new ExpressionInfo(classOf[ProtoEncodeEnvelope].getName, ProtoEnvelope.encodeName),
-      (args: Seq[Expression]) => ProtoEncodeEnvelope(args)))
-    ext.injectFunction((
-      FunctionIdentifier(ProtoEnvelope.decodeName),
-      new ExpressionInfo(classOf[ProtoDecodeEnvelope].getName, ProtoEnvelope.decodeName),
-      (args: Seq[Expression]) => ProtoDecodeEnvelope(args.head)))
+    NativeFunctions.all.foreach(ext.injectFunction)
   }
 }

@@ -1,8 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -71,13 +70,6 @@ object DotProductInt {
 
   /** SQL-name registration for sessions not built with
     * [[GraftExtensions]]. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(name))) {
-      reg.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(classOf[DotProductInt].getName, name),
-        (args: Seq[Expression]) => DotProductInt(args(0), args(1)))
-    }
-  }
+  def ensureRegistered(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, name)
 }

@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeBlock, ExprCode}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, BinaryType, DataType, DoubleType, LongType, StringType, StructField, StructType}
@@ -132,19 +132,8 @@ object ProtoEnvelope {
   def fromProtoEnvelope(bin: Column): Column =
     ExpressionUtils.column(ProtoDecodeEnvelope(ExpressionUtils.expression(bin)))
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier(encodeName))) {
-      reg.registerFunction(
-        FunctionIdentifier(encodeName),
-        new ExpressionInfo(classOf[ProtoEncodeEnvelope].getName, encodeName),
-        (args: Seq[Expression]) => ProtoEncodeEnvelope(args))
-      reg.registerFunction(
-        FunctionIdentifier(decodeName),
-        new ExpressionInfo(classOf[ProtoDecodeEnvelope].getName, decodeName),
-        (args: Seq[Expression]) => ProtoDecodeEnvelope(args.head))
-    }
-  }
+  def ensureRegistered(spark: SparkSession): Unit =
+    NativeFunctions.register(spark, encodeName, decodeName)
 }
 
 /** (long, long, long, string, double) → proto-wire envelope. */

@@ -145,9 +145,8 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // a ReusedExchange of it), and every exchange ABOVE the verify join
     // carries ids/cosine only — a pair-level payload exchange is the
     // 22 KB/vector spill this path exists to prevent
-    sys.props("graft.emb.neardup") = "fused"
-    try withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-                    "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = executed(SparkEntry.queries("sim_emb_neardup")(spark, d))
       val nested = collectWithSubqueries(p) {
         case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
@@ -166,7 +165,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(reused.nonEmpty,
         s"self-join's second side must reuse the signature exchange:\n$p")
-    } finally sys.props.remove("graft.emb.neardup")
+    }
   }
 
   test("repetition metrics are map-only: per-doc signals never shuffle") {
@@ -809,12 +808,38 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(topk.size == 2,
              s"extensions path did not lower to TopKPerKeyExec:\n$p")
-      // and dot_f arrived through injectFunction, not ensureRegistered
-      assert(ext.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f")))
+      // and every native function arrived through injectFunction, not
+      // ensureRegistered
+      nativeFunctionNames.foreach { name =>
+        assert(ext.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
+          s"$name did not resolve in the extensions session")
+      }
     } finally {
       prevActive.foreach(SparkSession.setActiveSession)
       prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
+  private val nativeFunctionNames = Seq(
+    "dot_f", "dot_i", "avro_envelope", "from_avro_envelope",
+    "proto_envelope", "from_proto_envelope")
+
+  test("every native function resolves after imperative registration") {
+    // a fresh session state: the shared session's registry may already
+    // hold names other specs registered
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    def resolves(name: String) = reg.functionExists(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+    assert(nativeFunctionNames.forall(!resolves(_)),
+           "fresh session already holds a native function")
+    org.apache.spark.sql.graft.DotProductFloat.ensureRegistered(fresh)
+    org.apache.spark.sql.graft.DotProductInt.ensureRegistered(fresh)
+    org.apache.spark.sql.graft.AvroEnvelope.ensureRegistered(fresh)
+    org.apache.spark.sql.graft.ProtoEnvelope.ensureRegistered(fresh)
+    nativeFunctionNames.foreach { name =>
+      assert(resolves(name), s"$name did not resolve after ensureRegistered")
     }
   }
 
