@@ -32,7 +32,15 @@ object ScaleOps extends QueryModule {
     * size it to target-file-size at the deployment's per-partition
     * volume; the default 8 keeps local file counts trivial. */
   private[graft] def writeSalts(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.writeSalts").map(_.toInt).getOrElse(8)
+    s.conf.getOption("spark.graft.writeSalts") match {
+      case None => 8
+      case Some(v) =>
+        // fail with the value, not a NumberFormatException deep in
+        // planning; 0 would be a pmod by zero
+        v.trim.toIntOption.filter(_ > 0).getOrElse(
+          throw new IllegalArgumentException(
+            s"write salt knob must be a positive int, got '$v'"))
+    }
 
   private[graft] def clusterForWrite(df: org.apache.spark.sql.DataFrame,
                                      pcol: String, idCol: String): DataFrame = {

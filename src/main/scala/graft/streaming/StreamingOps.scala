@@ -3,9 +3,9 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.{QueryModule, Tbl}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.1/2.2/2.6/2.7), run to
@@ -94,17 +94,17 @@ object StreamingOps extends QueryModule {
     else raw
   }
 
-  /** Engine streaming posture, applied before every query start.
+  /** Engine streaming posture, applied by [[drain]] before every stream
+    * start.
     *
-    * State-store provider: `RocksDBStateStoreProvider` is the ENGINE
-    * DEFAULT (overridable via `spark.graft.stateStoreProvider`). The
-    * Spark default, HDFSBackedStateStoreProvider, holds every version of
-    * every partition's state in executor heap — a hard ceiling once
-    * state outgrows memory; RocksDB spills to local disk and is the only
-    * provider that survives 100 TB-scale keyed state. Changelog
-    * checkpointing keeps per-batch commits delta-sized (full .zip
-    * snapshot uploads are deferred to the maintenance pass, which
-    * throwaway AvailableNow runs never need). */
+    * State-store provider: `RocksDBStateStoreProvider`. The Spark
+    * default, HDFSBackedStateStoreProvider, holds every version of every
+    * partition's state in executor heap — a hard ceiling once state
+    * outgrows memory; RocksDB spills to local disk, is the only provider
+    * that survives 100 TB-scale keyed state, and is the only one
+    * transformWithState runs on. Changelog checkpointing keeps per-batch
+    * commits delta-sized (full .zip snapshot uploads are deferred to the
+    * maintenance pass, which throwaway AvailableNow runs never need). */
   private[graft] def configureStreaming(s: SparkSession): Unit = {
     // checkpoint checksums add ~1s fixed cost per query on local FS;
     // irrelevant for throwaway AvailableNow checkpoints
@@ -116,8 +116,7 @@ object StreamingOps extends QueryModule {
     // added. Throwaway checkpoints never benefit from snapshots.
     s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      s.conf.getOption("spark.graft.stateStoreProvider").getOrElse(
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // Checkpoint file manager: Spark's default FileContext-based manager
     // constructs a fresh FileContext — a new Hadoop Configuration parse
     // plus (without native-hadoop) a forked `chmod` — PER atomic write.
@@ -129,7 +128,7 @@ object StreamingOps extends QueryModule {
     // 37→10 ms. Rename-based atomic writes are exactly as safe on the
     // local FS this harness checkpoints to (same-volume rename is
     // atomic); a deployment checkpointing to an object store where
-    // FileContext semantics matter overrides via
+    // FileContext semantics matter sets
     // `spark.graft.checkpointFileManager`.
     s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
       s.conf.getOption("spark.graft.checkpointFileManager").getOrElse(
@@ -148,18 +147,15 @@ object StreamingOps extends QueryModule {
     // no-data flush eviction 4.9→1.7 s. The version is frozen into a
     // checkpoint at first start (restarts read the recorded version
     // from the offset log), so this only governs NEW checkpoints.
-    s.conf.set("spark.sql.streaming.join.stateFormatVersion",
-      s.conf.getOption("spark.graft.joinStateFormatVersion").getOrElse("3"))
-    // write-amplification knob: RocksDB row-count tracking costs a read
-    // per put (measured: s1 updMs 3.5→2.2 s with tracking off) but keeps
-    // numRowsTotal observable — ON as the LONG-RUNNING default posture
-    // (a deployment watches state growth through it); the bounded
-    // run-to-completion harness path (runToTable) turns it off per run,
-    // where the metric has no consumer — `spark.graft.rocksdbTrackRows`
-    // overrides both directions
+    s.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
+    // RocksDB row-count tracking costs a read per put (measured: s1
+    // updMs 3.5→2.2 s with tracking off) but keeps numRowsTotal
+    // observable — ON as the LONG-RUNNING posture (a deployment watches
+    // state growth through it); [[drain]] turns it off for bounded runs,
+    // where the metric has no consumer
     s.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      s.conf.getOption("spark.graft.rocksdbTrackRows").getOrElse("true"))
-    // default posture; runToTable re-sets this per query (flushFinal)
+      "true")
+    // default posture; drain re-sets this per stream (flushFinal)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
   }
 
@@ -169,13 +165,54 @@ object StreamingOps extends QueryModule {
   private val sentinelCache =
     scala.collection.concurrent.TrieMap.empty[(Seq[String], Boolean), java.nio.file.Path]
 
-  /** Checkpoint root of the most recent runToTable stream — lets specs
+  /** Checkpoint root of the most recent [[drain]]ed stream — lets specs
     * assert the state store artifacts the engine defaults actually
     * produced (RocksDB changelogs vs heap-provider .delta files). */
   @volatile private[graft] var lastCheckpointDir: String = ""
 
-  /** Run a streaming DF to completion into a memory sink, return the
-    * resulting table. AvailableNow + a fresh checkpoint dir per run.
+  /** Run a streaming DF to completion and return its output table: the
+    * one bounded-stream runner every memory-sink entry goes through
+    * ([[drain]] does the running; this picks the sink and reads it back).
+    *
+    * Sink selection. Memory (default): assertable in-JVM table, zero
+    * I/O — right for specs and small-SF gates.
+    * `SPARK_GRAFT_STREAM_SINK=files`: each micro-batch spills to a
+    * scratch parquet dir via foreachBatch and the result is read back
+    * — this bounds driver RSS
+    * for sf10-class gate runs, where the memory sink's collected rows
+    * (every batch's emissions, held on heap for the JVM's whole lifetime
+    * across a 211-query Verify) were the ceiling that forced round 9's
+    * two-tranche workaround. The foreachBatch writes mirror the memory
+    * sink's mode contract exactly: Append/Update APPEND each batch's
+    * emitted rows; Complete REPLACES the table with the batch.
+    * Downstream batch folds see an identical DataFrame either way (the
+    * s* refold contracts never depend on in-batch row order). */
+  private def runToTable(s: SparkSession, df: DataFrame, name: String,
+                         mode: OutputMode, flushFinal: Boolean = false,
+                         keyDomain: Int = Int.MaxValue): DataFrame =
+    if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("files")) {
+      val sinkDir = Tbl.scratchDir(s"msink_$name")
+      // seed a schema-only file so a stream with zero emitted batches
+      // still reads back as an empty-but-typed relation
+      s.createDataFrame(new java.util.ArrayList[Row](), df.schema)
+        .write.mode("overwrite").parquet(sinkDir)
+      val save = if (mode == OutputMode.Complete()) "overwrite" else "append"
+      val perBatch: (DataFrame, Long) => Unit =
+        (b, _) => b.write.mode(save).parquet(sinkDir)
+      drain(s, df.writeStream.foreachBatch(perBatch).outputMode(mode),
+            name, flushFinal, keyDomain)
+      s.read.parquet(sinkDir)
+    } else {
+      drain(s, df.writeStream.format("memory").queryName(name).outputMode(mode),
+            name, flushFinal, keyDomain)
+      s.table(name)
+    }
+
+  /** Start `writer` under `Trigger.AvailableNow` with a fresh checkpoint
+    * dir (`ckpt_<name>`), wait until it has drained its source, stop it.
+    * The only place this module starts a stream: [[runToTable]] hands it
+    * a memory/files sink, the sink-owning entries (s7, s9, s17, s33)
+    * their own writer.
     *
     * `flushFinal`: whether the bounded run still needs the terminal
     * NO-DATA micro-batch. That batch re-runs the full stateful DAG on
@@ -187,10 +224,24 @@ object StreamingOps extends QueryModule {
     * batches, and the no-data batch is ~1 s of pure state-machinery
     * wall per query — measured on s12: batch0 2.0 s, no-data batch
     * 1.0 s of which addBatch 0.8 s (round-4 VERDICT item #3). At a real
-    * deployment this knob is moot (an unbounded stream never ends);
-    * it prices only the bounded-replay embodiment. */
-  private def runToTable(s: SparkSession, df: DataFrame, name: String,
-                         mode: OutputMode, flushFinal: Boolean = false): DataFrame = {
+    * deployment this choice is moot (an unbounded stream never ends);
+    * it prices only the bounded-replay embodiment.
+    *
+    * `keyDomain`: upper bound on the stream's state key cardinality
+    * when the query itself fixes it (e.g. a complete-mode count over
+    * the 5 event types). More partitions than distinct keys is pure
+    * per-batch instance-machinery tax — each extra store instance pays
+    * open/load/commit every micro-batch and can never hold a row.
+    * Unbounded-key streams pass nothing and get [[statePartitions]].
+    * The stateful operators' partition count is fixed when the stream
+    * starts, so `spark.sql.shuffle.partitions` is set to
+    * `min(statePartitions, keyDomain)` around start…termination only
+    * and restored afterwards: the batch folds over the returned table
+    * run at the session's own width. */
+  private def drain(s: SparkSession, writer: DataStreamWriter[Row], name: String,
+                    flushFinal: Boolean = false,
+                    keyDomain: Int = Int.MaxValue): Unit = {
+    val parts = math.min(statePartitions(s), keyDomain)
     configureStreaming(s)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
                flushFinal.toString)
@@ -198,48 +249,21 @@ object StreamingOps extends QueryModule {
     // to completion and is immediately torn down — skip the
     // read-before-every-put that tracking costs (see configureStreaming)
     s.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      s.conf.getOption("spark.graft.rocksdbTrackRows").getOrElse("false"))
+               "false")
     val ckpt = Tbl.scratchDir(s"ckpt_$name")
     lastCheckpointDir = ckpt
-    // Sink selection. "memory" (default): assertable in-JVM table, zero
-    // I/O — right for specs and small-SF gates. "files": each micro-batch
-    // spills to a scratch parquet dir via foreachBatch and the result is
-    // read back — this bounds driver RSS for sf10-class gate runs, where
-    // the memory sink's collected rows (every batch's emissions, held on
-    // heap for the JVM's whole lifetime across a 211-query Verify) were
-    // the ceiling that forced round 9's two-tranche workaround. The
-    // foreachBatch writes mirror the memory sink's mode contract exactly:
-    // Append/Update APPEND each batch's emitted rows; Complete REPLACES
-    // the table with the batch. Downstream batch folds see an identical
-    // DataFrame either way (the s* refold contracts never depend on
-    // in-batch row order).
-    val spill = s.conf.getOption("spark.graft.streamSink")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_SINK"))
-      .contains("files")
-    val sinkDir = if (spill) Tbl.scratchDir(s"msink_$name") else ""
-    val writer =
-      if (spill) {
-        // seed a schema-only file so a stream with zero emitted batches
-        // still reads back as an empty-but-typed relation
-        s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-            df.schema)
-          .write.mode("overwrite").parquet(sinkDir)
-        val save =
-          if (mode == OutputMode.Complete()) "overwrite" else "append"
-        val perBatch: (DataFrame, Long) => Unit =
-          (b, _) => b.write.mode(save).parquet(sinkDir)
-        df.writeStream.foreachBatch(perBatch)
-      } else df.writeStream.format("memory").queryName(name)
-    val q = writer
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q.stop()
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try {
+      val q = writer
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q.stop()
+    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
     // release this run's provider instances (maps/RocksDB handles) now
     // instead of leaving them for the maintenance pass to walk
     org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-    if (spill) s.read.parquet(sinkDir) else s.table(name)
   }
 
   /** Stateful streams pay a per-(partition × store instance × batch)
@@ -255,12 +279,11 @@ object StreamingOps extends QueryModule {
     * updated and execution time unchanged. The cap of 16 is the
     * 32-core result (16 beat both 8 and 32: past 16 the instance
     * machinery competes with the task threads). Streams whose key count
-    * the query fixes below that pass `keyDomain` (see
-    * [[withStatePartitions]]). `spark.graft.statePartitions` sets the
-    * count outright — for a deployment sizing to executor count × state
-    * volume. NOTE: streaming state partitioning is frozen into the
-    * checkpoint at first start — pick for the target scale, not the
-    * backfill. */
+    * the query fixes below that pass `keyDomain` (see [[drain]]).
+    * `spark.graft.statePartitions` sets the count outright — for a
+    * deployment sizing to executor count × state volume. NOTE: streaming
+    * state partitioning is frozen into the checkpoint at first start —
+    * pick for the target scale, not the backfill. */
   private def statePartitions(s: SparkSession): Int =
     s.conf.getOption("spark.graft.statePartitions") match {
       case None => math.min(16, s.sparkContext.defaultParallelism)
@@ -274,28 +297,11 @@ object StreamingOps extends QueryModule {
         n
     }
 
-  /** `keyDomain`: upper bound on the stream's state key cardinality
-    * when the query itself fixes it (e.g. a complete-mode count over
-    * the 5 event types). More partitions than distinct keys is pure
-    * per-batch instance-machinery tax — each extra store instance
-    * pays open/load/commit every micro-batch and can never hold a
-    * row. Unbounded-key streams pass nothing and get the sized knob. */
-  private def withStatePartitions[T](s: SparkSession,
-                                     keyDomain: Int = Int.MaxValue)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-               math.min(statePartitions(s), keyDomain).toString)
-    try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
   /** A1+A2 streaming: watermarked sliding-window kinematic smoothing in
     * update mode — the ⚠ intent of `preprocess.py:78-88`. Single
     * AvailableNow batch ⇒ the update stream emits every window exactly
     * once, so the batch oracle (same as a1_sliding_window) applies. */
-  private def streamWindowAgg(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamWindowAggInner(s, d) }
-
-  private def streamWindowAggInner(s: SparkSession, d: String): DataFrame = {
+  private def streamWindowAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.operators.WindowOps.{kinematicAggExprs, kinematicFinish, withKinematics}
     val agg = withKinematics(eventStream(s, d))
@@ -307,10 +313,7 @@ object StreamingOps extends QueryModule {
 
   /** T1 rebuilt: flatMapGroupsWithState "latest 3 per vessel". Output
     * matches the batch ranking query a3_top3_per_key exactly. */
-  private def streamLast3(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamLast3Inner(s, d) }
-
-  private def streamLast3Inner(s: SparkSession, d: String): DataFrame = {
+  private def streamLast3(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -326,10 +329,7 @@ object StreamingOps extends QueryModule {
 
   /** A5 streaming: keyed gap-fill interpolation via state; same oracle
     * as the batch twin a5_gap_fill. */
-  private def streamGapFill(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamGapFillInner(s, d) }
-
-  private def streamGapFillInner(s: SparkSession, d: String): DataFrame = {
+  private def streamGapFill(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -344,10 +344,7 @@ object StreamingOps extends QueryModule {
   }
 
   /** J5 streaming: stateful dropDuplicates over the stream. */
-  private def streamDedup(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamDedupInner(s, d) }
-
-  private def streamDedupInner(s: SparkSession, d: String): DataFrame = {
+  private def streamDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dd = eventStream(s, d)
       .select($"user_id", $"event_type")
@@ -365,10 +362,7 @@ object StreamingOps extends QueryModule {
     * stream's lifetime. Output is projected to the dedup key columns —
     * which physical row survives is arrival-order-dependent, the key
     * set is not. */
-  private def streamDedupWm(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamDedupWmInner(s, d) }
-
-  private def streamDedupWmInner(s: SparkSession, d: String): DataFrame = {
+  private def streamDedupWm(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dd = eventStream(s, d)
       .withColumn("v_c", Tbl.cents($"value"))
@@ -384,38 +378,36 @@ object StreamingOps extends QueryModule {
       |  CAST(round(value*100) AS BIGINT) AS v_c
       |FROM events ORDER BY user_id, event_type, v_c""".stripMargin
 
-  /** T4 complete mode: running per-type counts. withStatePartitions:
-    * the key domain IS the 5 event types — 5 keys of state have no
+  /** T4 complete mode: running per-type counts. keyDomain 5: the key
+    * domain IS the 5 event types — 5 keys of state have no
     * business paying more store instances' worth of per-batch
     * load+commit than that. */
-  private def streamCompleteCounts(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s, keyDomain = 5) {
-      import s.implicits._
-      val agg = eventStream(s, d)
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
-      runToTable(s, agg, "s_complete", OutputMode.Complete())
-        .select($"event_type", $"n", round($"v_c" / 100.0, 2).as("sum_value"))
-        .orderBy($"event_type")
-    }
+  private def streamCompleteCounts(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val agg = eventStream(s, d)
+      .groupBy($"event_type")
+      .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
+    runToTable(s, agg, "s_complete", OutputMode.Complete(), keyDomain = 5)
+      .select($"event_type", $"n", round($"v_c" / 100.0, 2).as("sum_value"))
+      .orderBy($"event_type")
+  }
 
   /** Stream-static broadcast join: streaming events enriched with the
     * static customer dim — at 100 TB the dim is broadcast per batch, the
     * stream never shuffles. State = the complete-mode agg over the 5
     * market segments, hence the keyDomain bound. */
-  private def streamStaticJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s, keyDomain = 5) {
-      import s.implicits._
-      val cust = broadcast(Tbl.customer(s, d)
-        .select($"c_custkey", $"c_mktsegment"))
-      val joined = eventStream(s, d)
-        .join(cust, $"user_id" === $"c_custkey")
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
-      runToTable(s, joined, "s_static_join", OutputMode.Complete())
-        .select($"c_mktsegment", $"n", round($"v_c" / 100.0, 2).as("sum_value"))
-        .orderBy($"c_mktsegment")
-    }
+  private def streamStaticJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val cust = broadcast(Tbl.customer(s, d)
+      .select($"c_custkey", $"c_mktsegment"))
+    val joined = eventStream(s, d)
+      .join(cust, $"user_id" === $"c_custkey")
+      .groupBy($"c_mktsegment")
+      .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
+    runToTable(s, joined, "s_static_join", OutputMode.Complete(), keyDomain = 5)
+      .select($"c_mktsegment", $"n", round($"v_c" / 100.0, 2).as("sum_value"))
+      .orderBy($"c_mktsegment")
+  }
 
   /** K5 foreachBatch: per-micro-batch arbitrary batch logic — here the
     * per-batch aggregate is appended to a parquet dir (the reference
@@ -423,22 +415,13 @@ object StreamingOps extends QueryModule {
     * back. Single batch ⇒ equals the global aggregate. */
   private def foreachBatchAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    configureStreaming(s)
     val outDir = Tbl.scratchDir("febatch")
-    val q = eventStream(s, d)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation",
-              Tbl.scratchDir("ckpt_febatch"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-    q.awaitTermination()
-    q.stop()
+    val perBatch: (DataFrame, Long) => Unit = (batch, _) =>
+      batch.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .write.mode("append").parquet(outDir)
+    drain(s, eventStream(s, d).writeStream.outputMode(OutputMode.Append())
+               .foreachBatch(perBatch), "febatch")
     s.read.parquet(outDir).orderBy($"event_type")
   }
 
@@ -464,7 +447,6 @@ object StreamingOps extends QueryModule {
     * collects. */
   private def foreachMerge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    configureStreaming(s)
     val ev = Tbl.events(s, d)
     val stage = Tbl.scratchDir("merge_stage")
     ev.repartition(4).write.mode("overwrite").parquet(stage)
@@ -487,16 +469,12 @@ object StreamingOps extends QueryModule {
       merged.write.mode("overwrite").parquet(v)
       cur = v
     }
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_merge"))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(upsert)
-      .start()
-    q.awaitTermination(); q.stop()
+    drain(s, s.readStream.schema(ev.schema)
+               .option("maxFilesPerTrigger", "1")
+               .parquet(stage)
+               .writeStream
+               .outputMode(OutputMode.Append())
+               .foreachBatch(upsert), "merge")
     s.read.parquet(cur)
       .select($"user_id", $"w.ts_us".as("last_ts_us"),
               $"w.event_id".as("last_event_id"), $"w.v_c".as("last_v_c"),
@@ -603,10 +581,7 @@ object StreamingOps extends QueryModule {
     * to s2's — at 100 TB the chained form costs exactly one shuffle
     * more than nothing. A message whose timestamp missed job 1's
     * pattern is dropped in job 2 ([[chainedJob2]]), not a failed batch. */
-  private def streamChainedFlagship(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamChainedFlagshipInner(s, d) }
-
-  private def streamChainedFlagshipInner(s: SparkSession, d: String): DataFrame = {
+  private def streamChainedFlagship(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val features = AisPipeline.preprocess(syntheticAisEnvelope(s, d))
     // job-1 → job-2 wire: to_json(struct(*)) (`preprocess.py:68`) …
@@ -670,24 +645,23 @@ object StreamingOps extends QueryModule {
     * chained flagship's keyed state rather than an agg buffer. Reading
     * state is a parallel scan of store partitions; the stream is not
     * replayed. */
-  private def chainedStateReader(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      streamChainedFlagshipInner(s, d).count() // run the chain; state lands
-      val st = s.read.format("statestore")
-        .option("path", lastCheckpointDir).load()
-      st.select($"key.value".as("mmsi"),
-                posexplode($"value.groupState.rows").as(Seq("pos", "r")))
-        .select($"mmsi", ($"pos" + 1).cast("int").as("rn"),
-                $"r.ts_us".as("ts_us"),
-                $"r.speed_over_ground".as("speed_over_ground"),
-                (floor($"r.rate_of_turn" * 1000000.0) / 1000000.0)
-                  .as("rate_of_turn"),
-                $"r.longitude".as("longitude"), $"r.latitude".as("latitude"),
-                round($"r.cartesian_x", 2).as("cartesian_x"),
-                round($"r.cartesian_y", 2).as("cartesian_y"))
-        .orderBy($"mmsi", $"rn")
-    }
+  private def chainedStateReader(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    streamChainedFlagship(s, d) // runs the chain; its state lands in lastCheckpointDir
+    val st = s.read.format("statestore")
+      .option("path", lastCheckpointDir).load()
+    st.select($"key.value".as("mmsi"),
+              posexplode($"value.groupState.rows").as(Seq("pos", "r")))
+      .select($"mmsi", ($"pos" + 1).cast("int").as("rn"),
+              $"r.ts_us".as("ts_us"),
+              $"r.speed_over_ground".as("speed_over_ground"),
+              (floor($"r.rate_of_turn" * 1000000.0) / 1000000.0)
+                .as("rate_of_turn"),
+              $"r.longitude".as("longitude"), $"r.latitude".as("latitude"),
+              round($"r.cartesian_x", 2).as("cartesian_x"),
+              round($"r.cartesian_y", 2).as("cartesian_y"))
+      .orderBy($"mmsi", $"rn")
+  }
 
   /** Oracle for s34: job 1's feature arithmetic (shared with s8's
     * oracle) wrapped in job 2's latest-3 ranking. The rank's tie-break
@@ -772,10 +746,7 @@ object StreamingOps extends QueryModule {
     * same oracle applies. Complete mode (session windows don't support
     * update; append would hold back sessions ending past the final
     * watermark) ⇒ the last trigger's table is the full merged result. */
-  private def streamSession(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamSessionInner(s, d) }
-
-  private def streamSessionInner(s: SparkSession, d: String): DataFrame = {
+  private def streamSession(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val agg = eventStream(s, d)
       .withWatermark("ts", "0 seconds")
@@ -793,60 +764,42 @@ object StreamingOps extends QueryModule {
     * is an expression over each event's own attributes (click 10 min,
     * view 30 min, else 1 h). Same complete-mode contract as s10; the
     * batch twin x_dynamic_session shares the running-max-of-ends oracle. */
-  private def streamDynamicSession(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val gap = when($"event_type" === "click", "10 minutes")
-        .when($"event_type" === "view", "30 minutes")
-        .otherwise("1 hour")
-      val agg = eventStream(s, d)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(session_window($"ts", gap), $"user_id")
-        .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
-      runToTable(s, agg, "s_dyn_session", OutputMode.Complete())
-        .select($"user_id",
-                unix_micros($"session_window.start").as("ws_us"),
-                unix_micros($"session_window.end").as("we_us"),
-                $"n", round($"v_c" / 100.0, 2).as("sum_value"))
-        .orderBy($"user_id", $"ws_us")
-    }
+  private def streamDynamicSession(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val gap = when($"event_type" === "click", "10 minutes")
+      .when($"event_type" === "view", "30 minutes")
+      .otherwise("1 hour")
+    val agg = eventStream(s, d)
+      .withWatermark("ts", "0 seconds")
+      .groupBy(session_window($"ts", gap), $"user_id")
+      .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v_c"))
+    runToTable(s, agg, "s_dyn_session", OutputMode.Complete())
+      .select($"user_id",
+              unix_micros($"session_window.start").as("ws_us"),
+              unix_micros($"session_window.end").as("we_us"),
+              $"n", round($"v_c" / 100.0, 2).as("sum_value"))
+      .orderBy($"user_id", $"ws_us")
+  }
 
   /** transformWithState (Spark 4 arbitrary-state API): running per-user
     * (count, sum) via a ValueState handle — the modern twin of s2/s3's
-    * flatMapGroupsWithState. Runs on RocksDB like every stateful stream
-    * (engine default via configureStreaming; transformWithState REQUIRES
-    * that provider, so the former per-query override is now redundant).
-    * Single AvailableNow batch ⇒ output equals the batch cumulative
-    * window (the oracle). */
-  private def streamRunningTotals(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamRunningTotalsInner(s, d) }
-
-  private def streamRunningTotalsInner(s: SparkSession, d: String): DataFrame = {
+    * flatMapGroupsWithState. transformWithState REQUIRES the RocksDB
+    * provider, which configureStreaming sets for every stream. Single
+    * AvailableNow batch ⇒ output equals the batch cumulative window
+    * (the oracle). */
+  private def streamRunningTotals(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
-    // transformWithState REQUIRES RocksDB: pin it for this query even if
-    // the session overrode spark.graft.stateStoreProvider to the heap
-    // provider (runToTable's configureStreaming honors that override, so
-    // without this pin the override would crash s11 at query start);
-    // restored afterwards so the override still governs other streams
-    val prev = s.conf.getOption("spark.graft.stateStoreProvider")
-    s.conf.set("spark.graft.stateStoreProvider",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val typed = eventStream(s, d)
-        .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"value")
-        .as[Ev]
-        .groupByKey(_.user_id)
-        .transformWithState(new RunningTotals,
-          TimeMode.None(), OutputMode.Update())
-      runToTable(s, typed.toDF(), "s_running_totals", OutputMode.Update())
-        .select($"user_id", $"event_id", $"ts_us", $"run_n",
-                round($"run_sum_c" / 100.0, 2).as("run_sum"))
-        .orderBy($"user_id", $"ts_us", $"event_id")
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.graft.stateStoreProvider", p)
-      case None => s.conf.unset("spark.graft.stateStoreProvider")
-    }
+    val typed = eventStream(s, d)
+      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"value")
+      .as[Ev]
+      .groupByKey(_.user_id)
+      .transformWithState(new RunningTotals,
+        TimeMode.None(), OutputMode.Update())
+    runToTable(s, typed.toDF(), "s_running_totals", OutputMode.Update())
+      .select($"user_id", $"event_id", $"ts_us", $"run_n",
+              round($"run_sum_c" / 100.0, 2).as("run_sum"))
+      .orderBy($"user_id", $"ts_us", $"event_id")
   }
 
   private val runningTotalsSql =
@@ -866,10 +819,7 @@ object StreamingOps extends QueryModule {
     * sentinel advances the watermark past every real event so the
     * terminal no-data batch flushes all open sessions; output therefore
     * equals the batch gaps-and-islands sessionization at a 30-min gap. */
-  private def streamTimerSession(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamTimerSessionInner(s, d) }
-
-  private def streamTimerSessionInner(s: SparkSession, d: String): DataFrame = {
+  private def streamTimerSession(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d, Seq("view"))
@@ -914,10 +864,7 @@ object StreamingOps extends QueryModule {
     * bounded replay, so the oracled output is the exact batch GROUP BY;
     * the eviction semantics are pinned separately by a sleep-based
     * spec. Update mode + single batch ⇒ one final row per user. */
-  private def streamTtlProfile(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamTtlProfileInner(s, d) }
-
-  private def streamTtlProfileInner(s: SparkSession, d: String): DataFrame = {
+  private def streamTtlProfile(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -943,12 +890,9 @@ object StreamingOps extends QueryModule {
     * in the output projection is expression-identical to the batch
     * twin. k = 64 (matches the batch sketch). Update mode + bounded
     * replay ⇒ final emission per key = the batch sketch (the oracle). */
-  private def streamKmv(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamKmvInner(s, d) }
-
   private val StreamKmvK = 64
 
-  private def streamKmvInner(s: SparkSession, d: String): DataFrame = {
+  private def streamKmv(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -996,10 +940,7 @@ object StreamingOps extends QueryModule {
     * sum(bit_count)) runs batch-side on the emission table and is
     * correct under ANY batching because word emissions are monotone
     * supersets. */
-  private def streamBitmapDistinct(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamBitmapDistinctInner(s, d) }
-
-  private def streamBitmapDistinctInner(s: SparkSession, d: String): DataFrame = {
+  private def streamBitmapDistinct(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -1033,14 +974,9 @@ object StreamingOps extends QueryModule {
     * |types|·32 = 160 RocksDB keys instead of 5, so partition
     * parallelism survives a 100M-row replay (round-10 verdict weak #2);
     * state stays ≤ 3 rows per sub-key at any stream length. */
-  private def streamListState(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s, keyDomain = 5 * ListStateSalts) {
-      streamListStateInner(s, d)
-    }
-
   private[graft] val ListStateSalts = 32
 
-  private def streamListStateInner(s: SparkSession, d: String): DataFrame = {
+  private def streamListState(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import StatefulOps._
     val typed = eventStream(s, d)
@@ -1053,7 +989,8 @@ object StreamingOps extends QueryModule {
         TimeMode.None(), OutputMode.Update())
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"event_type").orderBy($"ts_us", $"event_id")
-    runToTable(s, typed.toDF(), "s_first3", OutputMode.Update())
+    runToTable(s, typed.toDF(), "s_first3", OutputMode.Update(),
+               keyDomain = 5 * ListStateSalts)
       .select($"event_type", $"event_id", $"ts_us", $"value").distinct()
       .withColumn("rn", row_number().over(w))
       .where($"rn" <= 3)
@@ -1077,13 +1014,7 @@ object StreamingOps extends QueryModule {
     * minus the interval can never match again and is evicted. Inner
     * joins emit eagerly, so one AvailableNow batch yields the full
     * batch-join result (the oracle). */
-  private def streamStreamJoin(s: SparkSession, d: String): DataFrame =
-    // 4 store instances per partition for a stream-stream join, each
-    // paying load+commit per batch — the sizing that motivated
-    // withStatePartitions.
-    withStatePartitions(s) { streamStreamJoinInner(s, d) }
-
-  private def streamStreamJoinInner(s: SparkSession, d: String): DataFrame = {
+  private def streamStreamJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val clicks = eventStream(s, d).where($"event_type" === "click")
       .select($"user_id".as("c_user"), $"event_id".as("click_id"), $"ts".as("c_ts"))
@@ -1130,10 +1061,7 @@ object StreamingOps extends QueryModule {
     * idempotent-refold contract as s28's bit_or. The fold's result must equal the batch hourly aggregate
     * over the whole table, so a row lost at the source seam or
     * double-counted by the funnel shifts the hash. */
-  private def streamUnionAgg(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) { streamUnionAggInner(s, d) }
-
-  private def streamUnionAggInner(s: SparkSession, d: String): DataFrame = {
+  private def streamUnionAgg(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // enforce the max-fold's real precondition (non-negative values):
     // a negative value would make the windowed sum non-monotone and the
@@ -1209,51 +1137,50 @@ object StreamingOps extends QueryModule {
     * column — the helper throws, catches its own throw, logs it, and
     * correctly ignores the predicate. State eviction still comes from
     * the two-sided `b_ts`/`a_ts` interval. */
-  private def streamSpatialJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val R = 4000L                  // search radius, milli-degrees
-      val C = 2 * R                  // cell edge = 2R → 2 candidate cells/dim
-      val TRadUs = 1800L * 1000000L  // interval radius, ±30 min
-      val BucketUs = 2 * TRadUs      // time-bucket edge = 2× the radius
-      val pts = eventStream(s, d).where($"event_type" === "error")
-        .select($"event_id", $"user_id", $"ts",
-                (($"user_id" % 30) * 1000 + ($"event_id" * 13) % 1000).as("lon_m"),
-                (($"event_id" % 30) * 1000 + ($"event_id" * 7) % 1000).as("lat_m"))
-        .withColumn("cx", expr(s"lon_m div $C"))
-        .withColumn("cy", expr(s"lat_m div $C"))
-        .withColumn("tb", expr(s"unix_micros(ts) div $BucketUs"))
-      // the 2×2×2 corner cells of the ±(R, R, TRad) match box
-      val corners = array_distinct(array(
-        (for (sx <- Seq(-R, R); sy <- Seq(-R, R); st <- Seq(-TRadUs, TRadUs)) yield
-          struct(expr(s"(lon_m + $sx) div $C").as("jx"),
-                 expr(s"(lat_m + $sy) div $C").as("jy"),
-                 expr(s"(unix_micros(ts) + $st) div $BucketUs").as("jt"))): _*))
-      val probes = pts
-        .select($"event_id".as("event_a"), $"user_id".as("vessel_a"),
-                $"lon_m".as("lon_a"), $"lat_m".as("lat_a"), $"ts".as("a_ts"),
-                explode(corners).as("nb"))
-        .select($"event_a", $"vessel_a", $"lon_a", $"lat_a", $"a_ts",
-                $"nb.jx".as("a_jx"), $"nb.jy".as("a_jy"), $"nb.jt".as("a_jt"))
-        .withWatermark("a_ts", "10 minutes")
-      val builds = pts
-        .select($"event_id".as("event_b"), $"user_id".as("vessel_b"),
-                $"lon_m".as("lon_b"), $"lat_m".as("lat_b"), $"ts".as("b_ts"),
-                $"cx".as("b_jx"), $"cy".as("b_jy"), $"tb".as("b_jt"))
-        .withWatermark("b_ts", "10 minutes")
-      val joined = probes.join(builds,
-        $"a_jx" === $"b_jx" && $"a_jy" === $"b_jy" && $"a_jt" === $"b_jt" &&
-        $"event_a" < $"event_b" &&
-        $"b_ts" >= $"a_ts" - expr("INTERVAL 30 MINUTES") &&
-        $"b_ts" <= $"a_ts" + expr("INTERVAL 30 MINUTES"))
-        .withColumn("d2",
-          ($"lon_a" - $"lon_b") * ($"lon_a" - $"lon_b") +
-          ($"lat_a" - $"lat_b") * ($"lat_a" - $"lat_b"))
-        .where($"d2" < R * R)
-      runToTable(s, joined, "s_spatial_join", OutputMode.Append())
-        .select($"vessel_a", $"vessel_b", $"event_a", $"event_b", $"d2")
-        .orderBy($"event_a", $"event_b")
-    }
+  private def streamSpatialJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val R = 4000L                  // search radius, milli-degrees
+    val C = 2 * R                  // cell edge = 2R → 2 candidate cells/dim
+    val TRadUs = 1800L * 1000000L  // interval radius, ±30 min
+    val BucketUs = 2 * TRadUs      // time-bucket edge = 2× the radius
+    val pts = eventStream(s, d).where($"event_type" === "error")
+      .select($"event_id", $"user_id", $"ts",
+              (($"user_id" % 30) * 1000 + ($"event_id" * 13) % 1000).as("lon_m"),
+              (($"event_id" % 30) * 1000 + ($"event_id" * 7) % 1000).as("lat_m"))
+      .withColumn("cx", expr(s"lon_m div $C"))
+      .withColumn("cy", expr(s"lat_m div $C"))
+      .withColumn("tb", expr(s"unix_micros(ts) div $BucketUs"))
+    // the 2×2×2 corner cells of the ±(R, R, TRad) match box
+    val corners = array_distinct(array(
+      (for (sx <- Seq(-R, R); sy <- Seq(-R, R); st <- Seq(-TRadUs, TRadUs)) yield
+        struct(expr(s"(lon_m + $sx) div $C").as("jx"),
+               expr(s"(lat_m + $sy) div $C").as("jy"),
+               expr(s"(unix_micros(ts) + $st) div $BucketUs").as("jt"))): _*))
+    val probes = pts
+      .select($"event_id".as("event_a"), $"user_id".as("vessel_a"),
+              $"lon_m".as("lon_a"), $"lat_m".as("lat_a"), $"ts".as("a_ts"),
+              explode(corners).as("nb"))
+      .select($"event_a", $"vessel_a", $"lon_a", $"lat_a", $"a_ts",
+              $"nb.jx".as("a_jx"), $"nb.jy".as("a_jy"), $"nb.jt".as("a_jt"))
+      .withWatermark("a_ts", "10 minutes")
+    val builds = pts
+      .select($"event_id".as("event_b"), $"user_id".as("vessel_b"),
+              $"lon_m".as("lon_b"), $"lat_m".as("lat_b"), $"ts".as("b_ts"),
+              $"cx".as("b_jx"), $"cy".as("b_jy"), $"tb".as("b_jt"))
+      .withWatermark("b_ts", "10 minutes")
+    val joined = probes.join(builds,
+      $"a_jx" === $"b_jx" && $"a_jy" === $"b_jy" && $"a_jt" === $"b_jt" &&
+      $"event_a" < $"event_b" &&
+      $"b_ts" >= $"a_ts" - expr("INTERVAL 30 MINUTES") &&
+      $"b_ts" <= $"a_ts" + expr("INTERVAL 30 MINUTES"))
+      .withColumn("d2",
+        ($"lon_a" - $"lon_b") * ($"lon_a" - $"lon_b") +
+        ($"lat_a" - $"lat_b") * ($"lat_a" - $"lat_b"))
+      .where($"d2" < R * R)
+    runToTable(s, joined, "s_spatial_join", OutputMode.Append())
+      .select($"vessel_a", $"vessel_b", $"event_a", $"event_b", $"d2")
+      .orderBy($"event_a", $"event_b")
+  }
 
   private val streamSpatialJoinSql =
     """WITH p AS (
@@ -1282,30 +1209,29 @@ object StreamingOps extends QueryModule {
     * a genuinely multi-batch run — the memory sink's final table must
     * equal the batch aggregate regardless of how the frames were
     * sliced into batches. */
-  private def streamPipeCsv(s: SparkSession, d: String): DataFrame =
+  private def streamPipeCsv(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    import graft.sources.SourceOps
+    val dir = SourceOps.stageFrames(s, d)
+    // size the rate knob to the snapshot: ~4 micro-batches at ANY SF.
+    // The multi-batch admission-control path is what this query tests
+    // (batch slicing itself is pinned exactly in PipeCsvSourceSpec);
+    // a FIXED frame rate meant 98 batches at sf0.1 — 67 s of per-batch
+    // state/checkpoint machinery for a 0.3 s aggregation.
+    val perTrigger = math.max(1L, (SourceOps.frameCount(dir) + 3) / 4)
+    val stream = s.readStream.format("pipecsv")
+      .schema(SourceOps.frameSchema)
+      .option("frameLen", SourceOps.FrameLen)
+      .option("maxFramesPerTrigger", perTrigger)
+      .load(dir)
+    val agg = stream.groupBy($"event_type")
+      .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
     // complete-mode agg over the 5 event types (multi-batch: 16 store
     // instances re-loaded per micro-batch × 4 batches was the dominant
     // cost of this stream, ~0.5 s/batch of pure instance load)
-    withStatePartitions(s, keyDomain = 5) {
-      import s.implicits._
-      import graft.sources.SourceOps
-      val dir = SourceOps.stageFrames(s, d)
-      // size the rate knob to the snapshot: ~4 micro-batches at ANY SF.
-      // The multi-batch admission-control path is what this query tests
-      // (batch slicing itself is pinned exactly in PipeCsvSourceSpec);
-      // a FIXED frame rate meant 98 batches at sf0.1 — 67 s of per-batch
-      // state/checkpoint machinery for a 0.3 s aggregation.
-      val perTrigger = math.max(1L, (SourceOps.frameCount(dir) + 3) / 4)
-      val stream = s.readStream.format("pipecsv")
-        .schema(SourceOps.frameSchema)
-        .option("frameLen", SourceOps.FrameLen)
-        .option("maxFramesPerTrigger", perTrigger)
-        .load(dir)
-      val agg = stream.groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
-      runToTable(s, agg, "s_pipecsv", OutputMode.Complete())
-        .orderBy($"event_type")
-    }
+    runToTable(s, agg, "s_pipecsv", OutputMode.Complete(), keyDomain = 5)
+      .orderBy($"event_type")
+  }
 
   private val streamPipeCsvSql =
     """SELECT event_type, count(*) AS n,
@@ -1321,31 +1247,30 @@ object StreamingOps extends QueryModule {
     * keeps the replay multi-batch so the agg state genuinely merges
     * across triggers; the final emission equals the batch aggregation
     * (the oracle), so a parse slip in ANY batch shifts the hash. */
-  private def streamTextLog(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s, keyDomain = 10) {
-      import s.implicits._
-      val dir = Tbl.scratchDir("textlog_stream")
-      Tbl.events(s, d)
-        .select(concat(
-          when($"event_id" % 7 === 0, "WARN").otherwise("INFO"),
-          lit(" ["), $"event_type", lit("] id="), $"event_id",
-          lit(" uid="), $"user_id",
-          lit(" cents="), Tbl.cents($"value")).as("value"))
-        .repartition(4) // 4 staged files → 4 micro-batches below
-        .write.mode("overwrite").text(dir)
-      val lines = s.readStream
-        .option("maxFilesPerTrigger", "1")
-        .text(dir)
-      val agg = lines
-        .select(
-          regexp_extract($"value", "^(\\w+) \\[", 1).as("level"),
-          regexp_extract($"value", "\\[([^\\]]+)\\]", 1).as("event_type"),
-          regexp_extract($"value", "cents=(-?\\d+)", 1).cast("long").as("v_c"))
-        .groupBy($"level", $"event_type")
-        .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
-      runToTable(s, agg, "s_textlog", OutputMode.Complete())
-        .orderBy($"level", $"event_type")
-    }
+  private def streamTextLog(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val dir = Tbl.scratchDir("textlog_stream")
+    Tbl.events(s, d)
+      .select(concat(
+        when($"event_id" % 7 === 0, "WARN").otherwise("INFO"),
+        lit(" ["), $"event_type", lit("] id="), $"event_id",
+        lit(" uid="), $"user_id",
+        lit(" cents="), Tbl.cents($"value")).as("value"))
+      .repartition(4) // 4 staged files → 4 micro-batches below
+      .write.mode("overwrite").text(dir)
+    val lines = s.readStream
+      .option("maxFilesPerTrigger", "1")
+      .text(dir)
+    val agg = lines
+      .select(
+        regexp_extract($"value", "^(\\w+) \\[", 1).as("level"),
+        regexp_extract($"value", "\\[([^\\]]+)\\]", 1).as("event_type"),
+        regexp_extract($"value", "cents=(-?\\d+)", 1).cast("long").as("v_c"))
+      .groupBy($"level", $"event_type")
+      .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
+    runToTable(s, agg, "s_textlog", OutputMode.Complete(), keyDomain = 10)
+      .orderBy($"level", $"event_type")
+  }
 
   private val streamTextLogSql =
     """SELECT CASE WHEN event_id % 7 = 0 THEN 'WARN' ELSE 'INFO' END AS level,
@@ -1366,24 +1291,47 @@ object StreamingOps extends QueryModule {
     * byte-exactly, certifying state-format round-trip, not just query
     * output. Reading state is a parallel scan of the store's
     * partitions — no replay of the stream. */
-  private def stateReader(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s, keyDomain = 5) {
-      import s.implicits._
-      val agg = eventStream(s, d)
-        .select($"event_type", Tbl.cents($"value").as("v_c"))
-        .groupBy($"event_type")
-        .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
-      runToTable(s, agg, "s_state_src", OutputMode.Complete())
-      s.read.format("statestore").option("path", lastCheckpointDir).load()
-        .select($"key.event_type".as("event_type"),
-                $"value.count".as("n"), $"value.sum".as("sum_v_c"))
-        .orderBy($"event_type")
-    }
+  private def stateReader(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val agg = eventStream(s, d)
+      .select($"event_type", Tbl.cents($"value").as("v_c"))
+      .groupBy($"event_type")
+      .agg(count(lit(1)).as("n"), sum($"v_c").as("sum_v_c"))
+    runToTable(s, agg, "s_state_src", OutputMode.Complete(), keyDomain = 5)
+    s.read.format("statestore").option("path", lastCheckpointDir).load()
+      .select($"key.event_type".as("event_type"),
+              $"value.count".as("n"), $"value.sum".as("sum_v_c"))
+      .orderBy($"event_type")
+  }
 
   private val stateReaderSql =
     """SELECT event_type, count(*) AS n,
       |  CAST(sum(CAST(round(value*100) AS BIGINT)) AS BIGINT) AS sum_v_c
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** The click and purchase sides of the watermark-gated stream-stream
+    * joins (s14, s16, s18, s26): one sentinel-staged event stream, each
+    * side watermarked (10 min) BEFORE its `event_type` filter. One
+    * sentinel per side: each side's watermark node must see a
+    * far-future row that SURVIVES its own filter (see [[eventStream]]);
+    * callers drop the sentinels' negative user ids at the output. */
+  private def sentinelClicksAndPurchases(s: SparkSession,
+                                         d: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val base = eventStream(s, d, Seq("click", "purchase"))
+      .select($"user_id", $"event_id", $"event_type", $"ts")
+    val clicks = base
+      .withWatermark("ts", "10 minutes")
+      .where($"event_type" === "click")
+      .select($"user_id".as("c_user"), $"event_id".as("click_id"),
+              $"ts".as("c_ts"))
+    val purchases = base
+      .withWatermark("ts", "10 minutes")
+      .where($"event_type" === "purchase")
+      .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
+              $"ts".as("p_ts"))
+    (clicks, purchases)
+  }
 
   /** s14: LEFT OUTER stream-stream join — every click, matched to its
     * conversion or emitted with nulls. Outer rows are watermark-gated
@@ -1393,34 +1341,20 @@ object StreamingOps extends QueryModule {
     * every unmatched click from state. Without it, the final watermark-
     * delay's worth of clicks would rightly sit in state awaiting more
     * data — an end-of-stream property this bounded replay must close. */
-  private def streamOuterJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      // one sentinel per branch: each side's watermark node must see a
-      // far-future row that SURVIVES its own event_type filter
-      val base = eventStream(s, d, Seq("click", "purchase"))
-        .select($"user_id", $"event_id", $"event_type", $"ts")
-      val clicks = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"event_id".as("click_id"),
-                $"ts".as("c_ts"))
-      val purchases = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
-                $"ts".as("p_ts"))
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" &&
-        $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      runToTable(s, joined, "s_ss_ljoin", OutputMode.Append(),
-                 flushFinal = true) // unmatched-click nulls are watermark-gated
-        .where($"c_user" >= 0) // drop the watermark sentinels
-        .select($"c_user".as("user_id"), $"click_id", $"purchase_id",
-                (unix_micros($"p_ts") - unix_micros($"c_ts")).as("lag_us"))
-        .orderBy($"user_id", $"click_id", $"purchase_id")
-    }
+  private def streamOuterJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val (clicks, purchases) = sentinelClicksAndPurchases(s, d)
+    val joined = clicks.join(purchases,
+      $"c_user" === $"p_user" &&
+      $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
+      "left_outer")
+    runToTable(s, joined, "s_ss_ljoin", OutputMode.Append(),
+               flushFinal = true) // unmatched-click nulls are watermark-gated
+      .where($"c_user" >= 0) // drop the watermark sentinels
+      .select($"c_user".as("user_id"), $"click_id", $"purchase_id",
+              (unix_micros($"p_ts") - unix_micros($"c_ts")).as("lag_us"))
+      .orderBy($"user_id", $"click_id", $"purchase_id")
+  }
 
   /** s17: frames in, frames out — the custom connector at BOTH ends of
     * a stream (the reference's full topology, `server.py` producer →
@@ -1434,23 +1368,18 @@ object StreamingOps extends QueryModule {
   private def streamPipeCsvSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.sources.SourceOps
-    configureStreaming(s)
     val inDir = SourceOps.stageFrames(s, d)
     val outDir = Tbl.scratchDir("pipecsv_sink")
     val perTrigger = math.max(1L, (SourceOps.frameCount(inDir) + 3) / 4)
-    val q = s.readStream.format("pipecsv")
-      .schema(SourceOps.frameSchema)
-      .option("frameLen", SourceOps.FrameLen)
-      .option("maxFramesPerTrigger", perTrigger)
-      .load(inDir)
-      .writeStream.format("pipecsv")
-      .option("path", outDir)
-      .option("frameLen", SourceOps.FrameLen)
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_pipecsv_sink"))
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q.stop()
+    drain(s, s.readStream.format("pipecsv")
+               .schema(SourceOps.frameSchema)
+               .option("frameLen", SourceOps.FrameLen)
+               .option("maxFramesPerTrigger", perTrigger)
+               .load(inDir)
+               .writeStream.format("pipecsv")
+               .option("path", outDir)
+               .option("frameLen", SourceOps.FrameLen)
+               .outputMode(OutputMode.Append()), "pipecsv_sink")
     s.read.format("pipecsv").schema(SourceOps.frameSchema)
       .option("frameLen", SourceOps.FrameLen).load(outDir)
       .groupBy($"event_type")
@@ -1471,33 +1400,21 @@ object StreamingOps extends QueryModule {
     * per-branch sentinels as s14. The composite (user, click, purchase)
     * ordering stays total: unmatched-purchase rows carry null click_id
     * and sort among themselves by purchase_id. */
-  private def streamFullOuterJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val base = eventStream(s, d, Seq("click", "purchase"))
-        .select($"user_id", $"event_id", $"event_type", $"ts")
-      val clicks = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"event_id".as("click_id"),
-                $"ts".as("c_ts"))
-      val purchases = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
-                $"ts".as("p_ts"))
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" &&
-        $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
-        "full_outer")
-      runToTable(s, joined, "s_ss_fjoin", OutputMode.Append(),
-                 flushFinal = true) // both sides' unmatched rows are watermark-gated
-        .where(coalesce($"c_user", $"p_user") >= 0) // drop both sentinels
-        .select(coalesce($"c_user", $"p_user").as("user_id"),
-                $"click_id", $"purchase_id",
-                (unix_micros($"p_ts") - unix_micros($"c_ts")).as("lag_us"))
-        .orderBy($"user_id", $"click_id", $"purchase_id")
-    }
+  private def streamFullOuterJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val (clicks, purchases) = sentinelClicksAndPurchases(s, d)
+    val joined = clicks.join(purchases,
+      $"c_user" === $"p_user" &&
+      $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
+      "full_outer")
+    runToTable(s, joined, "s_ss_fjoin", OutputMode.Append(),
+               flushFinal = true) // both sides' unmatched rows are watermark-gated
+      .where(coalesce($"c_user", $"p_user") >= 0) // drop both sentinels
+      .select(coalesce($"c_user", $"p_user").as("user_id"),
+              $"click_id", $"purchase_id",
+              (unix_micros($"p_ts") - unix_micros($"c_ts")).as("lag_us"))
+      .orderBy($"user_id", $"click_id", $"purchase_id")
+  }
 
   /** s18: LEFT SEMI stream-stream join — converted clicks only, each
     * emitted exactly once however many purchases land in its window.
@@ -1513,31 +1430,19 @@ object StreamingOps extends QueryModule {
     * must run. The sentinels can't match (negative user_id) and semi
     * output carries left columns only, so no output filter is even
     * needed — kept anyway as a belt against schema drift. */
-  private def streamSemiJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val base = eventStream(s, d, Seq("click", "purchase"))
-        .select($"user_id", $"event_id", $"event_type", $"ts")
-      val clicks = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"event_id".as("click_id"),
-                $"ts".as("c_ts"))
-      val purchases = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
-                $"ts".as("p_ts"))
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" &&
-        $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
-        "left_semi")
-      runToTable(s, joined, "s_ss_sjoin", OutputMode.Append())
-        .where($"c_user" >= 0) // sentinel belt (see Scaladoc)
-        .select($"c_user".as("user_id"), $"click_id",
-                unix_micros($"c_ts").as("ts_us"))
-        .orderBy($"user_id", $"click_id")
-    }
+  private def streamSemiJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val (clicks, purchases) = sentinelClicksAndPurchases(s, d)
+    val joined = clicks.join(purchases,
+      $"c_user" === $"p_user" &&
+      $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
+      "left_semi")
+    runToTable(s, joined, "s_ss_sjoin", OutputMode.Append())
+      .where($"c_user" >= 0) // sentinel belt (see Scaladoc)
+      .select($"c_user".as("user_id"), $"click_id",
+              unix_micros($"c_ts").as("ts_us"))
+      .orderBy($"user_id", $"click_id")
+  }
 
   private val streamSemiJoinSql =
     """SELECT c.user_id, c.event_id AS click_id, epoch_us(c.ts) AS ts_us
@@ -1579,18 +1484,12 @@ object StreamingOps extends QueryModule {
     * read it back with a declared schema, aggregate. */
   private def streamCsvSink(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    configureStreaming(s)
     val outDir = Tbl.scratchDir("csv_sink")
-    val q = eventStream(s, d)
-      .select($"user_id", $"event_type")
-      .writeStream.format("csv")
-      .option("path", outDir)
-      .option("checkpointLocation",
-              Tbl.scratchDir("ckpt_csv"))
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    q.stop()
+    drain(s, eventStream(s, d)
+               .select($"user_id", $"event_type")
+               .writeStream.format("csv")
+               .option("path", outDir)
+               .outputMode(OutputMode.Append()), "csv")
     s.read.schema(StructType(Seq(
         StructField("user_id", LongType), StructField("event_type", StringType))))
       .csv(outDir)
@@ -1683,27 +1582,26 @@ object StreamingOps extends QueryModule {
     * both state stores and is excluded by its impossible window start.
     * Scale shape: the first agg collapses events to (window, user)
     * partials map-side; the second shuffles only window-count rows. */
-  private def streamChainedAgg(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val agg1 = eventStream(s, d, Seq("view"))
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window($"ts", "1 minute"), $"user_id")
-        .agg(count(lit(1)).as("n1"))
-      val agg2 = agg1
-        .groupBy(window($"window", "5 minutes"))
-        .agg(sum($"n1").as("n_events"), count(lit(1)).as("n_user_windows"))
-        .select(unix_micros($"window.start").as("ws_us"),
-                $"n_events", $"n_user_windows")
-      runToTable(s, agg2, "s_chained_agg", OutputMode.Append(),
-                 flushFinal = true) // append-mode windows close on watermark
-        // exclude the sentinel's own window (start ≈ 7.0e15 µs, year
-        // ~2191). The threshold is MICROS-scale: a prior nanos-scale 6e18
-        // constant excluded nothing and correctness silently rested on
-        // append-mode watermark gating alone (round-4 ADVICE)
-        .where($"ws_us" < 6900000000000000L)
-        .orderBy($"ws_us")
-    }
+  private def streamChainedAgg(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val agg1 = eventStream(s, d, Seq("view"))
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 minute"), $"user_id")
+      .agg(count(lit(1)).as("n1"))
+    val agg2 = agg1
+      .groupBy(window($"window", "5 minutes"))
+      .agg(sum($"n1").as("n_events"), count(lit(1)).as("n_user_windows"))
+      .select(unix_micros($"window.start").as("ws_us"),
+              $"n_events", $"n_user_windows")
+    runToTable(s, agg2, "s_chained_agg", OutputMode.Append(),
+               flushFinal = true) // append-mode windows close on watermark
+      // exclude the sentinel's own window (start ≈ 7.0e15 µs, year
+      // ~2191). The threshold is MICROS-scale: a prior nanos-scale 6e18
+      // constant excluded nothing and correctness silently rested on
+      // append-mode watermark gating alone (round-4 ADVICE)
+      .where($"ws_us" < 6900000000000000L)
+      .orderBy($"ws_us")
+  }
 
   private val streamChainedAggSql =
     """WITH w1 AS (
@@ -1763,34 +1661,33 @@ object StreamingOps extends QueryModule {
     * PRODUCTS so no signed division — see x_dist_drift) runs batch-side
     * on the |windows|·|types| sink table. Update mode: with
     * AvailableNow's single batch every window emits its final count. */
-  private def streamDrift(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.{Window => W}
-      val base = Tbl.events(s, d).groupBy($"event_type")
-        .agg(count(lit(1)).as("qc"))
-      val agg = eventStream(s, d)
-        .withWatermark("ts", "5 minutes")
-        .groupBy(window($"ts", "1 day"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-      val sunk = runToTable(s, agg, "s_drift", OutputMode.Update())
-        .select(unix_micros($"window.start").as("ws_us"), $"event_type", $"n")
-      val qn1 = base.agg(sum($"qc" + 1).as("qn1"))
-      sunk
-        .withColumn("pn1", sum($"n" + 1).over(W.partitionBy($"ws_us")))
-        .join(broadcast(base), "event_type")
-        .crossJoin(broadcast(qn1))
-        .select($"ws_us", $"event_type", $"n", $"qc",
-                expr("(n + 1) * 1000000000L div pn1").as("p_e9"),
-                expr("(qc + 1) * 1000000000L div qn1").as("q_e9"),
-                floor(round(log((($"n" + 1).cast("double") * $"qn1".cast("double")) /
-                                (($"qc" + 1).cast("double") * $"pn1".cast("double"))), 7)
-                        * 1000000.0).cast("long").as("ln_e6"))
-        .select($"ws_us", $"event_type", $"n", $"qc", $"p_e9", $"q_e9",
-                $"ln_e6", ($"p_e9" * $"ln_e6").as("kl_c"),
-                (($"p_e9" - $"q_e9") * $"ln_e6").as("psi_c"))
-        .orderBy($"ws_us", $"event_type")
-    }
+  private def streamDrift(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.expressions.{Window => W}
+    val base = Tbl.events(s, d).groupBy($"event_type")
+      .agg(count(lit(1)).as("qc"))
+    val agg = eventStream(s, d)
+      .withWatermark("ts", "5 minutes")
+      .groupBy(window($"ts", "1 day"), $"event_type")
+      .agg(count(lit(1)).as("n"))
+    val sunk = runToTable(s, agg, "s_drift", OutputMode.Update())
+      .select(unix_micros($"window.start").as("ws_us"), $"event_type", $"n")
+    val qn1 = base.agg(sum($"qc" + 1).as("qn1"))
+    sunk
+      .withColumn("pn1", sum($"n" + 1).over(W.partitionBy($"ws_us")))
+      .join(broadcast(base), "event_type")
+      .crossJoin(broadcast(qn1))
+      .select($"ws_us", $"event_type", $"n", $"qc",
+              expr("(n + 1) * 1000000000L div pn1").as("p_e9"),
+              expr("(qc + 1) * 1000000000L div qn1").as("q_e9"),
+              floor(round(log((($"n" + 1).cast("double") * $"qn1".cast("double")) /
+                              (($"qc" + 1).cast("double") * $"pn1".cast("double"))), 7)
+                      * 1000000.0).cast("long").as("ln_e6"))
+      .select($"ws_us", $"event_type", $"n", $"qc", $"p_e9", $"q_e9",
+              $"ln_e6", ($"p_e9" * $"ln_e6").as("kl_c"),
+              (($"p_e9" - $"q_e9") * $"ln_e6").as("psi_c"))
+      .orderBy($"ws_us", $"event_type")
+  }
 
   private val streamDriftSql =
     """WITH ev AS (
@@ -1827,36 +1724,24 @@ object StreamingOps extends QueryModule {
     * argmax tie-breaks on (c_ts, click_id), the same total order the
     * oracle's row_number states — deterministic under any partitioning
     * or batch layout. */
-  private def streamAsofJoin(s: SparkSession, d: String): DataFrame =
-    withStatePartitions(s) {
-      import s.implicits._
-      val base = eventStream(s, d, Seq("click", "purchase"))
-        .select($"user_id", $"event_id", $"event_type", $"ts")
-      val clicks = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "click")
-        .select($"user_id".as("c_user"), $"event_id".as("click_id"),
-                $"ts".as("c_ts"))
-      val purchases = base
-        .withWatermark("ts", "10 minutes")
-        .where($"event_type" === "purchase")
-        .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
-                $"ts".as("p_ts"))
-      val joined = clicks.join(purchases,
-        $"c_user" === $"p_user" &&
-        $"c_ts" <= $"p_ts" && $"c_ts" >= $"p_ts" - expr("INTERVAL 10 MINUTES"))
-      val asof = joined
-        .groupBy($"p_user", $"purchase_id", $"p_ts")
-        .agg(max_by($"click_id", struct($"c_ts", $"click_id"))
-               .as("asof_click_id"),
-             max($"c_ts").as("asof_c_ts"))
-      runToTable(s, asof, "s_asof_join", OutputMode.Append(),
-                 flushFinal = true)
-        .where($"p_user" >= 0) // drop the watermark sentinels
-        .select($"p_user".as("user_id"), $"purchase_id", $"asof_click_id",
-                (unix_micros($"p_ts") - unix_micros($"asof_c_ts")).as("lag_us"))
-        .orderBy($"user_id", $"purchase_id")
-    }
+  private def streamAsofJoin(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
+    val (clicks, purchases) = sentinelClicksAndPurchases(s, d)
+    val joined = clicks.join(purchases,
+      $"c_user" === $"p_user" &&
+      $"c_ts" <= $"p_ts" && $"c_ts" >= $"p_ts" - expr("INTERVAL 10 MINUTES"))
+    val asof = joined
+      .groupBy($"p_user", $"purchase_id", $"p_ts")
+      .agg(max_by($"click_id", struct($"c_ts", $"click_id"))
+             .as("asof_click_id"),
+           max($"c_ts").as("asof_c_ts"))
+    runToTable(s, asof, "s_asof_join", OutputMode.Append(),
+               flushFinal = true)
+      .where($"p_user" >= 0) // drop the watermark sentinels
+      .select($"p_user".as("user_id"), $"purchase_id", $"asof_click_id",
+              (unix_micros($"p_ts") - unix_micros($"asof_c_ts")).as("lag_us"))
+      .orderBy($"user_id", $"purchase_id")
+  }
 
   private val streamAsofJoinSql =
     """WITH j AS (

@@ -53,6 +53,22 @@ class ScaleWriteSpec extends SparkSpec {
     }
   }
 
+  test("a malformed spark.graft.writeSalts fails with its value") {
+    import spark.implicits._
+    val df = spark.range(0, 8).select(($"id" % 2).as("p"), $"id".as("event_id"))
+    val prev = spark.conf.getOption("spark.graft.writeSalts")
+    try Seq("eight", "0", "-3").foreach { v =>
+      spark.conf.set("spark.graft.writeSalts", v)
+      val e = intercept[IllegalArgumentException] {
+        graft.operators.ScaleOps.clusterForWrite(df, "p", "event_id")
+      }
+      assert(e.getMessage == s"write salt knob must be a positive int, got '$v'")
+    } finally prev match {
+      case Some(p) => spark.conf.set("spark.graft.writeSalts", p)
+      case None => spark.conf.unset("spark.graft.writeSalts")
+    }
+  }
+
   test("fan-out probe counts row groups, not byte-range splits") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("rg_probe").toString

@@ -127,25 +127,6 @@ class StatefulOpsSpec extends SparkSpec {
       s"heap-provider .delta files under $ckpt/state: ${names.take(20)}")
   }
 
-  test("s11 pins RocksDB even when the session overrides the provider knob") {
-    // transformWithState cannot run on the heap provider; a session-wide
-    // spark.graft.stateStoreProvider override must not crash s11 (it
-    // pins RocksDB locally and restores the override afterwards)
-    val prev = spark.conf.getOption("spark.graft.stateStoreProvider")
-    spark.conf.set("spark.graft.stateStoreProvider",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    try {
-      val n = SparkEntry.queries("s11_stream_tws")(spark, "/root/testdata/sf0.001").count()
-      assert(n > 0)
-      assert(spark.conf.get("spark.graft.stateStoreProvider")
-               .contains("HDFSBackedStateStoreProvider"),
-             "session override must survive the s11-local pin")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.graft.stateStoreProvider", p)
-      case None => spark.conf.unset("spark.graft.stateStoreProvider")
-    }
-  }
-
   test("RocksDB state survives stop/restart: changelog recovery continues the aggregate") {
     // the engine default commits per-batch CHANGELOGS (full snapshots are
     // deferred to maintenance, which throwaway runs never execute) — so a
@@ -1102,14 +1083,39 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("a malformed spark.graft.statePartitions fails with its value") {
+    val shufflePrev = spark.conf.get("spark.sql.shuffle.partitions")
     val e = intercept[IllegalArgumentException] {
       withStatePartitionConf("four") { runEntry("s2_stream_last3") }
     }
     assert(e.getMessage.contains("must be a positive int, got 'four'"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
     val z = intercept[IllegalArgumentException] {
       withStatePartitionConf("0") { runEntry("s2_stream_last3") }
     }
     assert(z.getMessage.contains("must be positive, got 0"))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
+  }
+
+  test("sink-owning entries run through the one runner: own checkpoint, shuffle width restored") {
+    // s7/s9/s17/s33 bring their own sink writer; the runner still names
+    // their checkpoint and scopes the partition count to the stream.
+    // A state-partition conf of 2 makes the scope differ from the
+    // session width, so a missed restore would show.
+    val shufflePrev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert(shufflePrev != "2")
+    withStatePartitionConf("2") {
+      Seq("s7_foreach_batch" -> "ckpt_febatch", "s9_stream_csv_sink" -> "ckpt_csv",
+          "s17_stream_pipecsv_sink" -> "ckpt_pipecsv_sink",
+          "s33_foreach_merge" -> "ckpt_merge").foreach { case (entry, ckpt) =>
+        val n = SparkEntry.queries(entry)(spark, "/root/testdata/sf0.001").count()
+        assert(n > 0, s"$entry returned no rows")
+        val dir = new java.io.File(graft.streaming.StreamingOps.lastCheckpointDir)
+        assert(dir.getName.startsWith(ckpt), s"$entry: last checkpoint is $dir")
+        assert(Option(new java.io.File(dir, "commits").list).exists(_.nonEmpty),
+               s"$entry: no committed batch under $dir")
+        assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev, entry)
+      }
+    }
   }
 
   test("featDescOrdering: second-granularity ts ties break on lon/lat/sog/cog desc") {
