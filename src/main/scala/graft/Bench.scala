@@ -31,13 +31,20 @@ object Bench {
 
   /** The entries a run times: the whole registry, or the named entries
     * in the order given. An unknown name fails before any timing. */
-  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
-    val all = SparkEntry.queries
-    val unknown = names.filterNot(all.contains)
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    pick("query", SparkEntry.queries.toSeq, names)
+
+  /** The entries of `all` named in `names`, in the order given, or all of
+    * them when none is named; an unknown name fails listing the valid
+    * ones. */
+  private[graft] def pick[A](kind: String, all: Seq[(String, A)],
+                             names: Seq[String]): Seq[(String, A)] = {
+    val byName = all.toMap
+    val unknown = names.filterNot(byName.contains)
     if (unknown.nonEmpty) throw new IllegalArgumentException(
-      s"unknown query ${unknown.mkString(", ")}; valid names: " +
-      all.keys.toSeq.sorted.mkString(" "))
-    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+      s"unknown $kind ${unknown.mkString(", ")}; valid names: " +
+      all.map(_._1).sorted.mkString(" "))
+    if (names.isEmpty) all else names.distinct.map(n => n -> byName(n))
   }
 
   /** JSON string literal: quotes, backslashes and ALL control chars

@@ -35,10 +35,7 @@ object CpuMeter {
 
   /** Interference CPU-seconds between two snapshots. */
   final case class Delta(stealS: Double, iowaitS: Double, otherS: Double,
-                         gcS: Double) {
-    def fmt: String =
-      f"steal=$stealS%.1f iowait=$iowaitS%.1f other=$otherS%.1f gc=$gcS%.1f"
-  }
+                         gcS: Double)
 
   def snap(): Snap = {
     // /proc/stat line 1: "cpu user nice system idle iowait irq softirq

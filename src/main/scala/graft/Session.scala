@@ -14,12 +14,15 @@ object Session {
   /** `SPARK_GRAFT_CPUS` if set, otherwise the host's core count. */
   def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
 
-  def parseCpus(v: Option[String]): Int = v match {
-    case None => Runtime.getRuntime.availableProcessors
-    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS '$s' is not a positive integer"))
-  }
+  def parseCpus(v: Option[String]): Int =
+    v.fold(Runtime.getRuntime.availableProcessors)(positiveInt("SPARK_GRAFT_CPUS", _))
+
+  /** A count-valued knob: `raw` as a positive int, else a failure that
+    * names `knob` and quotes `raw` (not a bare NumberFormatException
+    * deep inside planning). */
+  def positiveInt(knob: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"$knob '$raw' is not a positive integer"))
 
   /** Extra session confs from `SPARK_GRAFT_CONF` ("k=v;k2=v2"). Only the
     * timing mains pass them, so an inherited variable cannot change a

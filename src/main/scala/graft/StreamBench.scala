@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryProgress}
+import graft.streaming.Replay
 
 /** Streaming-state bench at replay volume (round-7 VERDICT item #2).
   *
@@ -11,7 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * ACROSS batches: does per-batch wall grow as RocksDB state accumulates
   * (the 100 TB question), or stay flat? This main answers it with a
   * 10M-row replay (sf10 events) cut into K time-ordered chunks consumed
-  * one file per micro-batch, across five state layouts:
+  * one file per micro-batch, across eight state layouts, among them:
   *
   *  - `agg_watermark`  (s1-class): sliding-window agg, watermark evicts —
   *    steady-state batch time must be FLAT (state bounded by watermark).
@@ -38,6 +39,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * size IS the measurement, so the read-before-put cost is paid
   * deliberately (the oracle bench turns it off; see configureStreaming).
   *
+  * Run: `runMain graft.StreamBench [layout …]` — the named layouts, or
+  * all of them; the corpus is cut once and every layout drains it
+  * through its own [[graft.streaming.Replay]].
+  *
   * Artifact: one JSON line per query appended to STREAMBENCH_rNN.json —
   * per-batch {rows, totalMs, addBatchMs, commitMs, stateRows,
   * stateBytes}, plus a growth verdict: mean per-ROW batch cost of the
@@ -51,16 +56,134 @@ object StreamBench {
   // this package and needs JVM-public access to the accessor methods
   final case class Ring(ids: List[Long])
 
+  /** One state layout: its sink mode and its query over a replay
+    * source (called once per source relation the query needs). */
+  private[graft] final case class Layout(
+      name: String, mode: OutputMode,
+      build: (SparkSession, () => DataFrame) => DataFrame)
+
+  private val layouts: Seq[Layout] = Seq(
+    Layout("agg_watermark", OutputMode.Update(), (s, src) => {
+      import s.implicits._
+      src().withWatermark("ts", "10 minutes")
+        .groupBy(window($"ts", "2 minutes", "1 minute"), $"user_id")
+        .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v"))
+    }),
+    Layout("dedup_nowm", OutputMode.Append(), (_, src) =>
+      src().dropDuplicates("event_id")),
+    // the bounded twin of dedup_nowm (same key, same volume): the
+    // watermark evicts dedup state older than 10 minutes of event
+    // time, so state is bounded by the window population, not the
+    // corpus — the layout a 100 TB deployment runs (s14's semantics)
+    Layout("dedup_wm", OutputMode.Append(), (_, src) =>
+      src().withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("event_id")),
+    Layout("ring_last3", OutputMode.Update(), (s, src) => {
+      import s.implicits._
+      src().select($"user_id", $"event_id").as[(Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState(
+          OutputMode.Update(), GroupStateTimeout.NoTimeout)(
+          (user: Long, rows: Iterator[(Long, Long)], st: GroupState[Ring]) => {
+            val prev = st.getOption.map(_.ids).getOrElse(Nil)
+            val next = (prev ++ rows.map(_._2)).takeRight(3).toList
+            st.update(Ring(next))
+            Iterator((user, next.size))
+          }).toDF("user_id", "n_kept")
+    }),
+    // s23-class: transformWithState sessionization with EVENT-TIME
+    // TIMERS — every batch re-arms one timer per active key and the
+    // watermark sweep fires the idle ones; state = open sessions
+    // (bounded by active keys), so per-row cost must stay flat while
+    // the timer registry churns at full replay volume
+    Layout("timer_session", OutputMode.Append(), (s, src) => {
+      import s.implicits._
+      src().withWatermark("ts", "0 seconds")
+        .select($"event_id", $"ts", unix_micros($"ts").as("ts_us"),
+                $"user_id", $"value")
+        .as[graft.streaming.StatefulOps.TEv]
+        .groupByKey(_.user_id)
+        .transformWithState(
+          new graft.streaming.StatefulOps.TimerSessions(1800000000L),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+        .toDF()
+    }),
+    // s31-class: transformWithState ListState bounded min-3 over
+    // salted sub-keys ((event_type, event_id mod 32) — 160 RocksDB
+    // keys) — state is ≤3 rows per sub-key at ANY replay length, and
+    // the round-11 fold's per-row cost is one (ts,id) compare (the
+    // pre-fix handleInputRows sorted each key's whole micro-batch:
+    // 2,410 s of update CPU at 100M rows)
+    Layout("liststate_min3", OutputMode.Update(), (s, src) => {
+      import s.implicits._
+      src().select($"event_type", $"event_id",
+                   unix_micros($"ts").as("ts_us"), $"value")
+        .as[graft.streaming.StatefulOps.TypeEv]
+        .groupByKey(e => (e.event_type,
+          java.lang.Math.floorMod(e.event_id,
+            graft.streaming.StreamingOps.ListStateSalts.toLong).toInt))
+        .transformWithState(
+          new graft.streaming.StatefulOps.First3PerType,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Update())
+        .toDF()
+    }),
+    Layout("ss_interval_join", OutputMode.Append(), (s, src) => {
+      import s.implicits._
+      val l = src().where($"event_type" === "view")
+        .select($"user_id".as("l_user"), $"ts".as("l_ts"))
+        .withWatermark("l_ts", "5 minutes")
+      val r = src().where($"event_type" === "click")
+        .select($"user_id".as("r_user"), $"ts".as("r_ts"))
+        .withWatermark("r_ts", "5 minutes")
+      l.join(r, $"l_user" === $"r_user" &&
+        $"r_ts" >= $"l_ts" && $"r_ts" <= $"l_ts" + expr("interval 2 minutes"))
+    }),
+    // s14-class: LEFT OUTER stream-stream join — the heaviest
+    // state-per-key family (round-11 verdict item #3: the outer-join
+    // buffers had no 100M-row replay evidence). BOTH sides buffer
+    // until the watermark passes the join window (the left side must
+    // also outlive it to emit its null-matched row), so state holds
+    // ~15 minutes of clicks+purchases at any replay length — bounded
+    // by time density, not corpus size. Growth ≈ 1 at 100M rows is
+    // the flat-cost proof for outer-join state eviction.
+    Layout("ss_leftouter_join", OutputMode.Append(), (s, src) => {
+      import s.implicits._
+      val l = src().where($"event_type" === "click")
+        .select($"user_id".as("c_user"), $"event_id".as("click_id"),
+                $"ts".as("c_ts"))
+        .withWatermark("c_ts", "10 minutes")
+      val r = src().where($"event_type" === "purchase")
+        .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
+                $"ts".as("p_ts"))
+        .withWatermark("p_ts", "10 minutes")
+      l.join(r, $"c_user" === $"p_user" &&
+        $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("interval 10 minutes"),
+        "left_outer")
+    }))
+
+  /** The layouts named on the command line (every layout when none is);
+    * an unknown name fails before any session exists. */
+  private[graft] def select(names: Seq[String]): Seq[Layout] =
+    Bench.pick("layout", layouts.map(l => l.name -> l), names).map(_._2)
+
+  /** (chunks, restart point) from `SPARK_GRAFT_STREAM_CHUNKS` (default
+    * 20) and `SPARK_GRAFT_STREAM_RESTART` (unset: no restart). */
+  private[graft] def replayShape(env: String => Option[String]): (Int, Int) = {
+    def knob(k: String, default: Int) = env(k).fold(default)(Session.positiveInt(k, _))
+    val chunks = knob("SPARK_GRAFT_STREAM_CHUNKS", 20)
+    val restartAt = knob("SPARK_GRAFT_STREAM_RESTART", 0)
+    require(restartAt < chunks,
+      s"SPARK_GRAFT_STREAM_RESTART=$restartAt must be in (0, $chunks)")
+    (chunks, restartAt)
+  }
+
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "20").toInt
-    // comma-separated layout filter for big replays (100M-row runs pay
-    // ~10 min/layout; the third-decade evidence only needs the bounded
-    // watermark layouts) — empty/unset = all layouts
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_STREAM_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
+    val (chunks, restartAt) = replayShape(sys.env.get)
+    val selected = select(args.toSeq)
     // SPARK_GRAFT_CONF steers e.g. the snapshot-cadence experiments
     // below (minDeltasForSnapshot) without a rebuild
     val conf = Session.envConf
@@ -80,197 +203,48 @@ object StreamBench {
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
                    (chunks + 16).toString)
 
-    val streamDir = stageChunks(spark, sfDir, chunks)
-
-    def src(): DataFrame =
-      spark.readStream
-        .schema(Tbl.events(spark, sfDir).schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir)
-
-    import spark.implicits._
-
-    val queries: Seq[(String, OutputMode, () => DataFrame)] = Seq(
-      ("agg_watermark", OutputMode.Update(), () =>
-        src().withWatermark("ts", "10 minutes")
-          .groupBy(window($"ts", "2 minutes", "1 minute"), $"user_id")
-          .agg(count(lit(1)).as("n"), sum(Tbl.cents($"value")).as("v"))),
-      ("dedup_nowm", OutputMode.Append(), () =>
-        src().dropDuplicates("event_id")),
-      // the bounded twin of dedup_nowm (same key, same volume): the
-      // watermark evicts dedup state older than 10 minutes of event
-      // time, so state is bounded by the window population, not the
-      // corpus — the layout a 100 TB deployment runs (s14's semantics)
-      ("dedup_wm", OutputMode.Append(), () =>
-        src().withWatermark("ts", "10 minutes")
-          .dropDuplicatesWithinWatermark("event_id")),
-      ("ring_last3", OutputMode.Update(), () =>
-        src().select($"user_id", $"event_id").as[(Long, Long)]
-          .groupByKey(_._1)
-          .flatMapGroupsWithState(
-            OutputMode.Update(), GroupStateTimeout.NoTimeout)(
-            (user: Long, rows: Iterator[(Long, Long)], st: GroupState[Ring]) => {
-              val prev = st.getOption.map(_.ids).getOrElse(Nil)
-              val next = (prev ++ rows.map(_._2)).takeRight(3).toList
-              st.update(Ring(next))
-              Iterator((user, next.size))
-            }).toDF("user_id", "n_kept")),
-      // s23-class: transformWithState sessionization with EVENT-TIME
-      // TIMERS — every batch re-arms one timer per active key and the
-      // watermark sweep fires the idle ones; state = open sessions
-      // (bounded by active keys), so per-row cost must stay flat while
-      // the timer registry churns at full replay volume
-      ("timer_session", OutputMode.Append(), () =>
-        src().withWatermark("ts", "0 seconds")
-          .select($"event_id", $"ts", unix_micros($"ts").as("ts_us"),
-                  $"user_id", $"value")
-          .as[graft.streaming.StatefulOps.TEv]
-          .groupByKey(_.user_id)
-          .transformWithState(
-            new graft.streaming.StatefulOps.TimerSessions(1800000000L),
-            org.apache.spark.sql.streaming.TimeMode.EventTime(),
-            OutputMode.Append())
-          .toDF()),
-      // s31-class: transformWithState ListState bounded min-3 over
-      // salted sub-keys ((event_type, event_id mod 32) — 160 RocksDB
-      // keys) — state is ≤3 rows per sub-key at ANY replay length, and
-      // the round-11 fold's per-row cost is one (ts,id) compare (the
-      // pre-fix handleInputRows sorted each key's whole micro-batch:
-      // 2,410 s of update CPU at 100M rows)
-      ("liststate_min3", OutputMode.Update(), () =>
-        src().select($"event_type", $"event_id",
-                     unix_micros($"ts").as("ts_us"), $"value")
-          .as[graft.streaming.StatefulOps.TypeEv]
-          .groupByKey(e => (e.event_type,
-            java.lang.Math.floorMod(e.event_id,
-              graft.streaming.StreamingOps.ListStateSalts.toLong).toInt))
-          .transformWithState(
-            new graft.streaming.StatefulOps.First3PerType,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            OutputMode.Update())
-          .toDF()),
-      ("ss_interval_join", OutputMode.Append(), () => {
-        val l = src().where($"event_type" === "view")
-          .select($"user_id".as("l_user"), $"ts".as("l_ts"))
-          .withWatermark("l_ts", "5 minutes")
-        val r = src().where($"event_type" === "click")
-          .select($"user_id".as("r_user"), $"ts".as("r_ts"))
-          .withWatermark("r_ts", "5 minutes")
-        l.join(r, $"l_user" === $"r_user" &&
-          $"r_ts" >= $"l_ts" && $"r_ts" <= $"l_ts" + expr("interval 2 minutes"))
-      }),
-      // s14-class: LEFT OUTER stream-stream join — the heaviest
-      // state-per-key family (round-11 verdict item #3: the outer-join
-      // buffers had no 100M-row replay evidence). BOTH sides buffer
-      // until the watermark passes the join window (the left side must
-      // also outlive it to emit its null-matched row), so state holds
-      // ~15 minutes of clicks+purchases at any replay length — bounded
-      // by time density, not corpus size. Growth ≈ 1 at 100M rows is
-      // the flat-cost proof for outer-join state eviction.
-      ("ss_leftouter_join", OutputMode.Append(), () => {
-        val l = src().where($"event_type" === "click")
-          .select($"user_id".as("c_user"), $"event_id".as("click_id"),
-                  $"ts".as("c_ts"))
-          .withWatermark("c_ts", "10 minutes")
-        val r = src().where($"event_type" === "purchase")
-          .select($"user_id".as("p_user"), $"event_id".as("purchase_id"),
-                  $"ts".as("p_ts"))
-          .withWatermark("p_ts", "10 minutes")
-        l.join(r, $"c_user" === $"p_user" &&
-          $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("interval 10 minutes"),
-          "left_outer")
-      }))
+    // cut once; every layout replays the same chunk files
+    val events = Tbl.events(spark, sfDir)
+    val cut = Replay.chunks(events, chunks, col("ts"))
 
     val round = Bench.round
     val outPath = java.nio.file.Paths.get(f"STREAMBENCH_r$round%02d.json")
 
-    // one AvailableNow drain over whatever chunk files are currently
-    // visible in streamDir; returns (wall s, data batches)
-    def runPass(mk: () => DataFrame, mode: OutputMode, ckpt: String)
-        : (Double, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-      val t0 = System.nanoTime()
-      val q = mk().writeStream.format("noop")
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val wall = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress.filter(_.numInputRows > 0)
-      q.stop()
-      (wall, progress)
-    }
-
-    // SPARK_GRAFT_STREAM_RESTART=M (round-13 verdict item #3): measure
-    // the RECOVERY side of the snapshot-cadence dial. Pass 1 replays
-    // only the first M chunks (the rest are held back), building a
-    // checkpoint whose newest RocksDB artifact is a snapshot (small
-    // minDeltasForSnapshot) or a long changelog run (large). Pass 2
-    // restarts the SAME checkpoint over the released remainder; its
-    // FIRST batch pays store load — snapshot download + changelog
-    // replay — so firstBatch − medianSteadyBatch isolates recovery
-    // cost, comparable across SPARK_GRAFT_CONF cadence settings. The
-    // drain in pass 1 is graceful (AvailableNow), but the store-load
-    // path on restart is identical to post-SIGKILL recovery: both
-    // resume from the last committed version; a kill only adds the
-    // re-run of its one uncommitted batch (≈ the median batch wall).
-    val restartAt: Int =
-      sys.env.get("SPARK_GRAFT_STREAM_RESTART").map(_.toInt).getOrElse(0)
-    require(restartAt == 0 || (restartAt > 0 && restartAt < chunks),
-      s"SPARK_GRAFT_STREAM_RESTART=$restartAt must be in (0, $chunks)")
-    val heldDir = new java.io.File(streamDir + "_held")
-    def chunkFiles() = new java.io.File(streamDir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    def holdBack(): Unit = {
-      heldDir.mkdirs()
-      chunkFiles().drop(restartAt).foreach { f =>
-        // move preserves the staged mtime ordering the source replays by
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(heldDir, f.getName).toPath)
+    selected.foreach { layout =>
+      val replay = new Replay(spark, events.schema).hold(cut)
+      // one AvailableNow drain over the chunks released so far (wall s,
+      // data batches); each drain after the first is a restart
+      def pass(): (Double, Array[StreamingQueryProgress]) = {
+        val t0 = System.nanoTime()
+        val progress = replay.run(
+          layout.build(spark, () => replay.source)
+            .writeStream.format("noop").outputMode(layout.mode))
+        ((System.nanoTime() - t0) / 1e9, progress)
       }
-    }
-    def release(): Unit =
-      Option(heldDir.listFiles()).toSeq.flatten.foreach { f =>
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(streamDir, f.getName).toPath)
-      }
-
-    queries.foreach { case (name, mode, mk) =>
-      if (only.nonEmpty && !only(name)) ()
-      else {
-      val ckpt = Tbl.scratchDir(s"sb_$name")
       val (wall, progress, restartExtra) =
         if (restartAt == 0) {
-          val (w, p) = runPass(mk, mode, ckpt)
-          org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+          replay.release()
+          val (w, p) = pass()
           (w, p, "")
         } else {
-          holdBack()
-          val (w1, p1) = try runPass(mk, mode, ckpt) finally release()
-          // SPARK_GRAFT_STREAM_RESTART_SETTLE=N: keep the stores loaded
-          // N seconds after the drain so the maintenance thread gets a
-          // tick to UPLOAD the snapshot the last eligible commit only
-          // CREATED locally (checkpointMs on the snapshot batch). The
-          // first run of this experiment showed why the knob matters:
-          // without it, both minDeltas=10 and =100 replayed the
-          // identical full changelog run on restart (352 files) —
-          // snapshot CADENCE is inert until an upload actually lands,
-          // which a stop right after the snapshot-eligible batch (or a
-          // kill, in production) silently prevents.
-          sys.env.get("SPARK_GRAFT_STREAM_RESTART_SETTLE")
-            .map(_.toInt).filter(_ > 0).foreach(s => Thread.sleep(s * 1000L))
-          // SPARK_GRAFT_STREAM_RESTART_FLUSH=1: run the graceful-
-          // shutdown snapshot flush (StateStoreHygiene.maintainAll)
-          // before dropping the providers — the planned-restart
-          // deployment shape, vs the kill shape without it
-          if (sys.env.get("SPARK_GRAFT_STREAM_RESTART_FLUSH").contains("1"))
-            org.apache.spark.sql.graft.StateStoreHygiene.maintainAll()
-          // drop cached store instances so pass 2 pays a REAL store
-          // load from checkpoint files, not a warm in-memory reuse —
-          // without this the restart measures nothing (the provider
-          // cache would serve the exact RocksDB instances back)
-          org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
-          val (w2, p2) = runPass(mk, mode, ckpt)
-          org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+          // SPARK_GRAFT_STREAM_RESTART=M (round-13 verdict item #3):
+          // measure the RECOVERY side of the snapshot-cadence dial. Pass
+          // 1 replays only the first M chunks, building a checkpoint
+          // whose newest RocksDB artifact is a snapshot (small
+          // minDeltasForSnapshot) or a long changelog run (large). The
+          // drain stops the query and unloads its state stores, so pass
+          // 2 restarts the SAME checkpoint over the released remainder
+          // with a real store load — snapshot download + changelog
+          // replay — on its FIRST batch: firstBatch − medianSteadyBatch
+          // isolates recovery cost, comparable across SPARK_GRAFT_CONF
+          // cadence settings. That load path is the post-SIGKILL one:
+          // both resume from the last committed version; a kill only
+          // adds the re-run of its one uncommitted batch (≈ the median
+          // batch wall).
+          replay.release(restartAt)
+          val (w1, p1) = pass()
+          replay.release()
+          val (w2, p2) = pass()
           val b1 = batchMaps(p1)
           val b2 = batchMaps(p2)
           val steady1 = b1.drop(1).map(_("totalMs")).sorted
@@ -334,16 +308,14 @@ object StreamBench {
       // LOG-LIKE RocksDB degradation, expected and honest — its bounded
       // twin (dedup_wm) at the same volume is the flat deployment shape
       val rowsTotal = batches.map(_("rows")).sum
-      // tag: which experiment configuration produced this line (e.g.
-      // "baseline" vs "minDeltas100") — multiple runs append to one
-      // round artifact, so the line must carry its own provenance
-      // JSON-escaped: a quote/backslash/control char in an env-provided
-      // tag or conf value must not corrupt the JSONL line that
-      // cross-round consumers parse (round-13 ADVICE)
-      val tag = Bench.jstr(sys.env.getOrElse("SPARK_GRAFT_STREAM_TAG", "default"))
+      // conf: which experiment configuration produced this line —
+      // multiple runs append to one round artifact, so the line must
+      // carry its own provenance. JSON-escaped: a quote/backslash/
+      // control char in an env-provided conf value must not corrupt the
+      // JSONL line that cross-round consumers parse (round-13 ADVICE)
       val confStr = Bench.jstr(Session.show(conf))
       val line =
-        s"""{"query":"$name","tag":$tag,"conf":$confStr,"sf":${Bench.jstr(sfDir)},"chunks":$chunks,"rows_total":$rowsTotal,""" +
+        s"""{"query":"${layout.name}","conf":$confStr,"sf":${Bench.jstr(sfDir)},"chunks":$chunks,"rows_total":$rowsTotal,""" +
         restartExtra +
         s""""wall_s":$wall,"rows_per_s":${(rowsTotal / wall).toLong},""" +
         s""""growth_last_over_first":$growthJson,""" +
@@ -352,15 +324,13 @@ object StreamBench {
       java.nio.file.Files.write(outPath, (line + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-      }
     }
     spark.stop()
   }
 
   /** Per-batch metric map from a query's progress events (shared by the
     * normal replay and both passes of the restart experiment). */
-  private def batchMaps(
-      progress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress])
+  private def batchMaps(progress: Array[StreamingQueryProgress])
       : Array[Map[String, Long]] =
     progress.map { p =>
       val so = p.stateOperators.headOption
@@ -411,31 +381,4 @@ object StreamBench {
   private def batchesJson(bs: Array[Map[String, Long]]): String =
     bs.map(b => b.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")).mkString("[", ",", "]")
-
-  /** Cut the events table into `chunks` contiguous time ranges, one file
-    * each, mtimes strictly increasing in range order: the file stream
-    * source (which orders by modification time) then replays the corpus
-    * in event-time order, one chunk per micro-batch — so watermarks
-    * advance monotonically, exactly like a live feed. One pass:
-    * repartitionByRange assigns range i to partition i, whose output
-    * file sorts i-th by name. */
-  private def stageChunks(s: SparkSession, sfDir: String, chunks: Int): String = {
-    val stage = Tbl.scratchDir("sb_stage")
-    val dir = Tbl.scratchDir("sb_replay")
-    Tbl.events(s, sfDir)
-      .repartitionByRange(chunks, col("ts"))
-      .write.mode("overwrite").parquet(stage)
-    val parts = new java.io.File(stage).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    require(parts.length == chunks, s"expected $chunks chunk files, got ${parts.length}")
-    val base = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      val dst = new java.io.File(dir, f"chunk_$i%04d.parquet")
-      java.nio.file.Files.move(f.toPath, dst.toPath)
-      // mtime granularity is 1s on some filesystems: space by 2s
-      require(dst.setLastModified(base + i * 2000L), s"mtime set failed: $dst")
-    }
-    dir
-  }
 }

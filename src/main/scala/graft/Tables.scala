@@ -183,7 +183,4 @@ object Tbl {
 
   /** Exact integer representation of a 2-decimal double (money/metric). */
   def cents(c: Column): Column = round(c * 100).cast("long")
-
-  /** cents sum back to a rounded decimal — one final division, deterministic. */
-  def fromCents(c: Column): Column = round(c / 100.0, 2)
 }

@@ -32,15 +32,9 @@ object ScaleOps extends QueryModule {
     * size it to target-file-size at the deployment's per-partition
     * volume; the default 8 keeps local file counts trivial. */
   private[graft] def writeSalts(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.writeSalts") match {
-      case None => 8
-      case Some(v) =>
-        // fail with the value, not a NumberFormatException deep in
-        // planning; 0 would be a pmod by zero
-        v.trim.toIntOption.filter(_ > 0).getOrElse(
-          throw new IllegalArgumentException(
-            s"write salt knob must be a positive int, got '$v'"))
-    }
+    // positive: 0 would be a pmod by zero
+    s.conf.getOption("spark.graft.writeSalts")
+      .fold(8)(graft.Session.positiveInt("spark.graft.writeSalts", _))
 
   private[graft] def clusterForWrite(df: org.apache.spark.sql.DataFrame,
                                      pcol: String, idCol: String): DataFrame = {
@@ -70,19 +64,6 @@ object ScaleOps extends QueryModule {
 
   private val saltedJoinSql =
     graft.Oracles.eventsBySegment
-
-  /** Max-over-mean key multiplicity of `key` in `fact`, as x1000 — the
-    * single number `x_skew_profile` ships, reduced to a driver-side
-    * decision input. */
-  private[graft] def skewX1000(fact: DataFrame, key: String): Long = {
-    val r = fact.groupBy(col(key)).agg(count(lit(1)).as("cnt"))
-      .agg(max(col("cnt")).as("mx"), sum(col("cnt")).as("n"),
-           count(lit(1)).as("k"))
-      .head()
-    if (r.isNullAt(0)) return 1000L // empty fact: no skew evidence
-    val (mx, n, k) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    if (n == 0L || k == 0L || n / k == 0L) 1000L else mx * 1000L / (n / k)
-  }
 
   /** 1/ProbeSampleMod of the fact rows feed the skew probe; a key must
     * put ≥ ProbeMinSupport rows INTO THE SAMPLE (≈ mod×support ≥ 512

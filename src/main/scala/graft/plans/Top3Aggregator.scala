@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed `Aggregator` embodiment of A3 "latest 3 per key" (SURVEY.md
@@ -34,9 +34,4 @@ object Top3Aggregator {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     ExpressionEncoder[List[EvRow]]()
   }
-
-  /** Serializable product codec fallback if reflection encoding is
-    * unavailable — not used on the default path. */
-  private[plans] def kryoFallback: Encoder[List[EvRow]] =
-    Encoders.kryo[List[EvRow]]
 }

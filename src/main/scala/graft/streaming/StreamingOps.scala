@@ -2,10 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.{QueryModule, Tbl}
+import graft.{QueryModule, Session, Tbl}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, TimeMode}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.1/2.2/2.6/2.7), run to
@@ -74,11 +74,7 @@ object StreamingOps extends QueryModule {
         val aligned =
           if (tsNanos) base
           else base.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        aligned.coalesce(1).write.mode("overwrite").parquet(tmp)
-        new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException("sentinel part file missing"))
-          .toPath
+        Replay.writeFile(aligned, java.nio.file.Paths.get(tmp, "sentinel.parquet"))
       })
       Files.copy(src, dir.resolve("zz_sentinel.parquet"))
     }
@@ -208,11 +204,11 @@ object StreamingOps extends QueryModule {
       s.table(name)
     }
 
-  /** Start `writer` under `Trigger.AvailableNow` with a fresh checkpoint
-    * dir (`ckpt_<name>`), wait until it has drained its source, stop it.
-    * The only place this module starts a stream: [[runToTable]] hands it
-    * a memory/files sink, the sink-owning entries (s7, s9, s17, s33)
-    * their own writer.
+  /** Run `writer` to completion on a fresh checkpoint dir
+    * (`ckpt_<name>`) through the one bounded-stream start,
+    * [[Replay.drain]]. The only place this module starts a stream:
+    * [[runToTable]] hands it a memory/files sink, the sink-owning
+    * entries (s7, s9, s17, s33) their own writer.
     *
     * `flushFinal`: whether the bounded run still needs the terminal
     * NO-DATA micro-batch. That batch re-runs the full stateful DAG on
@@ -254,16 +250,8 @@ object StreamingOps extends QueryModule {
     lastCheckpointDir = ckpt
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val q = writer
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    // release this run's provider instances (maps/RocksDB handles) now
-    // instead of leaving them for the maintenance pass to walk
-    org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+    try Replay.drain(writer, ckpt)
+    finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Stateful streams pay a per-(partition × store instance × batch)
@@ -287,14 +275,7 @@ object StreamingOps extends QueryModule {
   private def statePartitions(s: SparkSession): Int =
     s.conf.getOption("spark.graft.statePartitions") match {
       case None => math.min(16, s.sparkContext.defaultParallelism)
-      case Some(v) =>
-        // fail with the offending value, not a bare NumberFormatException
-        // five stack frames into stream planning
-        val n = v.trim.toIntOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"state partition knob must be a positive int, got '$v'"))
-        require(n > 0, s"state partition knob must be positive, got $n")
-        n
+      case Some(v) => Session.positiveInt("spark.graft.statePartitions", v)
     }
 
   /** A1+A2 streaming: watermarked sliding-window kinematic smoothing in
@@ -669,12 +650,7 @@ object StreamingOps extends QueryModule {
     * timestamp is second-granular, so ties are real and must be broken
     * identically on both engines. */
   private val chainedFlagshipSql = {
-    val lon = "(100.0 + (user_id % 30) + (event_id % 100) / 100.0)"
-    val lat = "((event_id % 30) + (user_id % 100) / 100.0)"
-    val e2 = "((1.0/298.257223563) * (2.0 - 1.0/298.257223563))"
-    def rad(x: String) = s"($x * pi() / 180.0)"
-    def n(latS: String) =
-      s"(6378137.0 / sqrt(1.0 - $e2 * sin(${rad(latS)}) * sin(${rad(latS)})))"
+    import graft.Oracles.{ecefXS, ecefYS, latS, lonS}
     s"""WITH f AS (
        |  SELECT CAST(user_id AS INT) AS mmsi,
        |    epoch_us(strptime(strftime(ts, '%Y-%m-%d %H:%M:%SZ'),
@@ -683,10 +659,10 @@ object StreamingOps extends QueryModule {
        |    CAST(event_id % 360 AS DOUBLE) AS course_over_ground,
        |    ((value / 4.733) * (value / 4.733)) AS rot_raw,
        |    lon AS longitude, lat AS latitude,
-       |    (${n("lat")} + 124.0) * cos(${rad("lat")}) * cos(${rad("lon")}) AS cx_raw,
-       |    (${n("lat")} + 124.0) * cos(${rad("lat")}) * sin(${rad("lon")}) AS cy_raw
+       |    ${ecefXS("lon", "lat")} AS cx_raw,
+       |    ${ecefYS("lon", "lat")} AS cy_raw
        |  FROM (SELECT user_id, ts, value, event_id,
-       |               $lon AS lon, $lat AS lat FROM events)
+       |               $lonS AS lon, $latS AS lat FROM events)
        |  WHERE lat > 7 AND lat < 23 AND lon > 105 AND lon < 123),
        |r AS (
        |  SELECT *, row_number() OVER (PARTITION BY mmsi
@@ -1530,20 +1506,15 @@ object StreamingOps extends QueryModule {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   private val aisPreprocessSql = {
-    val lon = "(100.0 + (user_id % 30) + (event_id % 100) / 100.0)"
-    val lat = "((event_id % 30) + (user_id % 100) / 100.0)"
-    val e2 = "((1.0/298.257223563) * (2.0 - 1.0/298.257223563))"
-    def rad(x: String) = s"($x * pi() / 180.0)"
-    def n(latS: String) =
-      s"(6378137.0 / sqrt(1.0 - $e2 * sin(${rad(latS)}) * sin(${rad(latS)})))"
+    import graft.Oracles.{ecefXS, ecefYS, latS, lonS}
     s"""SELECT CAST(user_id AS INT) AS mmsi,
        |  strptime(strftime(ts, '%Y-%m-%d %H:%M:%SZ'), '%Y-%m-%d %H:%M:%SZ') AS timestamp_utc,
        |  value AS speed_over_ground,
        |  floor(((value / 4.733) * (value / 4.733)) * 1000000.0) / 1000000.0 AS rate_of_turn,
        |  lon AS longitude, lat AS latitude,
-       |  round((${n("lat")} + 124.0) * cos(${rad("lat")}) * cos(${rad("lon")}), 2) AS cartesian_x,
-       |  round((${n("lat")} + 124.0) * cos(${rad("lat")}) * sin(${rad("lon")}), 2) AS cartesian_y
-       |FROM (SELECT user_id, ts, value, event_id, $lon AS lon, $lat AS lat FROM events)
+       |  round(${ecefXS("lon", "lat")}, 2) AS cartesian_x,
+       |  round(${ecefYS("lon", "lat")}, 2) AS cartesian_y
+       |FROM (SELECT user_id, ts, value, event_id, $lonS AS lon, $latS AS lat FROM events)
        |WHERE lat > 7 AND lat < 23 AND lon > 105 AND lon < 123
        |ORDER BY mmsi, timestamp_utc, longitude, latitude, speed_over_ground""".stripMargin
   }

@@ -1,52 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProvider}
+import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** `StateStore.unloadAll()` is `private[sql]`; this shim exposes it to
   * the engine's throwaway-stream harness. Stopped AvailableNow queries
   * otherwise leave their provider instances (in-memory maps / RocksDB
   * handles) loaded for the background maintenance pass to walk — pure
-  * overhead for checkpoints that are never resumed.
+  * overhead once the run is over; a restart on the same checkpoint
+  * loads its state from the checkpoint files.
   */
 object StateStoreHygiene {
   def unloadAll(): Unit = StateStore.unloadAll()
-
-  /** One SYNCHRONOUS maintenance pass over every loaded provider — the
-    * graceful-shutdown snapshot flush.
-    *
-    * Round-14 finding (StreamBench restart experiment, SURVEY §16):
-    * with RocksDB changelog checkpointing, `commit()` only CREATES a
-    * native snapshot (`checkpointMs` on the snapshot-eligible batch);
-    * the ZIP UPLOAD happens in the background maintenance tick, which
-    * (a) starves under back-to-back micro-batches — it must win the
-    * store-instance lock against the hot commit path, and a loaded
-    * replay never idles — and (b) is deactivated at query stop before
-    * it can run. Net effect measured at 200M rows: only the version-1
-    * snapshot ever uploads, so EVERY restart replays the full
-    * changelog run (11 versions × 32 instances = +34-44 s on a ~9 s
-    * batch) regardless of `minDeltasForSnapshot`. Calling this between
-    * `query.stop()` and `unloadAll()` lets each provider upload its
-    * last created-but-pending snapshot, making planned restarts O(last
-    * partial changelog) instead of O(everything since the last lucky
-    * upload). `loadedProviders` is object-private, hence reflection;
-    * `doMaintenance()` itself is public API.
-    *
-    * CONSTRAINT (round-14 ADVICE #4): call ONLY after `query.stop()`
-    * and before `unloadAll()`. This runs `doMaintenance()` on the
-    * caller thread without coordinating with StateStore's background
-    * maintenance pool (which serializes maintenance per provider); on
-    * a LIVE query a concurrently firing maintenance tick could attempt
-    * a duplicate snapshot upload of the same version. Post-stop the
-    * tick is deactivated for these providers, so the window is closed.
-    */
-  def maintainAll(): Unit = {
-    val f = StateStore.getClass.getDeclaredField("loadedProviders")
-    f.setAccessible(true)
-    val providers = f.get(StateStore)
-      .asInstanceOf[scala.collection.mutable.HashMap[_, StateStoreProvider]]
-    // snapshot the values under the map's own lock (StateStore
-    // synchronizes on loadedProviders), run maintenance outside it
-    val ps = providers.synchronized { providers.values.toList }
-    ps.foreach(_.doMaintenance())
-  }
 }

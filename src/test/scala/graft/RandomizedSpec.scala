@@ -34,13 +34,8 @@ class RandomizedSpec extends SparkSpec {
     // single FILE named events.parquet, mirroring the driver layout —
     // the streaming file source symlinks this exact path and must not
     // meet a nested directory there
-    val tmp = Tbl.scratchDir("rand_stage")
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(fail("no part file written"))
-    java.nio.file.Files.move(part.toPath,
+    graft.streaming.Replay.writeFile(
+      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       java.nio.file.Paths.get(s"$dir/events.parquet"))
     dir
   }
@@ -58,13 +53,8 @@ class RandomizedSpec extends SparkSpec {
     }
     // single-file staging, like randomEventsDir: the document stream
     // symlinks this exact path
-    val tmp = Tbl.scratchDir("rand_doc_stage")
-    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(fail("no part file written"))
-    java.nio.file.Files.move(part.toPath,
+    graft.streaming.Replay.writeFile(
+      rows.toDF("doc_id", "text", "lang", "source", "n_chars"),
       java.nio.file.Paths.get(s"$dir/documents.parquet"))
     dir
   }

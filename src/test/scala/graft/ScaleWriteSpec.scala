@@ -62,7 +62,7 @@ class ScaleWriteSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException] {
         graft.operators.ScaleOps.clusterForWrite(df, "p", "event_id")
       }
-      assert(e.getMessage == s"write salt knob must be a positive int, got '$v'")
+      assert(e.getMessage == s"spark.graft.writeSalts '$v' is not a positive integer")
     } finally prev match {
       case Some(p) => spark.conf.set("spark.graft.writeSalts", p)
       case None => spark.conf.unset("spark.graft.writeSalts")

@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.Replay
 import graft.streaming.StatefulOps._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
@@ -139,21 +140,15 @@ class StatefulOpsSpec extends SparkSpec {
     graft.streaming.StreamingOps.configureStreaming(spark)
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDBStateStoreProvider"))
-    val srcDir = java.nio.file.Files.createTempDirectory("state_restart_src").toString
-    val ck = java.nio.file.Files.createTempDirectory("state_restart_ck").toString
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("user", LongType)))
+    val replay = new Replay(spark, schema)
     def stage(ids: Seq[Long]): Unit =
-      ids.toDF("id").withColumn("user", lit(7L)).coalesce(1)
-        .write.mode("append").parquet(srcDir)
+      replay.stage(ids.toDF("id").withColumn("user", lit(7L)))
     def run(name: String): (Long, Long) = {
-      val q = spark.readStream.schema(schema).parquet(srcDir)
+      replay.run(replay.source
         .groupBy($"user").agg(count(lit(1)).as("n"), sum($"id").as("s"))
-        .writeStream.format("memory").queryName(name).outputMode("complete")
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .writeStream.format("memory").queryName(name).outputMode("complete"))
       val r = spark.table(name).head
       (r.getAs[Long]("n"), r.getAs[Long]("s"))
     }
@@ -177,17 +172,15 @@ class StatefulOpsSpec extends SparkSpec {
     graft.streaming.StreamingOps.configureStreaming(spark)
     // outer-null flush happens in the terminal no-data batch
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val srcDir = java.nio.file.Files.createTempDirectory("oj_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("oj_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("oj_restart_ck").toString
+    val outDir = Tbl.scratchDir("oj_restart_out")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("user", LongType),
       StructField("typ", StringType), StructField("ts_s", LongType)))
+    val replay = new Replay(spark, schema)
     def stage(rows: Seq[(Long, Long, String, Long)]): Unit =
-      rows.toDF("id", "user", "typ", "ts_s").coalesce(1)
-        .write.mode("append").parquet(srcDir)
+      replay.stage(rows.toDF("id", "user", "typ", "ts_s"))
     def run(): Unit = {
-      val base = spark.readStream.schema(schema).parquet(srcDir)
+      val base = replay.source
         .withColumn("ts", timestamp_seconds($"ts_s"))
       val clicks = base.withWatermark("ts", "10 minutes")
         .where($"typ" === "click")
@@ -200,11 +193,8 @@ class StatefulOpsSpec extends SparkSpec {
         $"p_ts" >= $"c_ts" && $"p_ts" <= $"c_ts" + expr("INTERVAL 10 MINUTES"),
         "left_outer")
         .select($"c_user", $"click_id", $"purchase_id")
-      val q = joined.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+      replay.run(joined.writeStream.format("parquet")
+        .option("path", outDir).outputMode("append"))
     }
     // run 1: three clicks, one purchase matching click 1 (emits eagerly);
     // clicks 2 and 3 remain pending in join state
@@ -240,17 +230,15 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val srcDir = java.nio.file.Files.createTempDirectory("asof_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("asof_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("asof_restart_ck").toString
+    val outDir = Tbl.scratchDir("asof_restart_out")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("user", LongType),
       StructField("typ", StringType), StructField("ts_s", LongType)))
+    val replay = new Replay(spark, schema)
     def stage(rows: Seq[(Long, Long, String, Long)]): Unit =
-      rows.toDF("id", "user", "typ", "ts_s").coalesce(1)
-        .write.mode("append").parquet(srcDir)
+      replay.stage(rows.toDF("id", "user", "typ", "ts_s"))
     def run(): Unit = {
-      val base = spark.readStream.schema(schema).parquet(srcDir)
+      val base = replay.source
         .withColumn("ts", timestamp_seconds($"ts_s"))
       val clicks = base.withWatermark("ts", "10 minutes")
         .where($"typ" === "click")
@@ -264,11 +252,8 @@ class StatefulOpsSpec extends SparkSpec {
         .groupBy($"p_user", $"purchase_id", $"p_ts")
         .agg(max_by($"click_id", struct($"c_ts", $"click_id")).as("asof_click_id"),
              max($"c_ts").as("asof_c_ts"))
-      val q = asof.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+      replay.run(asof.writeStream.format("parquet")
+        .option("path", outDir).outputMode("append"))
     }
     // run 1: two clicks then the purchase — joined rows enter the agg,
     // nothing finalizes (watermark stays behind p_ts)
@@ -299,17 +284,15 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val srcDir = java.nio.file.Files.createTempDirectory("ca_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("ca_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("ca_restart_ck").toString
+    val outDir = Tbl.scratchDir("ca_restart_out")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("user", LongType),
       StructField("ts_s", LongType)))
+    val replay = new Replay(spark, schema)
     def stage(rows: Seq[(Long, Long, Long)]): Unit =
-      rows.toDF("id", "user", "ts_s").coalesce(1)
-        .write.mode("append").parquet(srcDir)
+      replay.stage(rows.toDF("id", "user", "ts_s"))
     def run(): Unit = {
-      val agg1 = spark.readStream.schema(schema).parquet(srcDir)
+      val agg1 = replay.source
         .withColumn("ts", timestamp_seconds($"ts_s"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window($"ts", "1 minute"), $"user")
@@ -319,11 +302,8 @@ class StatefulOpsSpec extends SparkSpec {
         .agg(sum($"n1").as("n_events"), count(lit(1)).as("n_user_windows"))
         .select(unix_micros($"window.start").as("ws_us"),
                 $"n_events", $"n_user_windows")
-      val q = agg2.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+      replay.run(agg2.writeStream.format("parquet")
+        .option("path", outDir).outputMode("append"))
     }
     // run 1: 3 events in 3 distinct 1-minute windows, same 5-minute
     // window [0, 300) — watermark (130-600 s) closes nothing
@@ -351,31 +331,26 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("tws_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("tws_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("tws_restart_ck").toString
+    val outDir = Tbl.scratchDir("tws_restart_out")
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts_us", LongType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
-    def stage(rows: Seq[Ev]): Unit =
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, schema)
+    def stage(rows: Seq[Ev]): Unit = replay.stage(rows.toDF())
     // memory sinks refuse checkpoint recovery, so each batch lands in a
     // parquet dir through foreachBatch (itself a recovery-capable sink)
     def run(): Unit = {
-      val out = spark.readStream.schema(schema).parquet(srcDir)
+      val out = replay.source
         .select(col("event_id"), col("ts_us"), col("user_id"), col("value"))
         .as[Ev]
         .groupByKey(_.user_id)
         .transformWithState(new RunningTotals,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      val q = out.toDF().writeStream
+      replay.run(out.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("update").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("update"))
     }
     def emitted(): Set[(Long, Long, Long)] =
       spark.read.parquet(outDir).as[RunRow].collect()
@@ -401,29 +376,24 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("fmgws_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("fmgws_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("fmgws_restart_ck").toString
+    val outDir = Tbl.scratchDir("fmgws_restart_out")
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts_us", LongType),
       StructField("user_id", LongType), StructField("value", DoubleType)))
-    def stage(rows: Seq[Ev]): Unit =
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, schema)
+    def stage(rows: Seq[Ev]): Unit = replay.stage(rows.toDF())
     def run(): Unit = {
-      val out = spark.readStream.schema(schema).parquet(srcDir)
+      val out = replay.source
         .select(col("event_id"), col("ts_us"), col("user_id"), col("value"))
         .as[Ev]
         .groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Update,
           GroupStateTimeout.NoTimeout)(last3PerKey _)
-      val q = out.toDF().writeStream
+      replay.run(out.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("update").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("update"))
     }
     def emitted(): Set[(Int, Long)] =
       spark.read.parquet(outDir).as[Ranked].collect()
@@ -453,19 +423,17 @@ class StatefulOpsSpec extends SparkSpec {
     // the fire happens in a terminal NO-DATA batch (watermark advanced
     // by run 2's last data batch) — keep those enabled
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val srcDir = java.nio.file.Files.createTempDirectory("timer_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("timer_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("timer_restart_ck").toString
+    val outDir = Tbl.scratchDir("timer_restart_out")
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("ts_us", LongType), StructField("user_id", LongType),
       StructField("value", DoubleType)))
     def tev(id: Long, tsS: Long, user: Long, v: Double) =
       TEv(id, new java.sql.Timestamp(tsS * 1000L), tsS * 1000000L, user, v)
-    def stage(rows: Seq[TEv]): Unit =
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, schema)
+    def stage(rows: Seq[TEv]): Unit = replay.stage(rows.toDF())
     def run(): Unit = {
-      val out = spark.readStream.schema(schema).parquet(srcDir)
+      val out = replay.source
         .withWatermark("ts", "0 seconds")
         .select(col("event_id"), col("ts"), col("ts_us"), col("user_id"), col("value"))
         .as[TEv]
@@ -473,14 +441,11 @@ class StatefulOpsSpec extends SparkSpec {
         .transformWithState(new TimerSessions(1800000000L),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           OutputMode.Append())
-      val q = out.toDF().writeStream
+      replay.run(out.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("append").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("append"))
     }
     def emitted(): Set[(Long, Long, Long, Long)] =
       spark.read.parquet(outDir).as[SessRow].collect()
@@ -510,18 +475,16 @@ class StatefulOpsSpec extends SparkSpec {
     graft.streaming.StreamingOps.configureStreaming(spark)
     val R = 4000L; val C = 2 * R
     val TRadUs = 1800L * 1000000L; val BucketUs = 2 * TRadUs
-    val srcDir = java.nio.file.Files.createTempDirectory("sp_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("sp_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("sp_restart_ck").toString
+    val outDir = Tbl.scratchDir("sp_restart_out")
     val schema = StructType(Seq(
       StructField("id", LongType), StructField("user", LongType),
       StructField("lon_m", LongType), StructField("lat_m", LongType),
       StructField("ts_s", LongType)))
+    val replay = new Replay(spark, schema)
     def stage(rows: Seq[(Long, Long, Long, Long, Long)]): Unit =
-      rows.toDF("id", "user", "lon_m", "lat_m", "ts_s").coalesce(1)
-        .write.mode("append").parquet(srcDir)
+      replay.stage(rows.toDF("id", "user", "lon_m", "lat_m", "ts_s"))
     def run(): Unit = {
-      val pts = spark.readStream.schema(schema).parquet(srcDir)
+      val pts = replay.source
         .withColumn("ts", timestamp_seconds($"ts_s"))
       val corners = array_distinct(array(
         (for (sx <- Seq(-R, R); sy <- Seq(-R, R); st <- Seq(-TRadUs, TRadUs)) yield
@@ -550,11 +513,8 @@ class StatefulOpsSpec extends SparkSpec {
           ($"lat_a" - $"lat_b") * ($"lat_a" - $"lat_b"))
         .where($"d2" < R * R)
         .select($"event_a", $"event_b", $"d2")
-      val q = joined.writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ck)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+      replay.run(joined.writeStream.format("parquet")
+        .option("path", outDir).outputMode("append"))
     }
     stage(Seq((1L, 1L, 1000L, 1000L, 1000L)))
     run()
@@ -579,32 +539,25 @@ class StatefulOpsSpec extends SparkSpec {
     // round-trip, and the flatMapGroupsWithState store together.
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("chain_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("chain_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("chain_restart_ck").toString
+    val outDir = Tbl.scratchDir("chain_restart_out")
     // the raw AIS wire shape (inside the W1 bbox: lat 7-23, lon 105-123)
     def envlp(t: String, sog: Double): String =
       s"""{"timestamp_utc":"$t","mmsi":7,"position":"POINT (110.0 15.0)",""" +
       s""""speed_over_ground":$sog,"course_over_ground":45.0,""" +
       s""""rate_of_turn":2.0,"message_type":1}"""
-    def stage(rows: Seq[String]): Unit =
-      rows.toDF("value").coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, StructType(Seq(StructField("value", StringType))))
+    def stage(rows: Seq[String]): Unit = replay.stage(rows.toDF("value"))
     def run(): Unit = {
-      val raw = spark.readStream
-        .schema(StructType(Seq(StructField("value", StringType))))
-        .parquet(srcDir)
+      val raw = replay.source
       // job 1 → wire → job 2, exactly the s34 plan
       val features = graft.streaming.AisPipeline.preprocess(raw)
       val ranked = graft.streaming.StreamingOps.chainedJob2(
         features.select(graft.streaming.AisPipeline.toJsonEnvelope(features)))
-      val q = ranked.toDF().writeStream
+      replay.run(ranked.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("update").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("update"))
     }
     def emitted(): Set[(Int, Double)] =
       spark.read.parquet(outDir).as[RankedFeat].collect()
@@ -632,29 +585,24 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
     import graft.streaming.StatefulOps.{StreamingBitmapWord, TypeWordBit, WordRow}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("bm_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("bm_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("bm_restart_ck").toString
+    val outDir = Tbl.scratchDir("bm_restart_out")
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("w", LongType),
       StructField("bit", IntegerType)))
-    def stage(rows: Seq[TypeWordBit]): Unit =
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, schema)
+    def stage(rows: Seq[TypeWordBit]): Unit = replay.stage(rows.toDF())
     def run(): Unit = {
-      val out = spark.readStream.schema(schema).parquet(srcDir)
+      val out = replay.source
         .select(col("event_type"), col("w"), col("bit"))
         .as[TypeWordBit]
         .groupByKey(x => (x.event_type, x.w))
         .transformWithState(new StreamingBitmapWord,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      val q = out.toDF().writeStream
+      replay.run(out.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("update").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("update"))
     }
     stage(Seq(TypeWordBit("click", 0L, 1), TypeWordBit("click", 0L, 63)))
     run()
@@ -686,16 +634,14 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     import graft.streaming.StatefulOps.{First3PerType, First3Row, TypeEv}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("ls_restart_src").toString
-    val outDir = java.nio.file.Files.createTempDirectory("ls_restart_out").toString
-    val ck = java.nio.file.Files.createTempDirectory("ls_restart_ck").toString
+    val outDir = Tbl.scratchDir("ls_restart_out")
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("event_id", LongType),
       StructField("ts_us", LongType), StructField("value", DoubleType)))
-    def stage(rows: Seq[TypeEv]): Unit =
-      rows.toDF().coalesce(1).write.mode("append").parquet(srcDir)
+    val replay = new Replay(spark, schema)
+    def stage(rows: Seq[TypeEv]): Unit = replay.stage(rows.toDF())
     def run(): Unit = {
-      val out = spark.readStream.schema(schema).parquet(srcDir)
+      val out = replay.source
         .select(col("event_type"), col("event_id"), col("ts_us"), col("value"))
         .as[TypeEv]
         // salt pinned to 0: this spec pins SINGLE-list displacement and
@@ -704,14 +650,11 @@ class StatefulOpsSpec extends SparkSpec {
         .groupByKey(e => (e.event_type, 0))
         .transformWithState(new First3PerType,
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-      val q = out.toDF().writeStream
+      replay.run(out.toDF().writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           batch.write.mode("append").parquet(outDir)
         }
-        .outputMode("update").option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      q.stop()
+        .outputMode("update"))
     }
     // run 1: arrival order deliberately != event-time order
     stage(Seq(TypeEv("click", 5L, 500L, 5.0), TypeEv("click", 1L, 100L, 1.0),
@@ -1087,12 +1030,12 @@ class StatefulOpsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       withStatePartitionConf("four") { runEntry("s2_stream_last3") }
     }
-    assert(e.getMessage.contains("must be a positive int, got 'four'"))
+    assert(e.getMessage.contains("spark.graft.statePartitions 'four' is not a positive integer"))
     assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
     val z = intercept[IllegalArgumentException] {
       withStatePartitionConf("0") { runEntry("s2_stream_last3") }
     }
-    assert(z.getMessage.contains("must be positive, got 0"))
+    assert(z.getMessage.contains("spark.graft.statePartitions '0' is not a positive integer"))
     assert(spark.conf.get("spark.sql.shuffle.partitions") == shufflePrev)
   }
 
