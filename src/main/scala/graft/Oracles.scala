@@ -20,6 +20,8 @@ object Oracles {
     s"((${nS(lat)} + 124.0) * cos(${radS(lat)}) * cos(${radS(lon)}))"
   def ecefYS(lon: String, lat: String): String =
     s"((${nS(lat)} + 124.0) * cos(${radS(lat)}) * sin(${radS(lon)}))"
+  /** AIS rate-of-turn decode, `(x / 4.733)²` (`GeoFunctions.rotDecode`). */
+  def rotS(x: String): String = s"(($x / 4.733) * ($x / 4.733))"
 
   /** Latest-3-per-key ranking (a3_top3_per_key / s2_stream_last3 /
     * x_topk_aggregator). */
@@ -59,7 +61,7 @@ object Oracles {
        |       user_id,
        |       CAST(sum(CAST(round(value*100) AS BIGINT)) * 10000 // count(*) AS BIGINT)/1000000.0 AS moving_avg,
        |       CAST(CAST(sum(cog) AS HUGEINT) * 1000000 // count(*) AS BIGINT)/1000000.0 AS moving_avg_cog,
-       |       CAST(sum(CAST(round(((value/4.733)*(value/4.733))*1000000.0) AS BIGINT)) // count(*) AS BIGINT)/1000000.0 AS moving_avg_rot,
+       |       CAST(sum(CAST(round(${rotS("value")}*1000000.0) AS BIGINT)) // count(*) AS BIGINT)/1000000.0 AS moving_avg_rot,
        |       arg_max(value, printf('%020d|%019d', epoch_us(ts) + 4611686018427387904, event_id)) AS last_value,
        |       arg_max(lon, printf('%020d|%019d', epoch_us(ts) + 4611686018427387904, event_id)) AS last_lon,
        |       arg_max(lat, printf('%020d|%019d', epoch_us(ts) + 4611686018427387904, event_id)) AS last_lat,

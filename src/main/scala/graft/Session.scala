@@ -43,6 +43,19 @@ object Session {
   def show(conf: Seq[(String, String)]): String =
     conf.map { case (k, v) => s"$k=$v" }.mkString(";")
 
+  /** Runs `body` with each `k -> v` set on `s`'s runtime conf, then
+    * restores each key's prior value, or unsets a key that had none.
+    * The scope is session-wide: the engine runs one query at a time on
+    * a session (Verify and Bench both do), so nothing else sees it; a
+    * multi-tenant session would need the setting pinned per plan. */
+  def withConf[T](s: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prior.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+  }
+
   def local(cpus: Int = Session.cpus,
             extraConf: Seq[(String, String)] = Nil): SparkSession =
     extraConf.foldLeft(SparkSession.builder()

@@ -39,15 +39,15 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * Every query runs with the engine's optimizer extensions live
-    * (currently the rank-limit → native-top-K lowering): the driver
+    * Every query runs with the engine's extensions live (the rank-limit
+    * → native-top-K lowering and the native SQL functions): the driver
     * constructs its own SparkSession without `spark.sql.extensions`,
-    * so the session is enrolled imperatively here — one line, every
-    * entry point, no per-query opt-in. */
+    * so the session is enrolled here — one line, every entry point, no
+    * per-query opt-in. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     modules.flatMap(_.queries).toMap.map { case (name, fn) =>
       name -> { (s: SparkSession, d: String) =>
-        org.apache.spark.sql.graft.RankLimitToTopK.ensureRegistered(s)
+        org.apache.spark.sql.graft.GraftExtensions.install(s)
         fn(s, d)
       }
     }

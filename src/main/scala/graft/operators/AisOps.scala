@@ -84,8 +84,8 @@ object AisOps extends QueryModule {
   }
 
   private val rotDecodeSql =
-    """SELECT event_id, value,
-      |  floor(((value / 4.733) * (value / 4.733)) * 1000000.0) / 1000000.0 AS rot_deg_min
+    s"""SELECT event_id, value,
+      |  floor(${graft.Oracles.rotS("value")} * 1000000.0) / 1000000.0 AS rot_deg_min
       |FROM events ORDER BY event_id""".stripMargin
 
   /** F4: inverse-affine raster transform to pixel coords (quarter-degree

@@ -349,15 +349,8 @@ object DedupOps extends QueryModule {
     // to that volume, not the session default — the same
     // measure-then-size lesson as the streaming state knob. Restored
     // after the loop; at a 100 TB pair graph raise it with the graph.
-    // SINGLE-THREADED assumption (documented per round-4 ADVICE): the
-    // engine contract runs queries sequentially on the session
-    // (Verify/Bench both do), so the scoped session-conf override cannot
-    // race; a multi-tenant session would need the partition count pinned
-    // per-plan (repartition) instead.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try dupClustersLoop(s, pairs)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    graft.Session.withConf(s, "spark.sql.shuffle.partitions" -> "4")(
+      dupClustersLoop(s, pairs))
   }
 
   /** `private[graft]` so the randomized suite can drive it with planted

@@ -769,22 +769,13 @@ object ScaleOps extends QueryModule {
     * side always eligible, broadcast off (the injection targets
     * shuffle joins — a broadcast join already prunes at the probe).
     * `build` constructs the plan and `use` must EXECUTE it before this
-    * returns; confs are restored in finally. */
+    * returns; `Session.withConf` restores the confs. */
   private[graft] def withRuntimeFilterConf[T](s: SparkSession)
-      (build: => DataFrame)(use: DataFrame => T): T = {
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val old = keys.map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set(keys(0), "true")
-      s.conf.set(keys(1), "0")
-      s.conf.set(keys(2), "-1")
-      use(build)
-    } finally old.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
-  }
+      (build: => DataFrame)(use: DataFrame => T): T =
+    graft.Session.withConf(s,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(use(build))
 
   private val runtimeFilterSql =
     """SELECT c.c_nationkey, count(*) AS n_orders,

@@ -740,11 +740,9 @@ object TextOps extends QueryModule {
     // pair aggs are alphabet²-sized: run the loop's shuffles at a
     // partition count sized to that, not the session default (same
     // scoped override + single-threaded-engine assumption as
-    // dupClusters; restored in finally)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try bpeMergesLoop(s, docs, k)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // dupClusters)
+    graft.Session.withConf(s, "spark.sql.shuffle.partitions" -> "4")(
+      bpeMergesLoop(s, docs, k))
   }
 
   private def bpeMergesLoop(s: SparkSession, docs: DataFrame,
@@ -985,8 +983,8 @@ object TextOps extends QueryModule {
     * input partition), the 8-row query relation and 1-row (N, T) totals
     * are broadcast, and the only per-match exchange carries (qid, term,
     * doc_id) triples for documents actually containing a query term.
-    * Final top-10-per-qid is the rank≤k window the RankLimitToTopK rule
-    * rewrites to the native bounded-heap exec — no global sort. */
+    * Final top-10-per-qid is the rank≤k window TopKPerKeyStrategy
+    * lowers to the native bounded-heap exec — no global sort. */
   private def bm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // ONE token-stream scan, reduced to the (doc_id, term, c) posting

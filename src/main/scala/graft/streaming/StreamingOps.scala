@@ -248,10 +248,8 @@ object StreamingOps extends QueryModule {
                "false")
     val ckpt = Tbl.scratchDir(s"ckpt_$name")
     lastCheckpointDir = ckpt
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try Replay.drain(writer, ckpt)
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    Session.withConf(s, "spark.sql.shuffle.partitions" -> parts.toString)(
+      Replay.drain(writer, ckpt))
   }
 
   /** Stateful streams pay a per-(partition × store instance × batch)
@@ -650,14 +648,14 @@ object StreamingOps extends QueryModule {
     * timestamp is second-granular, so ties are real and must be broken
     * identically on both engines. */
   private val chainedFlagshipSql = {
-    import graft.Oracles.{ecefXS, ecefYS, latS, lonS}
+    import graft.Oracles.{ecefXS, ecefYS, latS, lonS, rotS}
     s"""WITH f AS (
        |  SELECT CAST(user_id AS INT) AS mmsi,
        |    epoch_us(strptime(strftime(ts, '%Y-%m-%d %H:%M:%SZ'),
        |                      '%Y-%m-%d %H:%M:%SZ')) AS ts_us,
        |    value AS speed_over_ground,
        |    CAST(event_id % 360 AS DOUBLE) AS course_over_ground,
-       |    ((value / 4.733) * (value / 4.733)) AS rot_raw,
+       |    ${rotS("value")} AS rot_raw,
        |    lon AS longitude, lat AS latitude,
        |    ${ecefXS("lon", "lat")} AS cx_raw,
        |    ${ecefYS("lon", "lat")} AS cy_raw
@@ -1506,11 +1504,11 @@ object StreamingOps extends QueryModule {
       |GROUP BY event_type ORDER BY event_type""".stripMargin
 
   private val aisPreprocessSql = {
-    import graft.Oracles.{ecefXS, ecefYS, latS, lonS}
+    import graft.Oracles.{ecefXS, ecefYS, latS, lonS, rotS}
     s"""SELECT CAST(user_id AS INT) AS mmsi,
        |  strptime(strftime(ts, '%Y-%m-%d %H:%M:%SZ'), '%Y-%m-%d %H:%M:%SZ') AS timestamp_utc,
        |  value AS speed_over_ground,
-       |  floor(((value / 4.733) * (value / 4.733)) * 1000000.0) / 1000000.0 AS rate_of_turn,
+       |  floor(${rotS("value")} * 1000000.0) / 1000000.0 AS rate_of_turn,
        |  lon AS longitude, lat AS latitude,
        |  round(${ecefXS("lon", "lat")}, 2) AS cartesian_x,
        |  round(${ecefYS("lon", "lat")}, 2) AS cartesian_y

@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -103,10 +103,6 @@ object AvroEnvelope {
 
   def fromAvroEnvelope(bin: Column): Column =
     ExpressionUtils.column(AvroDecodeEnvelope(ExpressionUtils.expression(bin)))
-
-  /** SQL-name registration for sessions not built with GraftExtensions. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    NativeFunctions.register(spark, encodeName, decodeName)
 }
 
 /** (long, long, long, string, double) → Avro-binary envelope. */

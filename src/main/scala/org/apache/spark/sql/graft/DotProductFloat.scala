@@ -1,11 +1,7 @@
 package org.apache.spark.sql.graft
 
-import scala.reflect.{ClassTag, classTag}
-
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -75,54 +71,4 @@ object DotProductFloat {
   def dotF(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProductFloat(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** SQL-name registration for sessions not built with
-    * [[GraftExtensions]] (the driver constructs its own SparkSession). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    NativeFunctions.register(spark, name)
-}
-
-/** The engine's native SQL functions, one row each. Both registration
-  * paths read this table: [[GraftExtensions]] injects every row, and
-  * each function object's `ensureRegistered` registers its own rows in
-  * a session built without the extensions. */
-object NativeFunctions {
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
-    fn[DotProductFloat](DotProductFloat.name)(a => DotProductFloat(a(0), a(1))),
-    fn[DotProductInt](DotProductInt.name)(a => DotProductInt(a(0), a(1))),
-    fn[AvroEncodeEnvelope](AvroEnvelope.encodeName)(AvroEncodeEnvelope(_)),
-    fn[AvroDecodeEnvelope](AvroEnvelope.decodeName)(a => AvroDecodeEnvelope(a.head)),
-    fn[ProtoEncodeEnvelope](ProtoEnvelope.encodeName)(ProtoEncodeEnvelope(_)),
-    fn[ProtoDecodeEnvelope](ProtoEnvelope.decodeName)(a => ProtoDecodeEnvelope(a.head)))
-
-  private def fn[T: ClassTag](name: String)(build: FunctionBuilder) =
-    (FunctionIdentifier(name), new ExpressionInfo(classTag[T].runtimeClass.getName, name), build)
-
-  /** Registers the named rows in `spark`'s function registry; a name
-    * already registered is left as it is. */
-  def register(spark: SparkSession, names: String*): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (id, info, build) =>
-      if (names.contains(id.funcName) && !reg.functionExists(id))
-        reg.registerFunction(id, info, build)
-    }
-  }
-}
-
-/** `SparkSessionExtensions` entry point — enable with
-  * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions` to
-  * expose the engine's native functions to any session (SQL CLI, thrift
-  * server, notebooks). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // No injectOptimizerRule(RankLimitToTopK) here: injected rules run in
-    // the 'Operator Optimization' batches, BEFORE SparkOptimizer's 'Infer
-    // window group limit' batch creates the WindowGroupLimit node the
-    // rule matches — via this path it would silently never fire (round-4
-    // ADVICE). The rank-limit lowering for extensions sessions is anchored
-    // in TopKPerKeyStrategy instead, which matches WindowGroupLimit on
-    // the fully optimized plan (pinned by PlanSpec's extensions-path test).
-    ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
-    NativeFunctions.all.foreach(ext.injectFunction)
-  }
 }

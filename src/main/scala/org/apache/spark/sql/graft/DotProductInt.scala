@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -67,9 +67,4 @@ object DotProductInt {
   def dotI(a: Column, b: Column): Column =
     ExpressionUtils.column(DotProductInt(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** SQL-name registration for sessions not built with
-    * [[GraftExtensions]]. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    NativeFunctions.register(spark, name)
 }

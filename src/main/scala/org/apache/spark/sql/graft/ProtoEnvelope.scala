@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeBlock, ExprCode}
@@ -131,9 +131,6 @@ object ProtoEnvelope {
 
   def fromProtoEnvelope(bin: Column): Column =
     ExpressionUtils.column(ProtoDecodeEnvelope(ExpressionUtils.expression(bin)))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    NativeFunctions.register(spark, encodeName, decodeName)
 }
 
 /** (long, long, long, string, double) → proto-wire envelope. */

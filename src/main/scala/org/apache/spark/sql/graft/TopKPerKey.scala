@@ -85,32 +85,45 @@ case class TopKPerKeyExec(k: Int, keyExprs: Seq[Expression],
     copy(child = newChild)
 }
 
+/** Plans [[TopKPerKeyPlan]], and lowers Catalyst's own rank-limit node
+  * to the same exec pair. `InferWindowGroupLimit` recognizes the
+  * `row_number() OVER (PARTITION BY k ORDER BY o) <= K` idiom (filter
+  * above ranking window) and inserts a logical `WindowGroupLimit`, whose
+  * stock exec fully sorts each key's rows before discarding all but K.
+  * Matching it here gives any query written in the plain window idiom,
+  * SQL or DataFrame, the bounded heap without naming `TopKPerKey`. The
+  * match is at the planner because a strategy sees the fully optimized
+  * plan: an optimizer rule injected through `spark.sql.extensions` runs
+  * in the 'Operator Optimization' batches, before 'Infer window group
+  * limit' creates the node, and would never fire.
+  *
+  * Scope guards, with Spark's sort-based `WindowGroupLimitExec` as the
+  * fall-through:
+  *  - `RowNumber` only: the heap emits exactly K rows per key, which is
+  *    row_number semantics; rank/dense_rank keep more than K on ties.
+  *  - non-empty partition spec: a global top-K would plan a
+  *    ClusteredDistribution over zero expressions; Spark's own limit
+  *    machinery handles that case.
+  *  - K ≤ [[MaxK]] bounds heap memory (Spark's
+  *    windowGroupLimitThreshold discipline). */
 object TopKPerKeyStrategy extends SparkStrategy {
   import org.apache.spark.sql.catalyst.expressions.RowNumber
   import org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
 
+  private[graft] val MaxK = 1024
+
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyPlan(k, keys, order, child) =>
-      TopKPerKeyExec(k, keys, order, partial = false,
-        TopKPerKeyExec(k, keys, order, partial = true,
-          planLater(child))) :: Nil
-    // Catalyst's InferWindowGroupLimit node, matched DIRECTLY at the
-    // planner: injected optimizer rules run in the 'Operator
-    // Optimization' batches, BEFORE SparkOptimizer's 'Infer window group
-    // limit' batch creates this node — so via the `spark.sql.extensions`
-    // path (thrift server, notebooks) RankLimitToTopK never sees it and
-    // the lowering silently misses. The strategy sees the FULLY optimized
-    // plan, so matching here covers both registration paths; the same
-    // scope guards as the rule apply (RowNumber-only, non-empty
-    // partition spec, bounded K), with Spark's stock sort-based
-    // WindowGroupLimitExec as the fall-through.
+    case TopKPerKeyPlan(k, keys, order, child) => execPair(k, keys, order, child)
     case WindowGroupLimit(parts, order, _: RowNumber, k, child)
-        if parts.nonEmpty && k > 0 && k <= RankLimitToTopK.MaxK =>
-      TopKPerKeyExec(k, parts, order, partial = false,
-        TopKPerKeyExec(k, parts, order, partial = true,
-          planLater(child))) :: Nil
+        if parts.nonEmpty && k > 0 && k <= MaxK =>
+      execPair(k, parts, order, child)
     case _ => Nil
   }
+
+  private def execPair(k: Int, keys: Seq[Expression], order: Seq[SortOrder],
+                       child: LogicalPlan): Seq[SparkPlan] =
+    TopKPerKeyExec(k, keys, order, partial = false,
+      TopKPerKeyExec(k, keys, order, partial = true, planLater(child))) :: Nil
 }
 
 object TopKPerKey {
@@ -120,15 +133,12 @@ object TopKPerKey {
     * yielding fully-resolved serializable catalyst expressions (a
     * `Column`-based signature would smuggle lazy `ColumnNodeExpression`
     * wrappers into the physical plan, which fail task serialization).
-    * Registers the planner strategy imperatively (idempotent) so
-    * driver-constructed sessions work without the extensions conf. */
+    * Installs [[GraftExtensions]] (idempotent) so driver-constructed
+    * sessions plan the node without the extensions conf. */
   def apply(df: DataFrame, k: Int, keys: Seq[String],
             order: Seq[(String, Boolean)]): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
+    GraftExtensions.install(spark)
     val analyzed = df.queryExecution.analyzed
     def attr(n: String): Attribute = analyzed.output.find(_.name == n)
       .getOrElse(throw new IllegalArgumentException(

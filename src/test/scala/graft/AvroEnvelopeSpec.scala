@@ -68,7 +68,7 @@ class AvroEnvelopeSpec extends SparkSpec {
   }
 
   test("SQL registration resolves avro_envelope / from_avro_envelope") {
-    AvroEnvelope.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     Tbl.events(spark, "/root/testdata/sf0.001").createOrReplaceTempView("ev_tmp")
     val n = spark.sql(
       """SELECT from_avro_envelope(

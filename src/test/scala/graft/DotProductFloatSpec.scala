@@ -30,8 +30,8 @@ class DotProductFloatSpec extends SparkSpec {
     assert(self.count() == 0)
   }
 
-  test("SQL registration: dot_f resolves after ensureRegistered") {
-    DotProductFloat.ensureRegistered(spark)
+  test("SQL registration: dot_f resolves after install") {
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     Tbl.embeddings(spark, d).createOrReplaceTempView("emb_tmp")
     val n = spark.sql(
       "SELECT dot_f(embedding, embedding) AS d FROM emb_tmp WHERE dot_f(embedding, embedding) > 0.5")

@@ -13,7 +13,7 @@ class MiningOpsSpec extends SparkSpec {
   /** Write an events.parquet with the given rows into a temp sfDir. */
   private def eventsDir(
       rows: Seq[(Long, Long, Long, String, Double)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("mining_fx").toString
+    val dir = Tbl.scratchDir("mining_fx")
     rows.toDF("event_id", "ts_us", "user_id", "event_type", "value")
       .selectExpr("event_id", "timestamp_micros(ts_us) AS ts", "user_id",
                   "event_type", "value", "CAST(null AS STRING) AS props")
@@ -89,7 +89,7 @@ class MiningOpsSpec extends SparkSpec {
     // cust 1: 100, 200, 300 (no urgent) → only the 300 is strictly above
     // cust 2: has an URGENT order → excluded by NOT EXISTS
     // cust 3: single order equals its own average → strict > drops it
-    val dir = java.nio.file.Files.createTempDirectory("cs_fx").toString
+    val dir = Tbl.scratchDir("cs_fx")
     Seq(
       (10L, 1L, "O", 100.0, 0L, "3-MEDIUM"),
       (11L, 1L, "O", 200.0, 0L, "3-MEDIUM"),

@@ -19,7 +19,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   /** 7 frames, fixed 40-byte bodies + '\n', two files. */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("pipecsv_spec").toString
+    val d = Tbl.scratchDir("pipecsv_spec")
     def frame(s: String) = {
       require(s.length <= frameLen, s)
       s + " " * (frameLen - s.length) + "\n"
@@ -65,7 +65,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   /** 2000-frame single file for the sample-pushdown statistics. */
   private lazy val bigDir: String = {
-    val d = Files.createTempDirectory("pipecsv_sample").toString
+    val d = Tbl.scratchDir("pipecsv_sample")
     val sb = new StringBuilder
     (0 until 2000).foreach { i =>
       val s = s"$i|k${i % 4}|${i % 10}.5|${i % 100}"
@@ -164,7 +164,7 @@ class PipeCsvSourceSpec extends SparkSpec {
       .writeStream.format("memory").queryName("pipecsv_stream_test")
       .outputMode("complete")
       .option("checkpointLocation",
-              Files.createTempDirectory("pipecsv_ck").toString)
+              Tbl.scratchDir("pipecsv_ck"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     q.stop()
@@ -178,7 +178,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("DSv2 write: per-task rename leaves only committed frame files") {
     import spark.implicits._
-    val outDir = Files.createTempDirectory("pipecsv_write_spec").toString
+    val outDir = Tbl.scratchDir("pipecsv_write_spec")
     val in = Seq((1L, "a", 1.5, 10), (2L, "b", 2.5, 20), (3L, "c", 3.5, 30))
       .toDF("id", "kind", "score", "n")
     in.repartition(3)
@@ -202,14 +202,14 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("streaming sink: one deterministically-named file per (epoch, partition)") {
     import org.apache.spark.sql.streaming.Trigger
-    val outDir = Files.createTempDirectory("pipecsv_sink_spec").toString
+    val outDir = Tbl.scratchDir("pipecsv_sink_spec")
     val q = spark.readStream.format("pipecsv").schema(schema)
       .option("frameLen", frameLen).option("maxFramesPerTrigger", 2)
       .load(dir)
       .writeStream.format("pipecsv")
       .option("path", outDir).option("frameLen", frameLen)
       .option("checkpointLocation",
-              Files.createTempDirectory("pipecsv_sink_ck").toString)
+              Tbl.scratchDir("pipecsv_sink_ck"))
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     q.stop()
@@ -226,9 +226,9 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("checkpoint restart resumes at the exact frame: no loss, no duplicates") {
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = Files.createTempDirectory("pipecsv_restart_src")
-    val outDir = Files.createTempDirectory("pipecsv_restart_out").toString
-    val ckDir = Files.createTempDirectory("pipecsv_restart_ck").toString
+    val srcDir = Paths.get(Tbl.scratchDir("pipecsv_restart_src"))
+    val outDir = Tbl.scratchDir("pipecsv_restart_out")
+    val ckDir = Tbl.scratchDir("pipecsv_restart_ck")
     def run(): Unit = {
       val q = spark.readStream.format("pipecsv").schema(schema)
         .option("frameLen", frameLen)
@@ -258,7 +258,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("data skipping: min/max sidecars prune splits a pushed filter excludes") {
     import spark.implicits._
-    val outDir = Files.createTempDirectory("pipecsv_skip_spec").toString
+    val outDir = Tbl.scratchDir("pipecsv_skip_spec")
     // 100 frames sorted by id in ONE file, stats block = split = 10 frames
     val in = (1L to 100L).map(i => (i, s"k${i % 7}", i / 10.0, i.toInt * 2))
       .toDF("id", "kind", "score", "n")
@@ -297,7 +297,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("data skipping: NaN rows make the field untracked — never pruned away") {
     import spark.implicits._
-    val outDir = Files.createTempDirectory("pipecsv_nan_spec").toString
+    val outDir = Tbl.scratchDir("pipecsv_nan_spec")
     // 20 frames, 2 stats blocks of 10. Block 1 holds a NaN whose
     // comparison-based min/max would otherwise read max=1.0 — Spark
     // orders NaN GREATER than every double, so `score > 100` must
@@ -324,7 +324,7 @@ class PipeCsvSourceSpec extends SparkSpec {
 
   test("DSv2 write rejects delimiter bytes inside string values") {
     import spark.implicits._
-    val outDir = Files.createTempDirectory("pipecsv_bad_spec").toString
+    val outDir = Tbl.scratchDir("pipecsv_bad_spec")
     val e = intercept[Exception] {
       Seq((1L, "has|pipe", 1.0, 1)).toDF("id", "kind", "score", "n")
         .write.format("pipecsv").option("frameLen", frameLen)

@@ -45,7 +45,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("bucketed join: co-located layout leaves zero shuffle before the join") {
     // force the join path (not broadcast) to prove bucketing removes the Exchange
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val p = executed(SparkEntry.queries("x_bucketed_join")(spark, d))
       // post-join agg/sort shuffles are expected; below the JOIN there must be none
       val joins = collectWithSubqueries(p) {
@@ -145,8 +145,8 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // a ReusedExchange of it), and every exchange ABOVE the verify join
     // carries ids/cosine only — a pair-level payload exchange is the
     // 22 KB/vector spill this path exists to prevent
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
-                "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+                     "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
       val p = executed(SparkEntry.queries("sim_emb_neardup")(spark, d))
       val nested = collectWithSubqueries(p) {
         case j: org.apache.spark.sql.execution.joins.CartesianProductExec => j
@@ -339,7 +339,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // side — at 100 TB this is what turns a selective dim predicate into
     // fact-scan pruning when broadcast isn't possible. Pin that the
     // engine's join shapes keep qualifying for it.
-    withSQLConf(
+    Session.withConf(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
       import spark.implicits._
@@ -475,7 +475,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // adaptive plan and that a tiny shuffle collapses below the static
     // partition count instead of scheduling empty reducers
     import spark.implicits._
-    withSQLConf(
+    Session.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.shuffle.partitions" -> "64") {
@@ -501,7 +501,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // are scaled down to test-data volume; the RATIOS mirror production
     // defaults (factor 5 over median, split to advisory size).
     import spark.implicits._
-    withSQLConf(
+    Session.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
@@ -541,7 +541,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // fixture with thresholds scaled to test volume
     import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit, spark_partition_id, when}
-    withSQLConf(
+    Session.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
       "spark.sql.adaptive.rebalancePartitionsSmallPartitionFactor" -> "0.2") {
@@ -670,11 +670,11 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("rank-limit lowering declines rank(): ties must keep more than K rows") {
     // the heap exec emits EXACTLY k rows per key — row_number semantics.
     // rank()/dense_rank() keep every tied row at the boundary, so the
-    // rule must leave them on the stock path; this pin guards the
+    // strategy must leave them on the stock path; this pin guards the
     // RowNumber-only match from being silently widened
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    org.apache.spark.sql.graft.RankLimitToTopK.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     val w = Window.partitionBy($"user_id").orderBy($"event_type") // heavy ties
     val df = Tbl.events(spark, d)
       .withColumn("rk", org.apache.spark.sql.functions.rank().over(w))
@@ -683,7 +683,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val topk = collectWithSubqueries(p) {
       case e: org.apache.spark.sql.graft.TopKPerKeyExec => e
     }
-    assert(topk.isEmpty, s"rule must not fire on rank():\n$p")
+    assert(topk.isEmpty, s"lowering must not fire on rank():\n$p")
     // rank ≤ 3 with ties keeps more rows than 3 distinct keys × 3
     val perKey = df.groupBy($"user_id").count()
     assert(perKey.where($"count" > 3).count() > 0,
@@ -692,9 +692,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("rank-limit auto-rewrite fires on the SQL-string surface too") {
     // same engine semantics through spark.sql over a temp view — the
-    // rule lowers Catalyst's inferred group limit regardless of which
-    // API authored the plan
-    org.apache.spark.sql.graft.RankLimitToTopK.ensureRegistered(spark)
+    // strategy lowers Catalyst's inferred group limit regardless of
+    // which API authored the plan
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     Tbl.events(spark, d).createOrReplaceTempView("rank_rw_events")
     try {
       val df = spark.sql(
@@ -713,7 +713,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("rank-limit auto-rewrite: the plain window idiom lowers to the native heap operator") {
     // a3 is written as row_number().over(window).where(rn <= 3) — the
-    // stock idiom. Catalyst infers a WindowGroupLimit; RankLimitToTopK
+    // stock idiom. Catalyst infers a WindowGroupLimit; TopKPerKeyStrategy
     // lowers it to TopKPerKeyExec (partial heap before the exchange,
     // final after), so users get the native operator without asking.
     val p = executed(SparkEntry.queries("a3_top3_per_key")(spark, d))
@@ -770,28 +770,13 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("rank-limit lowering fires via the spark.sql.extensions path too") {
     // extensions-built sessions (thrift server, notebooks) never call
-    // ensureRegistered, and an injected optimizer rule runs in the
-    // 'Operator Optimization' batches — BEFORE InferWindowGroupLimit
-    // creates the node it matches (round-4 ADVICE). The lowering is
-    // therefore anchored in TopKPerKeyStrategy, which sees the fully
-    // optimized plan; this pin builds a genuine extensions session (no
-    // imperative registration anywhere) and asserts the native exec.
-    import org.apache.spark.sql.SparkSession
-    spark // force the shared session (and its SparkContext) to exist first
-    val prevActive = SparkSession.getActiveSession
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    // `spark.sql.extensions` is a STATIC conf read off the SparkContext's
-    // conf at session build — it cannot be injected into a JVM whose
-    // context already runs. `withExtensions` feeds the identical
-    // GraftExtensions instance through the identical injection points,
-    // so it is the in-process embodiment of the launch-time conf.
-    val ext = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new org.apache.spark.sql.graft.GraftExtensions()(_))
-      .getOrCreate() // fresh session state on the existing SparkContext
-    try {
+    // install. The lowering is anchored in TopKPerKeyStrategy, which sees
+    // the fully optimized plan (an injected optimizer rule would run in
+    // the 'Operator Optimization' batches, BEFORE InferWindowGroupLimit
+    // creates the node — round-4 ADVICE); this pin builds a genuine
+    // extensions session (no imperative registration anywhere) and
+    // asserts the native exec.
+    SparkSpec.withExtensionsSession { ext =>
       assert(ext ne spark, "extensions test must not reuse the shared session")
       assert(ext.experimental.extraStrategies.isEmpty,
              "session must rely on the extensions conf alone")
@@ -809,15 +794,12 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(topk.size == 2,
              s"extensions path did not lower to TopKPerKeyExec:\n$p")
       // and every native function arrived through injectFunction, not
-      // ensureRegistered
+      // install
       nativeFunctionNames.foreach { name =>
         assert(ext.sessionState.functionRegistry.functionExists(
           org.apache.spark.sql.catalyst.FunctionIdentifier(name)),
           s"$name did not resolve in the extensions session")
       }
-    } finally {
-      prevActive.foreach(SparkSession.setActiveSession)
-      prevDefault.foreach(SparkSession.setDefaultSession)
     }
   }
 
@@ -834,12 +816,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       org.apache.spark.sql.catalyst.FunctionIdentifier(name))
     assert(nativeFunctionNames.forall(!resolves(_)),
            "fresh session already holds a native function")
-    org.apache.spark.sql.graft.DotProductFloat.ensureRegistered(fresh)
-    org.apache.spark.sql.graft.DotProductInt.ensureRegistered(fresh)
-    org.apache.spark.sql.graft.AvroEnvelope.ensureRegistered(fresh)
-    org.apache.spark.sql.graft.ProtoEnvelope.ensureRegistered(fresh)
+    org.apache.spark.sql.graft.GraftExtensions.install(fresh)
     nativeFunctionNames.foreach { name =>
-      assert(resolves(name), s"$name did not resolve after ensureRegistered")
+      assert(resolves(name), s"$name did not resolve after install")
     }
   }
 
@@ -1296,15 +1275,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(below.isEmpty, s"exchange under Sample — sampling post-shuffle:\n$p")
       assert(scans(s.child).nonEmpty, s"Sample not over the file scan:\n$p")
-    }
-  }
-
-  private def withSQLConf[T](pairs: (String, String)*)(f: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 }

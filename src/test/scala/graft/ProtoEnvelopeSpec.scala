@@ -69,7 +69,7 @@ class ProtoEnvelopeSpec extends SparkSpec {
   }
 
   test("SQL registration + codegen span through the Column API") {
-    ProtoEnvelope.ensureRegistered(spark)
+    org.apache.spark.sql.graft.GraftExtensions.install(spark)
     Tbl.events(spark, "/root/testdata/sf0.001").createOrReplaceTempView("evp_tmp")
     val n = spark.sql(
       """SELECT from_proto_envelope(

@@ -143,16 +143,7 @@ class RandomizedSpec extends SparkSpec {
       val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
       val ref = ev.withColumn("rn", row_number().over(w))
         .where($"rn" <= k).select($"user_id", $"event_id")
-      // materialize the reference with the lowering rule DISABLED —
-      // otherwise both sides plan the native exec and the differential
-      // is a tautology
-      val exps = spark.experimental
-      val saved = exps.extraOptimizations
-      exps.extraOptimizations =
-        saved.filterNot(_ == org.apache.spark.sql.graft.RankLimitToTopK)
-      val refRows = try ref.collect().toSet finally {
-        exps.extraOptimizations = saved
-      }
+      val refRows = TopKPerKeySpec.stockRows(ref).toSet
       val nativeRows = native.collect().toSet
       assert(nativeRows == refRows, s"seed=$seed k=$k")
     }

@@ -24,7 +24,7 @@ class ScaleWriteSpec extends SparkSpec {
     val k = graft.operators.ScaleOps.writeSalts(spark)
     val df = spark.range(0, 4000)
       .select(($"id" % 4).cast("string").as("p"), $"id".as("event_id"))
-    val dir = java.nio.file.Files.createTempDirectory("salted_write").toString
+    val dir = Tbl.scratchDir("salted_write")
     // a deployment-shaped task count (the spec session defaults to 4,
     // where 8 salts legitimately collide into one writer task), and AQE
     // byte-coalescing OFF: on this KB-sized exchange AQE correctly
@@ -71,7 +71,7 @@ class ScaleWriteSpec extends SparkSpec {
 
   test("fan-out probe counts row groups, not byte-range splits") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("rg_probe").toString
+    val dir = Tbl.scratchDir("rg_probe")
     // one file, ONE row group, but physically larger than the split size
     // forced below — the old split-count probe saw many (empty) splits
     spark.range(0, 5000)

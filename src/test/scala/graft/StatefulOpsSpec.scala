@@ -689,8 +689,8 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     import graft.streaming.StatefulOps.{First3PerType, First3Row, TypeEv}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = java.nio.file.Files.createTempDirectory("ls_salt_src").toString
-    val ck = java.nio.file.Files.createTempDirectory("ls_salt_ck").toString
+    val srcDir = Tbl.scratchDir("ls_salt_src")
+    val ck = Tbl.scratchDir("ls_salt_ck")
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("event_id", LongType),
       StructField("ts_us", LongType), StructField("value", DoubleType)))

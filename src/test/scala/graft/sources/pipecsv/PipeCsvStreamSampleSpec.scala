@@ -26,7 +26,7 @@ class PipeCsvStreamSampleSpec extends SparkSpec {
   private val nFrames = 500
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("pipecsv_stream_sample").toString
+    val d = graft.Tbl.scratchDir("pipecsv_stream_sample")
     def frame(s: String) = s + " " * (frameLen - s.length) + "\n"
     Files.writeString(Paths.get(d, "part-0.txt"),
       (0 until nFrames).map(i => frame(i.toString)).mkString)
