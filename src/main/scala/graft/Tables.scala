@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-provided parquet star schema (TESTDATA.md) plus
   * shared column helpers used across the query registry.
@@ -15,7 +16,48 @@ import org.apache.spark.sql.functions._
   */
 object Tbl {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    load(spark, s"$dir/$name.parquet")
+
+  private def load(s: SparkSession, p: String): DataFrame =
+    s.read.schema(schema(s, p)).parquet(p)
+
+  /** Fingerprint of a file for metadata memos: path + size + mtime, so
+    * a file REGENERATED in place (testdata generations have changed
+    * events.ts's type in place) misses instead of serving stale state. A directory (our own writers) keys on the dir entry, whose
+    * mtime changes when files are added to or removed from it. */
+  private[graft] def fileKey(p: String): String = {
+    val f = new java.io.File(p.stripPrefix("file:"))
+    s"$p|${f.length}|${f.lastModified}"
+  }
+
+  /** The session confs that change what parquet schema inference
+    * returns for the same footer; their values are part of the
+    * [[schema]] key, so e.g. a `nanosAsLong` read never serves a
+    * schema inferred without it. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Footer schema of the parquet file at `p`, inferred once per
+    * ([[fileKey]], inference confs). A schemaless `read.parquet` runs a
+    * one-task inference job on every call (~0.1 s); every registry load
+    * re-reads the same tables, so [[apply]] passes this schema instead.
+    * Inference runs OUTSIDE the map so no footer read ever holds a CHM
+    * bin lock; a racing duplicate read is idempotent and putIfAbsent
+    * keeps the first. */
+  private[graft] def schema(s: SparkSession, p: String): StructType = {
+    val key = (fileKey(p) +: inferenceConfs.map(s.conf.get)).mkString("|")
+    val cached = schemaCache.get(key)
+    if (cached != null) cached else {
+      val sch = s.read.parquet(p).schema
+      Option(schemaCache.putIfAbsent(key, sch)).getOrElse(sch)
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = apply(s, d, "orders")
@@ -26,46 +68,30 @@ object Tbl {
   def region(s: SparkSession, d: String): DataFrame   = apply(s, d, "region")
   /** events.ts physical type has drifted across driver testdata
     * generations: TIMESTAMP(NANOS) originally, TIMESTAMP(MICROS,
-    * isAdjustedToUTC=false) since 2026-08. Detect the footer type once
-    * per directory (cached) and normalize every variant to the SAME
-    * TimestampType epoch-micros column, so nothing downstream ever sees
-    * the drift. */
-  private val tsTypeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.DataType]()
-  private[graft] def eventsTsType(s: SparkSession, d: String): org.apache.spark.sql.types.DataType = {
-    val p = s"$d/events.parquet"
-    // size+mtime in the key: a file REGENERATED in place (the driver
-    // does this across rounds) re-infers instead of serving the stale
-    // unit; schema work runs OUTSIDE the map so no footer read ever
-    // holds a CHM bin lock (round-7 ADVICE) — a racing duplicate read
-    // is idempotent and putIfAbsent keeps the first
-    val f = new java.io.File(p)
-    val key = s"$p|${f.length}|${f.lastModified}"
-    val cached = tsTypeCache.get(key)
-    if (cached != null) cached else {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val dt = s.read.parquet(p).schema("ts").dataType
-      tsTypeCache.putIfAbsent(key, dt)
-      dt
-    }
+    * isAdjustedToUTC=false) since 2026-08. Read the footer type (under
+    * `nanosAsLong`, through the [[schema]] cache) and normalize every
+    * variant to the SAME TimestampType epoch-micros column, so nothing
+    * downstream ever sees the drift. */
+  private[graft] def eventsTsType(s: SparkSession, d: String): DataType = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema(s, s"$d/events.parquet")("ts").dataType
   }
 
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val p = s"$d/events.parquet"
     eventsTsType(s, d) match {
       case LongType =>
         // ns-as-long (legacy conf): data is µs-precision, `ns div 1000`
         // is lossless and matches DuckDB's epoch_us exactly
-        apply(s, d, "events").withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        load(s, p).withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType =>
         // NTZ µs: an explicit LTZ schema makes the parquet reader take
         // the raw int64 micros as epoch-micros — bit-identical to the
         // ns-file path (driver wall-clock is UTC = epoch)
-        val sch = StructType(apply(s, d, "events").schema.map(f =>
+        val sch = StructType(schema(s, p).map(f =>
           if (f.name == "ts") f.copy(dataType = TimestampType) else f))
-        s.read.schema(sch).parquet(s"$d/events.parquet")
-      case _ => apply(s, d, "events") // already LTZ micros (our own writers)
+        s.read.schema(sch).parquet(p)
+      case _ => load(s, p) // already LTZ micros (our own writers)
     }
   }
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")
@@ -106,16 +132,13 @@ object Tbl {
     } else System.getProperty("java.io.tmpdir")
   }
 
-  /** Cached per-file parquet row-group counts for the fan-out probe.
-    * Key includes size+mtime so a file regenerated in place re-probes —
-    * the same discipline as [[eventsTsType]]'s cache. */
+  /** Cached per-file parquet row-group counts for the fan-out probe,
+    * keyed on [[fileKey]] so a file regenerated in place re-probes. */
   private val rowGroupCache =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 
   private def parquetRowGroups(s: SparkSession, path: String): Int = {
-    val f = new java.io.File(path.stripPrefix("file:"))
-    val key = s"$path|${f.length}|${f.lastModified}"
-    rowGroupCache.getOrElseUpdate(key, {
+    rowGroupCache.getOrElseUpdate(fileKey(path), {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(path), s.sessionState.newHadoopConf())
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

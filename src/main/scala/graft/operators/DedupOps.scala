@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryModule, Tbl}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication surface for the LLM-training-data mandate: exact

@@ -94,16 +94,12 @@ object SimilarityOps extends QueryModule {
   private val vecCache =
     scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Int, Array[Float])]]
 
-  /** Cache key for per-corpus memos: path + file size + mtime, so a
-    * dataset dir REGENERATED in place (the driver does this across
-    * rounds — see the events.ts type drift) invalidates every derived
-    * count/plane/centroid instead of serving stale index state
-    * (round-7 ADVICE). Directory-valued paths (our own writers) hash
-    * the dir entry itself — its mtime changes on rewrite. */
-  private def embFingerprint(d: String): String = {
-    val f = new java.io.File(s"$d/embeddings.parquet")
-    s"$d|${f.length}|${f.lastModified}"
-  }
+  /** Cache key for per-corpus memos: the embeddings file's
+    * [[Tbl.fileKey]], so a dataset REGENERATED in place invalidates
+    * every derived count/plane/centroid instead of serving stale index
+    * state. */
+  private def embFingerprint(d: String): String =
+    Tbl.fileKey(s"$d/embeddings.parquet")
 
   private def constVectors(s: SparkSession, d: String, n: Int): Seq[(Int, Array[Float])] =
     vecCache.getOrElseUpdate((embFingerprint(d), n), {
@@ -858,7 +854,7 @@ object SimilarityOps extends QueryModule {
     * spread, so the tail stays mild (measured, not assumed — see the
     * round-9 sf10 gate). */
   private def hierCodebookRel(centRel: DataFrame,
-                              knownCount: Option[Long] = None)
+                              knownCount: Option[Long])
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.graft.NearestCellFloat.nearestCell
     // knownCount skips the k-row count job where the caller can derive

@@ -53,7 +53,6 @@ object StreamingOps extends QueryModule {
     * sentinels from results by their negative user_id at the OUTPUT. */
   private def eventStream(s: SparkSession, d: String,
                           sentinelTypes: Seq[String]): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsNanos = Tbl.eventsTsType(s, d) == LongType
     val dir = java.nio.file.Paths.get(Tbl.scratchDir("events_stream"))
     Files.createSymbolicLink(dir.resolve("events.parquet"),

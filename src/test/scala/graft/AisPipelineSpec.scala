@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.AisPipeline
-import org.apache.spark.sql.functions._
 
 /** The flagship preprocess pipeline (§3.1) on hand-built AIS JSON:
   * schema contract, filter semantics, derived kinematics, malformed-JSON

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Planted-fixture semantics for the mining operators: tiny event
   * corpora whose association lifts, transition matrices, OHLC bars and
   * MAD statistics are known in closed form. Fixtures are written as

@@ -215,7 +215,7 @@ class RandomizedSpec extends SparkSpec {
   private def plantedDupDir(seed: Int): String = {
     val rnd = new scala.util.Random(seed)
     val dir = Tbl.scratchDir("rand_dup")
-    val texts = (0 until 12).map(g =>
+    val texts = (0 until 12).map(_ =>
       Seq.fill(10 + rnd.nextInt(20))("w" + rnd.nextInt(50)).mkString(" "))
     val rows = (0 until 36).map { i =>
       val t = texts(i / 3) // triplets: (0,1,2) share texts(0), (3,4,5) texts(1), …

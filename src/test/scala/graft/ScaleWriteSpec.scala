@@ -31,16 +31,10 @@ class ScaleWriteSpec extends SparkSpec {
     // collapses to one partition, which is exactly what cannot happen
     // at the 100 TB volumes whose serialization the salt exists to fix
     // — the pin is the hash-spread mechanism, not AQE policy
-    val prevN = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevC = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    Session.withConf(spark, "spark.sql.shuffle.partitions" -> "32",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       graft.operators.ScaleOps.clusterForWrite(df, "p", "event_id")
         .write.mode("overwrite").partitionBy("p").parquet(dir)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevN)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevC)
     }
     val perValue = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("p="))

@@ -11,6 +11,10 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
 class StatefulOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** transformWithState needs the RocksDB provider; scoped per test. */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def ev(id: Long, tsS: Long, user: Long, v: Double) =
     Ev(id, tsS * 1000000L, user, v)
 
@@ -75,35 +79,28 @@ class StatefulOpsSpec extends SparkSpec {
 
   test("transformWithState e2e: ValueState accumulates across micro-batches") {
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Ev]
-    val out = input.toDS()
-      .groupByKey(_.user_id)
-      .transformWithState(new RunningTotals,
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-    val q = out.writeStream.format("memory").queryName("t_tws")
-      .outputMode("update")
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_tws"))
-      .start()
-    try {
-      input.addData(ev(1, 100, 7, 1.5), ev(2, 200, 7, 2.25))
-      q.processAllAvailable()
-      val b1 = spark.table("t_tws").as[RunRow].collect().sortBy(_.event_id)
-      assert(b1.map(r => (r.run_n, r.run_sum_c)).toList == List((1L, 150L), (2L, 375L)))
+    Session.withConf(spark, RocksDbProvider) {
+      val input = MemoryStream[Ev]
+      val out = input.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new RunningTotals,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      val q = out.writeStream.format("memory").queryName("t_tws")
+        .outputMode("update")
+        .option("checkpointLocation", Tbl.scratchDir("ckpt_tws"))
+        .start()
+      try {
+        input.addData(ev(1, 100, 7, 1.5), ev(2, 200, 7, 2.25))
+        q.processAllAvailable()
+        val b1 = spark.table("t_tws").as[RunRow].collect().sortBy(_.event_id)
+        assert(b1.map(r => (r.run_n, r.run_sum_c)).toList == List((1L, 150L), (2L, 375L)))
 
-      // batch 2: totals continue from persisted state, not from zero
-      input.addData(ev(3, 300, 7, 0.25))
-      q.processAllAvailable()
-      val b2 = spark.table("t_tws").as[RunRow].collect().filter(_.event_id == 3L)
-      assert(b2.map(r => (r.run_n, r.run_sum_c)).toList == List((3L, 400L)))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        // batch 2: totals continue from persisted state, not from zero
+        input.addData(ev(3, 300, 7, 0.25))
+        q.processAllAvailable()
+        val b2 = spark.table("t_tws").as[RunRow].collect().filter(_.event_id == 3L)
+        assert(b2.map(r => (r.run_n, r.run_sum_c)).toList == List((3L, 400L)))
+      } finally q.stop()
     }
   }
 
@@ -750,38 +747,31 @@ class StatefulOpsSpec extends SparkSpec {
     // eviction semantics — a 1 s TTL, a >TTL sleep between batches, and
     // the counts restart from zero because every map entry expired
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[EvType]
-    val out = input.toDS()
-      .groupByKey(_.user_id)
-      .transformWithState(new TtlTypeProfile(java.time.Duration.ofSeconds(1)),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Update())
-    val q = out.writeStream.format("memory").queryName("t_ttl")
-      .outputMode("update")
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_ttl"))
-      .start()
-    try {
-      input.addData(EvType(7, "view"), EvType(7, "click"), EvType(7, "view"))
-      q.processAllAvailable()
-      val b1 = spark.table("t_ttl").as[Profile].collect()
-      assert(b1.toList == List(Profile(7, 2, 3)))
+    Session.withConf(spark, RocksDbProvider) {
+      val input = MemoryStream[EvType]
+      val out = input.toDS()
+        .groupByKey(_.user_id)
+        .transformWithState(new TtlTypeProfile(java.time.Duration.ofSeconds(1)),
+          org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+          OutputMode.Update())
+      val q = out.writeStream.format("memory").queryName("t_ttl")
+        .outputMode("update")
+        .option("checkpointLocation", Tbl.scratchDir("ckpt_ttl"))
+        .start()
+      try {
+        input.addData(EvType(7, "view"), EvType(7, "click"), EvType(7, "view"))
+        q.processAllAvailable()
+        val b1 = spark.table("t_ttl").as[Profile].collect()
+        assert(b1.toList == List(Profile(7, 2, 3)))
 
-      Thread.sleep(2500) // > TTL: every entry written in batch 1 expires
-      input.addData(EvType(7, "purchase"))
-      q.processAllAvailable()
-      val b2 = spark.table("t_ttl").as[Profile].collect()
-        .filter(_.n_events < 3) // batch-2 emission (update sink appends)
-      assert(b2.toList == List(Profile(7, 1, 1)),
-        s"expired entries must not survive the TTL: ${b2.toList}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        Thread.sleep(2500) // > TTL: every entry written in batch 1 expires
+        input.addData(EvType(7, "purchase"))
+        q.processAllAvailable()
+        val b2 = spark.table("t_ttl").as[Profile].collect()
+          .filter(_.n_events < 3) // batch-2 emission (update sink appends)
+        assert(b2.toList == List(Profile(7, 1, 1)),
+          s"expired entries must not survive the TTL: ${b2.toList}")
+      } finally q.stop()
     }
   }
 
@@ -791,54 +781,47 @@ class StatefulOpsSpec extends SparkSpec {
     // advances the watermark past last_ts + gap, inline gap-closes keep
     // working, and a post-timer event starts a FRESH session
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[TEv]
-    def tev(id: Long, tsS: Long, user: Long, v: Double) =
-      TEv(id, new java.sql.Timestamp(tsS * 1000L), tsS * 1000000L, user, v)
-    val out = input.toDS()
-      .withWatermark("ts", "0 seconds")
-      .groupByKey(_.user_id)
-      .transformWithState(new TimerSessions(1800000000L),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
-    val q = out.writeStream.format("memory").queryName("t_sess")
-      .outputMode("append")
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_sess"))
-      .start()
-    def rows() = spark.table("t_sess").as[SessRow].collect().toSet
-    try {
-      // batch 1: u7 open session [1000s,1010s]; u9 seeds at 10000s and
-      // pushes the watermark to 10000s > 1000s + 30min
-      input.addData(tev(1, 1000, 7, 1.0), tev(2, 1010, 7, 2.0),
-                    tev(3, 10000, 9, 0.5))
-      q.processAllAvailable()
-      // batch 2: u9 extends (10 s gap — timer re-armed, not fired);
-      // u7's timer fires against the batch-1 watermark
-      input.addData(tev(4, 10010, 9, 0.5))
-      q.processAllAvailable()
-      assert(rows() == Set(SessRow(7, 1000000000L, 1010000000L, 2, 300L)),
-        s"u7's idle session must close by timer: ${rows()}")
+    Session.withConf(spark, RocksDbProvider) {
+      val input = MemoryStream[TEv]
+      def tev(id: Long, tsS: Long, user: Long, v: Double) =
+        TEv(id, new java.sql.Timestamp(tsS * 1000L), tsS * 1000000L, user, v)
+      val out = input.toDS()
+        .withWatermark("ts", "0 seconds")
+        .groupByKey(_.user_id)
+        .transformWithState(new TimerSessions(1800000000L),
+          org.apache.spark.sql.streaming.TimeMode.EventTime(),
+          OutputMode.Append())
+      val q = out.writeStream.format("memory").queryName("t_sess")
+        .outputMode("append")
+        .option("checkpointLocation", Tbl.scratchDir("ckpt_sess"))
+        .start()
+      def rows() = spark.table("t_sess").as[SessRow].collect().toSet
+      try {
+        // batch 1: u7 open session [1000s,1010s]; u9 seeds at 10000s and
+        // pushes the watermark to 10000s > 1000s + 30min
+        input.addData(tev(1, 1000, 7, 1.0), tev(2, 1010, 7, 2.0),
+                      tev(3, 10000, 9, 0.5))
+        q.processAllAvailable()
+        // batch 2: u9 extends (10 s gap — timer re-armed, not fired);
+        // u7's timer fires against the batch-1 watermark
+        input.addData(tev(4, 10010, 9, 0.5))
+        q.processAllAvailable()
+        assert(rows() == Set(SessRow(7, 1000000000L, 1010000000L, 2, 300L)),
+          s"u7's idle session must close by timer: ${rows()}")
 
-      // batch 3: u7 restarts AFTER its timer fired (fresh state); u9's
-      // 50000s event gap-closes its own session INLINE and lifts the
-      // watermark past u7's new session for the final timer fire
-      input.addData(tev(5, 12000, 7, 4.0), tev(6, 50000, 9, 0.5))
-      q.processAllAvailable()
-      input.addData(tev(7, 50010, 9, 0.5)) // trigger the timer batch
-      q.processAllAvailable()
-      assert(rows() == Set(
-        SessRow(7, 1000000000L, 1010000000L, 2, 300L),
-        SessRow(9, 10000000000L, 10010000000L, 2, 100L),
-        SessRow(7, 12000000000L, 12000000000L, 1, 400L)),
-        s"inline close + fresh-session timer close expected: ${rows()}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        // batch 3: u7 restarts AFTER its timer fired (fresh state); u9's
+        // 50000s event gap-closes its own session INLINE and lifts the
+        // watermark past u7's new session for the final timer fire
+        input.addData(tev(5, 12000, 7, 4.0), tev(6, 50000, 9, 0.5))
+        q.processAllAvailable()
+        input.addData(tev(7, 50010, 9, 0.5)) // trigger the timer batch
+        q.processAllAvailable()
+        assert(rows() == Set(
+          SessRow(7, 1000000000L, 1010000000L, 2, 300L),
+          SessRow(9, 10000000000L, 10010000000L, 2, 100L),
+          SessRow(7, 12000000000L, 12000000000L, 1, 400L)),
+          s"inline close + fresh-session timer close expected: ${rows()}")
+      } finally q.stop()
     }
   }
 
@@ -847,36 +830,29 @@ class StatefulOpsSpec extends SparkSpec {
     // (kth DECREASES) — impossible unless the sketch state merged, and
     // the defining property of the KMV merge operation
     implicit val ctx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[TypeHash]
-    val out = input.toDS()
-      .groupByKey(_.event_type)
-      .transformWithState(new StreamingKmv(3),
-        org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
-    val q = out.writeStream.format("memory").queryName("t_kmv")
-      .outputMode("update")
-      .option("checkpointLocation", Tbl.scratchDir("ckpt_kmv"))
-      .start()
-    try {
-      input.addData(TypeHash("a", 90L), TypeHash("a", 50L), TypeHash("a", 99L),
-                    TypeHash("a", 80L), TypeHash("a", 50L)) // dup must not double
-      q.processAllAvailable()
-      val b1 = spark.table("t_kmv").as[KmvRow].collect()
-      assert(b1.toList == List(KmvRow("a", 3, 90L))) // kept {50,80,90}
-      input.addData(TypeHash("a", 10L))
-      q.processAllAvailable()
-      val b2 = spark.table("t_kmv").as[KmvRow].collect()
-        .filter(_.kth != 90L)
-      assert(b2.toList == List(KmvRow("a", 3, 80L)), // kept {10,50,80}
-        s"merge must keep the k smallest across batches: ${b2.toList}")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    Session.withConf(spark, RocksDbProvider) {
+      val input = MemoryStream[TypeHash]
+      val out = input.toDS()
+        .groupByKey(_.event_type)
+        .transformWithState(new StreamingKmv(3),
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
+      val q = out.writeStream.format("memory").queryName("t_kmv")
+        .outputMode("update")
+        .option("checkpointLocation", Tbl.scratchDir("ckpt_kmv"))
+        .start()
+      try {
+        input.addData(TypeHash("a", 90L), TypeHash("a", 50L), TypeHash("a", 99L),
+                      TypeHash("a", 80L), TypeHash("a", 50L)) // dup must not double
+        q.processAllAvailable()
+        val b1 = spark.table("t_kmv").as[KmvRow].collect()
+        assert(b1.toList == List(KmvRow("a", 3, 90L))) // kept {50,80,90}
+        input.addData(TypeHash("a", 10L))
+        q.processAllAvailable()
+        val b2 = spark.table("t_kmv").as[KmvRow].collect()
+          .filter(_.kth != 90L)
+        assert(b2.toList == List(KmvRow("a", 3, 80L)), // kept {10,50,80}
+          s"merge must keep the k smallest across batches: ${b2.toList}")
+      } finally q.stop()
     }
   }
 
@@ -989,14 +965,8 @@ class StatefulOpsSpec extends SparkSpec {
     (rows, parts)
   }
 
-  private def withStatePartitionConf[T](v: String)(f: => T): T = {
-    val prev = spark.conf.getOption("spark.graft.statePartitions")
-    spark.conf.set("spark.graft.statePartitions", v)
-    try f finally prev match {
-      case Some(p) => spark.conf.set("spark.graft.statePartitions", p)
-      case None => spark.conf.unset("spark.graft.statePartitions")
-    }
-  }
+  private def withStatePartitionConf[T](v: String)(f: => T): T =
+    Session.withConf(spark, "spark.graft.statePartitions" -> v)(f)
 
   test("state partitions default to min(16, defaultParallelism)") {
     val cores = spark.sparkContext.defaultParallelism

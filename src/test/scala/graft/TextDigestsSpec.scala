@@ -40,7 +40,7 @@ class TextDigestsSpec extends SparkSpec {
     val rnd = new scala.util.Random(29)
     val withNulls = (0 until 40).map { i =>
       val n = rnd.nextInt(10)
-      (i.toLong, (0 until n).map(j =>
+      (i.toLong, (0 until n).map(_ =>
         if (rnd.nextInt(4) == 0) null
         else rnd.alphanumeric.take(1 + rnd.nextInt(9)).mkString.toLowerCase))
     }.toDF("id", "arr")
@@ -100,7 +100,7 @@ class TextDigestsSpec extends SparkSpec {
     val rnd = new scala.util.Random(23)
     val rows = (0 until 40).map { i =>
       val n = rnd.nextInt(8)
-      (i.toLong, (0 until n).map(j =>
+      (i.toLong, (0 until n).map(_ =>
         if (rnd.nextInt(3) == 0) null
         else rnd.alphanumeric.take(1 + rnd.nextInt(6)).mkString.toLowerCase))
     }
