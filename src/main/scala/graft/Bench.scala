@@ -22,8 +22,8 @@ object Bench {
     df.write.mode("overwrite").format("noop").save()
 
   /** Drops what a query leaves in the session: cached plans and the
-    * memory-sink tables streaming queries write, so driver heap doesn't
-    * degrade later queries. */
+    * temp views some entries register (`createOrReplaceTempView`), so
+    * one query's leftovers don't hold heap or names for later ones. */
   private[graft] def reset(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sqlContext.tableNames().foreach(spark.catalog.dropTempView)
@@ -33,6 +33,12 @@ object Bench {
     * in the order given. An unknown name fails before any timing. */
   def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] =
     pick("query", SparkEntry.queries.toSeq, names)
+
+  /** `parse`, a main's argument and knob checks: a bad name or knob
+    * exits 2 with its one-line message, not a stack trace. */
+  private[graft] def orUsageExit[A](parse: => A): A =
+    try parse
+    catch { case e: IllegalArgumentException => System.err.println(e.getMessage); sys.exit(2) }
 
   /** The entries of `all` named in `names`, in the order given, or all of
     * them when none is named; an unknown name fails listing the valid
@@ -71,11 +77,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
-    val selected = select(args.toSeq)
+    val (selected, cpus, conf) =
+      orUsageExit((select(args.toSeq), Session.cpus, Session.envConf))
     val filtered = args.nonEmpty
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Session.cpus
-    val conf = Session.envConf
     val spark = Session.local(cpus, conf)
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not on

@@ -3,8 +3,8 @@ package graft
 /** Plan-audit aid: print the formatted executed plan of registered
   * queries without running them to completion.
   * Usage: sbt "runMain graft.Explain [query...] [sfDir]" (no query =
-  * every registered one; an unknown name fails before the session is
-  * built and lists the valid names). */
+  * every registered one; an unknown name exits 2 before the session is
+  * built, listing the valid names). */
 object Explain {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
@@ -18,8 +18,8 @@ object Explain {
         (args.init.toSeq, args.last)
       else (args.toSeq, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
         "/root/testdata/sf0.001"))
-    val selected = Bench.select(names)
-    val spark = Session.local()
+    val (selected, cpus) = Bench.orUsageExit((Bench.select(names), Session.cpus))
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXPLAIN_MODE=formatted prints the numbered-operator
     // form (PushedFilters/ReadSchema per scan) the optimization-round

@@ -4,11 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession posture every main shares: `local[cpus]`
   * with as many shuffle partitions as cores, UTC session time, no UI,
-  * an 8g result cap (memory-sink streams at sf10 outgrow the 1g
-  * default; in local mode driver and executors share one heap, so the
-  * cap guards nothing) and scratch under [[Tbl.sparkLocalDir]]. Mains
-  * call `JvmOpens.check()` themselves before building, and keep their
-  * own arguments and log level. */
+  * an 8g result cap (in local mode driver and executors share one
+  * heap, so the 1g default guards nothing) and scratch under
+  * [[Tbl.sparkLocalDir]]. Mains call `JvmOpens.check()` themselves
+  * before building, and keep their own arguments and log level. */
 object Session {
 
   /** `SPARK_GRAFT_CPUS` if set, otherwise the host's core count. */

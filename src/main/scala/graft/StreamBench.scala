@@ -182,12 +182,11 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf10")
-    val (chunks, restartAt) = replayShape(sys.env.get)
-    val selected = select(args.toSeq)
     // SPARK_GRAFT_CONF steers e.g. the snapshot-cadence experiments
     // below (minDeltasForSnapshot) without a rebuild
-    val conf = Session.envConf
-    val spark = Session.local(Session.cpus, conf)
+    val ((chunks, restartAt), selected, cpus, conf) = Bench.orUsageExit(
+      (replayShape(sys.env.get), select(args.toSeq), Session.cpus, Session.envConf))
+    val spark = Session.local(cpus, conf)
     spark.sparkContext.setLogLevel("WARN")
     graft.streaming.StreamingOps.configureStreaming(spark)
     // state size IS the deliverable of this bench — pay the tracking cost

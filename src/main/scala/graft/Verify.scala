@@ -10,12 +10,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Verify {
   def main(args: Array[String]): Unit = {
     JvmOpens.check() // fail fast on a bare-java launch (see JvmOpens)
-    val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (fast local
     // iteration); an unknown name fails here, before the session is built
-    val selected = Bench.select(
-      if (args.length > 2) args(2).split(",").toSeq else Nil)
-    val spark = Session.local()
+    val (sfDir, outDir, selected, cpus) = Bench.orUsageExit {
+      require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [name,name,...]")
+      (args(0), args(1), Bench.select(args.lift(2).toSeq.flatMap(_.split(","))), Session.cpus)
+    }
+    val spark = Session.local(cpus)
     // INFO shows BlockManager eviction decisions (the small-heap stress
     // repro of the round-13 gate crash reads block ids from it)
     spark.sparkContext.setLogLevel(

@@ -788,27 +788,21 @@ object TextOps extends QueryModule {
     merges.toSeq
   }
 
-  /** The trained merge table, memoized per dataset dir — the tokenizer
-    * ARTIFACT, reused by the application pass like the IVF codebook
-    * collects. Only `bpeApply` reads the cache: `bpeTrain` itself always
-    * re-trains, so its benchmark timing prices the trainer loop — a
-    * cache-hit min would make a trainer regression invisible in the
-    * per-query history.
-    *
-    * Keyed by dataset dir under the IMMUTABLE-DIR assumption every
-    * constVectors-style memo in this engine shares: the driver's
-    * testdata dirs never change within a JVM. A deployment retraining
-    * over a mutated dir must call `bpeTrain` first (it overwrites the
-    * entry) or key the artifact store by content version — a stale
-    * table would silently tokenize against the old vocabulary (round-5
-    * ADVICE). */
+  /** The trained merge table, memoized per `documents.parquet`
+    * fingerprint ([[graft.Tbl.fileKey]]: path, length, mtime) — the
+    * tokenizer ARTIFACT, reused by the application pass like the IVF
+    * codebook collects; a documents file rewritten in place misses and
+    * is trained afresh. Only `bpeApply` reads the cache: `bpeTrain`
+    * itself always re-trains, so its benchmark timing prices the trainer
+    * loop — a cache-hit min would make a trainer regression invisible in
+    * the per-query history. */
   private val mergeCache = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(Int, String, String, String, Long)]]
 
   private def bpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val merges = bpeMerges(s, Tbl.documents(s, d), BpeTrainMerges)
-    mergeCache.put(d, merges)
+    mergeCache.put(Tbl.fileKey(s"$d/documents.parquet"), merges)
     merges.toDF("step", "lhs", "rhs", "merged", "cnt").orderBy($"step")
   }
 
@@ -822,7 +816,7 @@ object TextOps extends QueryModule {
     * table rides into the scan as 10 string literals. */
   private def bpeApply(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val merges = mergeCache.getOrElseUpdate(d,
+    val merges = mergeCache.getOrElseUpdate(Tbl.fileKey(s"$d/documents.parquet"),
       bpeMerges(s, Tbl.documents(s, d), BpeTrainMerges))
     val chained = merges.foldLeft(
       "concat('|', array_join(transform(sequence(1, length(w))," +

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types.StructType
   * `Tbl.scratchDir`, swept at JVM exit. */
 final class Replay(s: SparkSession, schema: StructType) {
   private val dir = new File(Tbl.scratchDir("replay_src"))
-  private val checkpoint = Tbl.scratchDir("replay_ckpt")
+  private[graft] val checkpoint = Tbl.scratchDir("replay_ckpt")
   private val held = scala.collection.mutable.Queue.empty[File]
 
   /** The replay as a stream; one file per micro-batch. */

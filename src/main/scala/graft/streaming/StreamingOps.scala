@@ -11,11 +11,12 @@ import org.apache.spark.sql.types._
 /** Structured Streaming surface (SURVEY.md §2.1/2.2/2.6/2.7), run to
   * completion so the driver's DuckDB oracle can check it: each query
   * reads the events parquet AS A STREAM (file source), applies the
-  * streaming operator under `Trigger.AvailableNow`, lands in a memory
-  * sink, and returns the final table — proving the streaming path
-  * computes exactly what the batch oracle computes.
+  * streaming operator under `Trigger.AvailableNow`, lands in the
+  * batch-keyed parquet sink (`batchSink`), and returns the final table —
+  * proving the streaming path computes exactly what the batch oracle
+  * computes.
   *
-  * Covered: file stream source (S1-ish), memory sink (K6-class),
+  * Covered: file stream source (S1-ish), batch-keyed parquet sink,
   * checkpointing (K7), watermark (A2), sliding window agg (A1), update /
   * append / complete output modes (T4), AvailableNow trigger (T2-class),
   * flatMapGroupsWithState keyed state (T1 rebuilt), streaming dedup
@@ -36,11 +37,9 @@ object StreamingOps extends QueryModule {
 
   /** events.parquet as a bounded stream with a proper event-time col.
     * The file stream source wants a directory, so the single parquet
-    * file is exposed through a temp dir symlink. */
-  private def eventStream(s: SparkSession, d: String): DataFrame =
-    eventStream(s, d, Nil)
-
-  /** For each type in `sentinelTypes`, a schema-aligned far-future row
+    * file is exposed through a temp dir symlink.
+    *
+    * For each type in `sentinelTypes`, a schema-aligned far-future row
     * (year ~2191, user_id = −1) is staged beside the data: it advances
     * the event-time watermark past every real event so the terminal
     * no-data micro-batch can flush watermark-gated state (outer-join
@@ -52,7 +51,7 @@ object StreamingOps extends QueryModule {
     * latest real row of a joined stream stuck in state. Callers exclude
     * sentinels from results by their negative user_id at the OUTPUT. */
   private def eventStream(s: SparkSession, d: String,
-                          sentinelTypes: Seq[String]): DataFrame = {
+                          sentinelTypes: Seq[String] = Nil): DataFrame = {
     val tsNanos = Tbl.eventsTsType(s, d) == LongType
     val dir = java.nio.file.Paths.get(Tbl.scratchDir("events_stream"))
     Files.createSymbolicLink(dir.resolve("events.parquet"),
@@ -78,7 +77,7 @@ object StreamingOps extends QueryModule {
       Files.copy(src, dir.resolve("zz_sentinel.parquet"))
     }
     // one micro-batch NO MATTER how many files land in the dir: the
-    // update-mode memory-sink queries (s2/s3) re-emit refreshed state
+    // update-mode queries (s2/s3) re-emit refreshed state
     // per batch, so their "output = final state" contract needs a
     // single batch — made explicit here rather than relying on the
     // directory happening to hold one file
@@ -165,49 +164,38 @@ object StreamingOps extends QueryModule {
     * produced (RocksDB changelogs vs heap-provider .delta files). */
   @volatile private[graft] var lastCheckpointDir: String = ""
 
-  /** Run a streaming DF to completion and return its output table: the
-    * one bounded-stream runner every memory-sink entry goes through
-    * ([[drain]] does the running; this picks the sink and reads it back).
-    *
-    * Sink selection. Memory (default): assertable in-JVM table, zero
-    * I/O — right for specs and small-SF gates.
-    * `SPARK_GRAFT_STREAM_SINK=files`: each micro-batch spills to a
-    * scratch parquet dir via foreachBatch and the result is read back
-    * — this bounds driver RSS
-    * for sf10-class gate runs, where the memory sink's collected rows
-    * (every batch's emissions, held on heap for the JVM's whole lifetime
-    * across a 211-query Verify) were the ceiling that forced round 9's
-    * two-tranche workaround. The foreachBatch writes mirror the memory
-    * sink's mode contract exactly: Append/Update APPEND each batch's
-    * emitted rows; Complete REPLACES the table with the batch.
-    * Downstream batch folds see an identical DataFrame either way (the
-    * s* refold contracts never depend on in-batch row order). */
+  /** Run a streaming DF to completion through [[drain]] into
+    * [[batchSink]] and return its output table, read back with the
+    * stream's own schema (no inference; a stream that emits nothing reads
+    * back empty but typed): every batch's rows for Append/Update, the
+    * last batch's, the whole result table, for Complete. Nothing is
+    * collected onto the driver. */
   private def runToTable(s: SparkSession, df: DataFrame, name: String,
                          mode: OutputMode, flushFinal: Boolean = false,
-                         keyDomain: Int = Int.MaxValue): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("files")) {
-      val sinkDir = Tbl.scratchDir(s"msink_$name")
-      // seed a schema-only file so a stream with zero emitted batches
-      // still reads back as an empty-but-typed relation
-      s.createDataFrame(new java.util.ArrayList[Row](), df.schema)
-        .write.mode("overwrite").parquet(sinkDir)
-      val save = if (mode == OutputMode.Complete()) "overwrite" else "append"
-      val perBatch: (DataFrame, Long) => Unit =
-        (b, _) => b.write.mode(save).parquet(sinkDir)
-      drain(s, df.writeStream.foreachBatch(perBatch).outputMode(mode),
-            name, flushFinal, keyDomain)
-      s.read.parquet(sinkDir)
-    } else {
-      drain(s, df.writeStream.format("memory").queryName(name).outputMode(mode),
-            name, flushFinal, keyDomain)
-      s.table(name)
-    }
+                         keyDomain: Int = Int.MaxValue): DataFrame = {
+    val sinkDir = Tbl.scratchDir(s"sink_$name")
+    drain(s, df.writeStream.foreachBatch(batchSink(sinkDir, mode)).outputMode(mode),
+          name, flushFinal, keyDomain)
+    readSink(s, df.schema, sinkDir)
+  }
+
+  /** The one stream sink, keyed by batch: Append/Update overwrite
+    * `dir/b<batchId>`, Complete replaces `dir`. A batch replayed after a
+    * crash between its write and its commit rewrites its own output, so
+    * with the replayable file source the output is exactly-once. */
+  private[graft] def batchSink(dir: String, mode: OutputMode): (DataFrame, Long) => Unit =
+    if (mode == OutputMode.Complete()) (b, _) => b.write.mode("overwrite").parquet(dir)
+    else (b, id) => b.write.mode("overwrite").parquet(s"$dir/b$id")
+
+  /** What [[batchSink]] wrote to `dir`, read with the known `schema`. */
+  private[graft] def readSink(s: SparkSession, schema: StructType, dir: String): DataFrame =
+    s.read.schema(schema).option("recursiveFileLookup", "true").parquet(dir)
 
   /** Run `writer` to completion on a fresh checkpoint dir
     * (`ckpt_<name>`) through the one bounded-stream start,
     * [[Replay.drain]]. The only place this module starts a stream:
-    * [[runToTable]] hands it a memory/files sink, the sink-owning
-    * entries (s7, s9, s17, s33) their own writer.
+    * [[runToTable]] hands it [[batchSink]], the sink-owning entries
+    * (s7, s9, s17, s33) their own writer.
     *
     * `flushFinal`: whether the bounded run still needs the terminal
     * NO-DATA micro-batch. That batch re-runs the full stateful DAG on
@@ -387,37 +375,32 @@ object StreamingOps extends QueryModule {
       .orderBy($"c_mktsegment")
   }
 
-  /** K5 foreachBatch: per-micro-batch arbitrary batch logic — here the
-    * per-batch aggregate is appended to a parquet dir (the reference
-    * appends CSV inside foreachBatch, `predict_path.py:71`), then read
-    * back. Single batch ⇒ equals the global aggregate. */
+  /** K5 foreachBatch: per-micro-batch arbitrary batch logic — each
+    * batch's aggregate lands through [[batchSink]] (the reference appends
+    * CSV inside foreachBatch, `predict_path.py:71`) and is read back.
+    * Single batch ⇒ equals the global aggregate. */
   private def foreachBatchAgg(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val outDir = Tbl.scratchDir("febatch")
-    val perBatch: (DataFrame, Long) => Unit = (batch, _) =>
-      batch.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .write.mode("append").parquet(outDir)
-    drain(s, eventStream(s, d).writeStream.outputMode(OutputMode.Append())
-               .foreachBatch(perBatch), "febatch")
-    s.read.parquet(outDir).orderBy($"event_type")
+    val events = eventStream(s, d)
+    drain(s, events.writeStream.outputMode(OutputMode.Append())
+               .foreachBatch(batchAggWriter(outDir)), "febatch")
+    readSink(s, batchAgg(events).schema, outDir).orderBy(col("event_type"))
   }
+
+  /** s7's per-batch aggregate: the batch's row count per event type. */
+  private[graft] def batchAgg(batch: DataFrame): DataFrame =
+    batch.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+
+  /** s7's writer: a replayed batch replaces its own aggregate. */
+  private[graft] def batchAggWriter(outDir: String): (DataFrame, Long) => Unit =
+    (batch, id) => batchSink(outDir, OutputMode.Append())(batchAgg(batch), id)
 
   /** s33: foreachBatch MERGE/upsert — the Delta-style keyed-table
     * maintenance idiom the reference gestures at (`predict_path.py:55-71`
-    * appends per-batch files; a real deployment upserts a keyed table).
-    * Target: a VERSIONED parquet table keyed by user_id holding (latest
-    * event struct, n_seen). Each micro-batch pre-aggregates its per-key
-    * partial (max struct + count — map-side combinable, so the shuffle
-    * carries |keys| rows, not the batch), MERGEs it into the current
-    * target version (matched → fold, not matched → insert: one
-    * unionByName + re-fold, the associative form of WHEN MATCHED UPDATE
-    * / WHEN NOT MATCHED INSERT), and commits a NEW version dir,
-    * pointer-swapped only after the write lands — the write-new-files,
-    * swap-pointer protocol a lakehouse MERGE encodes via its
-    * transaction log. The input is staged as 4 files consumed with
-    * maxFilesPerTrigger=1, so the upsert provably composes across ≥4
-    * micro-batches (a single batch would pass vacuously);
+    * appends per-batch files; a real deployment upserts a keyed table)
+    * into a VERSIONED parquet table keyed by user_id ([[mergeWriter]]).
+    * The input is staged as 4 files consumed with maxFilesPerTrigger=1,
+    * so the upsert provably composes across ≥4 micro-batches;
     * associativity of (max, +) makes the final table batching-invariant
     * — the same refold contract s28/s31/s32 pin. Scale: per-batch
     * shuffle bounded by the key domain; the copy-on-write target
@@ -429,36 +412,52 @@ object StreamingOps extends QueryModule {
     val stage = Tbl.scratchDir("merge_stage")
     ev.repartition(4).write.mode("overwrite").parquet(stage)
     val root = Tbl.scratchDir("merge_target")
-    @volatile var cur: String = null
-    val upsert: (DataFrame, Long) => Unit = (batch, id) => {
-      val prev = cur
-      val part = batch
-        .select(col("user_id"),
-                struct(unix_micros(col("ts")).as("ts_us"), col("event_id"),
-                       Tbl.cents(col("value")).as("v_c")).as("w"))
-        .groupBy(col("user_id"))
-        .agg(max(col("w")).as("w"), count(lit(1)).as("n_seen"))
-      val merged =
-        if (prev == null) part
-        else batch.sparkSession.read.parquet(prev).unionByName(part)
-          .groupBy(col("user_id"))
-          .agg(max(col("w")).as("w"), sum(col("n_seen")).as("n_seen"))
-      val v = s"$root/v$id"
-      merged.write.mode("overwrite").parquet(v)
-      cur = v
-    }
     drain(s, s.readStream.schema(ev.schema)
                .option("maxFilesPerTrigger", "1")
                .parquet(stage)
                .writeStream
                .outputMode(OutputMode.Append())
-               .foreachBatch(upsert), "merge")
-    s.read.parquet(cur)
+               .foreachBatch(mergeWriter(root)), "merge")
+    readMerged(ev, root)
       .select($"user_id", $"w.ts_us".as("last_ts_us"),
               $"w.event_id".as("last_event_id"), $"w.v_c".as("last_v_c"),
               $"n_seen")
       .orderBy($"user_id")
   }
+
+  /** s33's per-key partial of an events batch: max (ts, event_id, cents)
+    * and the row count — map-side combinable, |keys| rows shuffled. */
+  private def mergePartial(batch: DataFrame): DataFrame =
+    batch
+      .select(col("user_id"),
+              struct(unix_micros(col("ts")).as("ts_us"), col("event_id"),
+                     Tbl.cents(col("value")).as("v_c")).as("w"))
+      .groupBy(col("user_id"))
+      .agg(max(col("w")).as("w"), count(lit(1)).as("n_seen"))
+
+  /** s33's upsert: batch `id` MERGEs its [[mergePartial]] into the newest
+    * version under `root` below `id` (unionByName + re-fold, the
+    * associative form of WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT)
+    * and writes `v<id>`. So a replayed batch merges from the version
+    * before it, not its own output, and a restart resumes the table. */
+  private[graft] def mergeWriter(root: String): (DataFrame, Long) => Unit = (batch, id) => {
+    val part = mergePartial(batch)
+    val merged = mergeVersion(root, id).fold(part)(prev =>
+      batch.sparkSession.read.schema(part.schema).parquet(prev).unionByName(part)
+        .groupBy(col("user_id"))
+        .agg(max(col("w")).as("w"), sum(col("n_seen")).as("n_seen")))
+    merged.write.mode("overwrite").parquet(s"$root/v$id")
+  }
+
+  /** The newest version [[mergeWriter]] wrote under `root` from
+    * `events` (batch or stream; only its schema is used). */
+  private[graft] def readMerged(events: DataFrame, root: String): DataFrame =
+    events.sparkSession.read.schema(mergePartial(events).schema).parquet(mergeVersion(root).get)
+
+  /** `root/v<k>` for the largest k below `before`, if any. */
+  private def mergeVersion(root: String, before: Long = Long.MaxValue): Option[String] =
+    Option(new java.io.File(root).list()).toSeq.flatten.filter(_.matches("v\\d+"))
+      .map(_.drop(1).toLong).filter(_ < before).maxOption.map(k => s"$root/v$k")
 
   private val foreachMergeSql =
     """WITH r AS (
@@ -1179,7 +1178,7 @@ object StreamingOps extends QueryModule {
     * rebuilt as a rate-limited micro-batch source: frame-count offsets,
     * `maxFramesPerTrigger` admission control, AvailableNow draining the
     * snapshot in ~4 micro-batches here. Complete-mode aggregation over
-    * a genuinely multi-batch run — the memory sink's final table must
+    * a genuinely multi-batch run — the complete-mode sink's final table must
     * equal the batch aggregate regardless of how the frames were
     * sliced into batches. */
   private def streamPipeCsv(s: SparkSession, d: String): DataFrame = {

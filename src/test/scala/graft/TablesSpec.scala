@@ -178,4 +178,24 @@ class TablesSpec extends SparkSpec {
     assert(jobsDuring(Tbl(spark, dir, "t")) == 0)
     assert(jobsDuring(spark.read.parquet(s"$dir/t.parquet")) >= 1) // uncached
   }
+
+  test("bpeApply trains again on a documents file rewritten in place") {
+    def docs(word: String) = spark.range(20).select($"id".as("doc_id"),
+      concat_ws(" ", array_repeat(lit(word), 3)).as("text"))
+    val bpeApply = SparkEntry.queries("tx_bpe_apply")
+    def ppm(d: String) = bpeApply(spark, d).select($"tok_per_char_ppm").as[Long].collect().toSet
+    val dir = Tbl.scratchDir("tables_docs")
+    writeTable(docs("aaaa"), dir, "documents")
+    assert(ppm(dir) == Set(250000L)) // (a,a) then (aa,aa): one token per word
+
+    val f = new java.io.File(s"$dir/documents.parquet")
+    val mtime = f.lastModified
+    writeTable(docs("bbbb"), dir, "documents")
+    assert(f.setLastModified(mtime + 2000))
+    // merges trained on the a-words would leave each b one token (1e6)
+    assert(ppm(dir) == Set(250000L))
+    val fresh = Tbl.scratchDir("tables_docs_fresh")
+    writeTable(docs("bbbb"), fresh, "documents")
+    assert(bpeApply(spark, dir).collect().toSeq == bpeApply(spark, fresh).collect().toSeq)
+  }
 }

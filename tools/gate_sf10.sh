@@ -1,7 +1,7 @@
 #!/bin/bash
 # One-artifact sf10 gate (the round-12 recipe, scripted): run the FULL
-# query registry through ONE graft.Verify JVM with file-spill stream
-# sinks, check the handful of slow oracles as their outputs land, then
+# query registry through ONE graft.Verify JVM, check the handful of
+# slow oracles as their outputs land, then
 # drain the remainder with 4 parallel check.py workers.
 #
 # Usage: tools/gate_sf10.sh <sfDir> <outDir> <seedOracleJson> <resultLog>
@@ -70,7 +70,6 @@ fi
 SLOW="dd_dup_clusters dd_ngram_jaccard dd_minhash_lsh tx_decontaminate j7_spatial_join sim_semantic_dedup a1_sliding_window s1_stream_window_agg"
 
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
-SPARK_GRAFT_STREAM_SINK=files \
   java $JVM_OPTS -Xmx"$HEAP" -cp "$CP" \
   graft.Verify "$SF" "$OUT" $ONLY >> "$OUT/verify.log" 2>&1 &
 ENGINE=$!
