@@ -88,11 +88,14 @@ object Bench {
     // warmup matters most: the first StreamingQuery in a session pays
     // ~2.5s of one-time machinery init (state store, commit log, sink
     // classes, JIT) that otherwise lands on one measured query.
-    try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => }
-    try {
+    def warmup(name: String)(body: => Unit): Unit =
+      try body catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warmup $name failed: $e") }
+    warmup("entry")(materialize(SparkEntry.entry(spark)))
+    warmup("s5_stream_complete") {
       materialize(SparkEntry.queries("s5_stream_complete")(spark, "/root/testdata/sf0.001"))
       reset(spark)
-    } catch { case _: Throwable => }
+    }
     // host-contention self-adjudication (round-10 verdict item #3):
     // every round since r2 some entries inflate 2-30x under external
     // load and settling "regression or noise?" has needed a judge

@@ -9,26 +9,41 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
 
-/** A bounded multi-batch replay through the parquet file stream source:
-  * the operation exactly-once and prefix consistency rest on (a source
-  * replayed from a checkpoint).
+/** A bounded replay through the parquet file stream source, the engine's
+  * one parquet `readStream`: the operation exactly-once and prefix
+  * consistency rest on (a source replayed from a checkpoint). Two forms:
   *
-  * Files enter the source one at a time, each with a strictly later
-  * mtime than any staged before it; the source lists by mtime and reads
-  * one file per micro-batch, so staged order IS batch order. A file is
-  * either staged straight in ([[stage]]) or held back and [[release]]d
-  * later ([[hold]]), which is how a run stops after batch j. Every
-  * [[run]] is an AvailableNow drain on the SAME checkpoint: the second
-  * run is a restart. Source dir and checkpoint live under
-  * `Tbl.scratchDir`, swept at JVM exit. */
-final class Replay(s: SparkSession, schema: StructType) {
+  * Chunked (`filesPerBatch` 1, StreamBench and the restart specs): each
+  * staged file has a strictly later mtime than any before it and the
+  * source lists by mtime, so staged order IS batch order. A file is
+  * staged straight in ([[stage]]) or held back and [[release]]d later
+  * ([[hold]]), which is how a run stops after batch j; every [[run]] is
+  * an AvailableNow drain on the SAME checkpoint, so the second is a
+  * restart.
+  *
+  * Registry (`filesPerBatch` `Int.MaxValue`, the registry streams):
+  * existing files [[link]]ed in as they are, drained as ONE micro-batch.
+  *
+  * Source dir and checkpoint live under `Tbl.scratchDir`, swept at JVM
+  * exit. */
+final class Replay(s: SparkSession, schema: StructType, filesPerBatch: Int = 1) {
   private val dir = new File(Tbl.scratchDir("replay_src"))
-  private[graft] val checkpoint = Tbl.scratchDir("replay_ckpt")
+  private[graft] lazy val checkpoint = Tbl.scratchDir("replay_ckpt")
   private val held = scala.collection.mutable.Queue.empty[File]
 
-  /** The replay as a stream; one file per micro-batch. */
+  /** The replay as a stream; `filesPerBatch` files per micro-batch. */
   def source: DataFrame =
-    s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir.toString)
+    s.readStream.schema(schema).option("maxFilesPerTrigger", filesPerBatch.toString)
+      .parquet(dir.toString)
+
+  /** `file` enters the source now as a symbolic link: not copied, not
+    * re-dated (its mtime, and every cache keyed on it through
+    * `Tbl.fileKey`, stays as it is), and free to sit on another device
+    * than the source dir. */
+  def link(file: Path): this.type = {
+    Files.createSymbolicLink(dir.toPath.resolve(file.getFileName), file.toAbsolutePath)
+    this
+  }
 
   /** `df` as the next file; it, and any file held before it, enters the
     * source now. */

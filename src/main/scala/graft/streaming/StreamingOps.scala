@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Path, Paths}
 
 import graft.{QueryModule, Session, Tbl}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.1/2.2/2.6/2.7), run to
   * completion so the driver's DuckDB oracle can check it: each query
-  * reads the events parquet AS A STREAM (file source), applies the
+  * reads the events parquet AS A STREAM (a [[Replay]]), applies the
   * streaming operator under `Trigger.AvailableNow`, lands in the
   * batch-keyed parquet sink (`batchSink`), and returns the final table —
   * proving the streaming path computes exactly what the batch oracle
@@ -35,12 +35,11 @@ object StreamingOps extends QueryModule {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** events.parquet as a bounded stream with a proper event-time col.
-    * The file stream source wants a directory, so the single parquet
-    * file is exposed through a temp dir symlink.
+  /** events.parquet as a bounded stream with a proper event-time col:
+    * a registry-form [[Replay]] of the linked file ([[tableStream]]).
     *
     * For each type in `sentinelTypes`, a schema-aligned far-future row
-    * (year ~2191, user_id = −1) is staged beside the data: it advances
+    * (year ~2191, user_id = −1) is linked in beside the data: it advances
     * the event-time watermark past every real event so the terminal
     * no-data micro-batch can flush watermark-gated state (outer-join
     * nulls, final windows). The sentinels carry REAL event types on
@@ -53,40 +52,34 @@ object StreamingOps extends QueryModule {
   private def eventStream(s: SparkSession, d: String,
                           sentinelTypes: Seq[String] = Nil): DataFrame = {
     val tsNanos = Tbl.eventsTsType(s, d) == LongType
-    val dir = java.nio.file.Paths.get(Tbl.scratchDir("events_stream"))
-    Files.createSymbolicLink(dir.resolve("events.parquet"),
-                             java.nio.file.Paths.get(s"$d/events.parquet"))
-    if (sentinelTypes.nonEmpty) {
-      // staged ONCE per sentinel-type set and copied thereafter: the
-      // 1-row parquet write is a full Spark job (~0.2 s) that four
-      // sentinel streams × two bench runs would otherwise each re-pay
-      val src = sentinelCache.getOrElseUpdate((sentinelTypes, tsNanos), {
+    // written ONCE per sentinel-type set and linked thereafter: the
+    // 1-row parquet write is a full Spark job (~0.2 s) that four
+    // sentinel streams × two bench runs would otherwise each re-pay
+    val sentinel = if (sentinelTypes.isEmpty) Nil else Seq(
+      sentinelCache.getOrElseUpdate((sentinelTypes, tsNanos), {
         import s.implicits._
-        val tmp = Tbl.scratchDir("sentinel_stage")
         val base = sentinelTypes.zipWithIndex
           .map { case (t, i) => (-1L - i, 7000000000000000000L, -1L, t, 0.0, "{}") }
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         // sentinel ts must match the dataset's physical shape: raw ns
         // long beside a ns file, a real timestamp beside a µs file
         // (same year-2191 wall-clock either way)
-        val aligned =
-          if (tsNanos) base
-          else base.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        Replay.writeFile(aligned, java.nio.file.Paths.get(tmp, "sentinel.parquet"))
-      })
-      Files.copy(src, dir.resolve("zz_sentinel.parquet"))
-    }
-    // one micro-batch NO MATTER how many files land in the dir: the
-    // update-mode queries (s2/s3) re-emit refreshed state
-    // per batch, so their "output = final state" contract needs a
-    // single batch — made explicit here rather than relying on the
-    // directory happening to hold one file
-    val raw = s.readStream.schema(rawSchema(tsNanos))
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir.toString)
+        Replay.writeFile(
+          if (tsNanos) base else base.withColumn("ts", timestamp_micros(expr("ts div 1000"))),
+          Paths.get(Tbl.scratchDir("sentinel_stage"), "sentinel.parquet"))
+      }))
+    val raw = tableStream(s, d, "events", rawSchema(tsNanos), sentinel)
     if (tsNanos) raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else raw
   }
+
+  /** `d/<table>.parquet` and the `extra` files as ONE micro-batch (a
+    * registry-form [[Replay]]): the update-mode queries (s2/s3) re-emit
+    * refreshed state per batch, so "output = final state" needs one. */
+  private def tableStream(s: SparkSession, d: String, table: String, schema: StructType,
+                          extra: Seq[Path] = Nil): DataFrame =
+    (Paths.get(s"$d/$table.parquet") +: extra)
+      .foldLeft(new Replay(s, schema, filesPerBatch = Int.MaxValue))(_.link(_)).source
 
   /** Engine streaming posture, applied by [[drain]] before every stream
     * start.
@@ -157,7 +150,7 @@ object StreamingOps extends QueryModule {
     * (sentinels carry no dataset values, so the dataset dir is not part
     * of the key — but the ts physical shape is). */
   private val sentinelCache =
-    scala.collection.concurrent.TrieMap.empty[(Seq[String], Boolean), java.nio.file.Path]
+    scala.collection.concurrent.TrieMap.empty[(Seq[String], Boolean), Path]
 
   /** Checkpoint root of the most recent [[drain]]ed stream — lets specs
     * assert the state store artifacts the engine defaults actually
@@ -399,8 +392,8 @@ object StreamingOps extends QueryModule {
     * maintenance idiom the reference gestures at (`predict_path.py:55-71`
     * appends per-batch files; a real deployment upserts a keyed table)
     * into a VERSIONED parquet table keyed by user_id ([[mergeWriter]]).
-    * The input is staged as 4 files consumed with maxFilesPerTrigger=1,
-    * so the upsert provably composes across ≥4 micro-batches;
+    * The input is a [[Replay]] of 4 time-ordered chunks, one per
+    * micro-batch, so the upsert provably composes across 4 batches;
     * associativity of (max, +) makes the final table batching-invariant
     * — the same refold contract s28/s31/s32 pin. Scale: per-batch
     * shuffle bounded by the key domain; the copy-on-write target
@@ -409,13 +402,10 @@ object StreamingOps extends QueryModule {
   private def foreachMerge(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = Tbl.events(s, d)
-    val stage = Tbl.scratchDir("merge_stage")
-    ev.repartition(4).write.mode("overwrite").parquet(stage)
+    val r = new Replay(s, ev.schema).hold(Replay.chunks(ev, 4, $"ts"))
+    r.release()
     val root = Tbl.scratchDir("merge_target")
-    drain(s, s.readStream.schema(ev.schema)
-               .option("maxFilesPerTrigger", "1")
-               .parquet(stage)
-               .writeStream
+    drain(s, r.source.writeStream
                .outputMode(OutputMode.Append())
                .foreachBatch(mergeWriter(root)), "merge")
     readMerged(ev, root)
@@ -488,13 +478,12 @@ object StreamingOps extends QueryModule {
   private def fanOutStream(s: SparkSession, d: String, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
     // The probe reads the SAME parquet file the stream source reads:
-    // eventStream's scratch dir holds a symlink to $d/events.parquet, so
-    // a batch probe of Tbl.events(s, d) counts exactly the row groups
-    // the file-stream source will split. (A sentinel-staging stream
-    // would add one 1-row-group file — it could only RAISE the probed
-    // count, never fake parallelism away — and no fanned stream stages
-    // sentinels.) Probe and threshold are shared with Tbl.fanOut
-    // (round-15 ADVICE: the twins had drifted into duplicated logic).
+    // eventStream's Replay links $d/events.parquet itself, so a batch
+    // probe of Tbl.events(s, d) counts exactly the row groups the
+    // file-stream source will split. (A linked sentinel would add one
+    // 1-row-group file — it could only RAISE the probed count, never
+    // fake parallelism away — and no fanned stream links sentinels.)
+    // Probe and threshold are shared with Tbl.fanOut.
     val splits = graft.Tbl.scanEffectiveSplits(graft.Tbl.events(s, d))
     if (graft.Tbl.needsFanOut(splits, target)) df.repartition(target)
     else df
@@ -672,21 +661,6 @@ object StreamingOps extends QueryModule {
        |FROM r WHERE rn <= 3 ORDER BY mmsi, rn""".stripMargin
   }
 
-  /** documents.parquet as a bounded stream (same symlink-dir pattern as
-    * eventStream; no event-time column needed for stateless passes). */
-  private def documentStream(s: SparkSession, d: String): DataFrame = {
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val dir = java.nio.file.Paths.get(Tbl.scratchDir("docs_stream"))
-    Files.createSymbolicLink(dir.resolve("documents.parquet"),
-                             java.nio.file.Paths.get(s"$d/documents.parquet"))
-    s.readStream.schema(docsSchema)
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(dir.toString)
-  }
-
   /** Streaming curation verdict: the stateless quality rules (length,
     * repetition) applied to a document stream — the online half of the
     * batch x_curation_pipeline (the corpus-global dup rule is inherently
@@ -696,7 +670,11 @@ object StreamingOps extends QueryModule {
   private def streamCuration(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.operators.CurationOps.{qualitySignals, statelessVerdict}
-    val scored = qualitySignals(documentStream(s, d))
+    val docs = tableStream(s, d, "documents", StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType),
+      StructField("lang", StringType), StructField("source", StringType),
+      StructField("n_chars", LongType))))
+    val scored = qualitySignals(docs)
       .select($"doc_id", $"lang", $"n_words", $"uniq_ppm",
               statelessVerdict.as("verdict"))
     runToTable(s, scored, "s_curation", OutputMode.Append())
@@ -1462,13 +1440,15 @@ object StreamingOps extends QueryModule {
                .writeStream.format("csv")
                .option("path", outDir)
                .outputMode(OutputMode.Append()), "csv")
-    s.read.schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_type", StringType))))
-      .csv(outDir)
+    readCsvSink(s, outDir)
       .groupBy($"user_id", $"event_type")
       .agg(count(lit(1)).as("n"))
       .orderBy($"user_id", $"event_type")
   }
+
+  /** s9's csv sink output under `dir`, read with its declared schema. */
+  private[graft] def readCsvSink(s: SparkSession, dir: String): DataFrame =
+    s.read.schema("user_id BIGINT, event_type STRING").csv(dir)
 
   private val csvSinkSql =
     """SELECT user_id, event_type, count(*) AS n FROM events

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import graft.streaming.Replay
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, max, min, timestamp_seconds, unix_micros}
@@ -7,7 +9,9 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, timestamp_seco
 /** The replay StreamBench measures with: a table cut into time-ordered
   * chunks, drained one chunk per micro-batch, and restarted on the same
   * checkpoint over chunks that were held back until then. One cut feeds
-  * every replay here, as it feeds every StreamBench layout. */
+  * every replay here, as it feeds every StreamBench layout. Also the
+  * registry form every parquet-fed registry stream reads through:
+  * existing files linked in and drained as one batch. */
 class ReplaySpec extends SparkSpec {
 
   // 4,000 events, one per second of event time, written out of time
@@ -60,5 +64,26 @@ class ReplaySpec extends SparkSpec {
     // nothing lost, event time still in order across the restart
     assert(inEventTimeOrder(first ++ second), first ++ second)
     assert((first ++ second).map(_._3).sum == events.count())
+  }
+
+  test("registry form: a linked file and a linked sentinel drain as one batch, untouched") {
+    val dir = Tbl.scratchDir("replay_linked")
+    val file = Replay.writeFile(events, Paths.get(dir, "events.parquet"))
+    val sentinel = Replay.writeFile(
+      spark.range(1).select(lit(-1L).as("event_id"), timestamp_seconds(lit(7000000000L)).as("ts")),
+      Paths.get(dir, "sentinel.parquet"))
+    // dated in the past, like a dataset file: a re-dating link shows
+    assert(file.toFile.setLastModified(1600000000000L))
+    def fingerprint(p: Path) =
+      (p.toFile.lastModified, Tbl.fileKey(p.toString), Files.getAttribute(p, "unix:nlink"))
+    val before = Seq(file, sentinel).map(fingerprint)
+    val r = new Replay(spark, events.schema, filesPerBatch = Int.MaxValue)
+      .link(file).link(sentinel)
+    val (batches, nProgress) = drain(r)
+    assert(batches.length == 1 && nProgress == 1, batches)
+    assert(batches.head._3 == events.count() + 1)
+    // same mtime and fileKey, and still one name per file: linking
+    // neither re-dated the files nor hard-linked them
+    assert(Seq(file, sentinel).map(fingerprint) == before)
   }
 }

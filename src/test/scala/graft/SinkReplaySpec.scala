@@ -9,12 +9,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** Exactly-once under replay for the engine's stream writers: the one
   * stream sink (`StreamingOps.batchSink`, Append and Complete), s7's
-  * per-batch aggregate and s33's versioned upsert. Each case drains a
-  * [[Replay]] of 3 chunks, one per micro-batch, and reads the output
-  * back; then deletes the last `commits/<id>` file, which is a crash
-  * between that batch's sink write and its commit, and drains again on
-  * the same checkpoint. That run replays the batch, and the read-back
-  * must equal the first one. */
+  * per-batch aggregate, s33's versioned upsert, s9's csv file sink and
+  * s17's pipecsv sink. Each case drains a [[Replay]] of 3 chunks, one
+  * per micro-batch, and reads the output back; then deletes the last
+  * `commits/<id>` file, which is a crash between that batch's sink write
+  * and its commit, and drains again on the same checkpoint. That run
+  * replays the batch, and the read-back must equal the first one. */
 class SinkReplaySpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,8 +32,11 @@ class SinkReplaySpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   /** `read(dir)` after a clean 3-batch drain of `writer(source, dir)`,
-    * and again after the last batch is replayed on the same checkpoint. */
-  private def cleanThenReplayed(writer: (DataFrame, String) => DataStreamWriter[Row])
+    * and again after the last batch is replayed on the same checkpoint;
+    * `replayReads` is how many batches of the replay read input (0 for a
+    * sink that skips a batch its own log already holds). */
+  private def cleanThenReplayed(writer: (DataFrame, String) => DataStreamWriter[Row],
+                                replayReads: Int = 1)
                                (read: String => DataFrame): (Seq[Row], Seq[Row]) = {
     StreamingOps.configureStreaming(spark) // the engine's stream posture
     val r = new Replay(spark, events.schema).hold(cut)
@@ -47,7 +50,8 @@ class SinkReplaySpec extends SparkSpec {
     assert(last == 2L)
     for (f <- Seq(s"$last", s".$last.crc")) new File(commits, f).delete()
     // the restart finds offsets/2 with no commit and runs batch 2 again
-    assert(r.run(writer(r.source, dir)).length == 1)
+    assert(r.run(writer(r.source, dir)).length == replayReads)
+    assert(new File(commits, s"$last").exists)
     (clean, rows(read(dir)))
   }
 
@@ -99,6 +103,31 @@ class SinkReplaySpec extends SparkSpec {
       .agg(max(struct(unix_micros($"ts"), $"event_id")).as("w"), count(lit(1)).as("n_seen"))
       .select($"user_id", $"w.event_id", $"n_seen")
     assert(clean == rows(latest))
+    assert(replayed == clean)
+  }
+
+  test("s9's csv file sink: a replayed batch is written once") {
+    def counts(df: DataFrame) = df.groupBy($"user_id", $"event_type").agg(count(lit(1)).as("n"))
+    // Spark's file sink keeps its own batch log (`_spark_metadata`): it
+    // skips the replayed batch without reading it
+    val (clean, replayed) = cleanThenReplayed((src, dir) =>
+      src.select($"user_id", $"event_type").writeStream.format("csv")
+        .option("path", dir).outputMode(OutputMode.Append()), replayReads = 0
+    )(dir => counts(StreamingOps.readCsvSink(spark, dir)))
+    assert(clean == rows(counts(events)))
+    assert(replayed == clean)
+  }
+
+  test("s17's pipecsv sink: a replayed epoch rewrites its own frame files") {
+    import graft.sources.SourceOps.{FrameLen, frameSchema}
+    def frames(df: DataFrame) =
+      df.select($"event_id", $"user_id", $"event_type", Tbl.cents($"value").as("v_c"))
+    val (clean, replayed) = cleanThenReplayed { (src, dir) =>
+      frames(src).writeStream.format("pipecsv").option("path", dir)
+        .option("frameLen", FrameLen).outputMode(OutputMode.Append())
+    }(dir => spark.read.format("pipecsv").schema(frameSchema)
+               .option("frameLen", FrameLen).load(dir))
+    assert(clean == rows(frames(events)))
     assert(replayed == clean)
   }
 }

@@ -686,16 +686,14 @@ class StatefulOpsSpec extends SparkSpec {
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
     import graft.streaming.StatefulOps.{First3PerType, First3Row, TypeEv}
     graft.streaming.StreamingOps.configureStreaming(spark)
-    val srcDir = Tbl.scratchDir("ls_salt_src")
-    val ck = Tbl.scratchDir("ls_salt_ck")
     val schema = StructType(Seq(
       StructField("event_type", StringType), StructField("event_id", LongType),
       StructField("ts_us", LongType), StructField("value", DoubleType)))
+    val replay = new Replay(spark, schema)
     // five rows, five distinct salts (ids 1..5 mod 32 all differ): every
     // row is its own sub-list's min-1, so all five are emitted
-    (1L to 5L).map(i => TypeEv("click", i, i * 100L, i.toDouble)).toDF()
-      .coalesce(1).write.mode("append").parquet(srcDir)
-    val out = spark.readStream.schema(schema).parquet(srcDir)
+    replay.stage((1L to 5L).map(i => TypeEv("click", i, i * 100L, i.toDouble)).toDF())
+    val out = replay.source
       .select(col("event_type"), col("event_id"), col("ts_us"), col("value"))
       .as[TypeEv]
       .groupByKey(e => (e.event_type,
@@ -703,13 +701,11 @@ class StatefulOpsSpec extends SparkSpec {
       .transformWithState(new First3PerType,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
     val rows = scala.collection.mutable.ArrayBuffer.empty[First3Row]
-    val q = out.toDF().writeStream
+    replay.run(out.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         rows ++= batch.as[First3Row].collect(): Unit
       }
-      .outputMode("update").option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(); q.stop()
+      .outputMode("update"))
     assert(rows.map(_.event_id).toSet === Set(1L, 2L, 3L, 4L, 5L),
            "per-salt lists must admit their local minima")
     val folded = rows.map(r => (r.ts_us, r.event_id)).distinct
@@ -863,8 +859,8 @@ class StatefulOpsSpec extends SparkSpec {
   }
 
   test("s33 foreachBatch MERGE: 4-micro-batch upsert equals the batch fold") {
-    // the staged input is 4 files read with maxFilesPerTrigger=1, so
-    // this exercises the versioned copy-on-write merge across ≥4 real
+    // the input is a 4-chunk Replay, one chunk per micro-batch, so
+    // this exercises the versioned copy-on-write merge across 4 real
     // micro-batches; (max, +) associativity must make the final table
     // identical to the single-pass batch computation
     import org.apache.spark.sql.functions._
@@ -885,6 +881,8 @@ class StatefulOpsSpec extends SparkSpec {
       .orderBy($"user_id")
     assert(merged.collect().toSeq == batch.collect().toSeq,
            "MERGE'd target diverges from the batch last-event fold")
+    val commits = new java.io.File(graft.streaming.StreamingOps.lastCheckpointDir, "commits")
+    assert(commits.list().count(_.forall(_.isDigit)) == 4, "s33 did not run 4 micro-batches")
   }
 
   test("s34 chain e2e: envelope→preprocess→to_json→from_json→last3Feat across batches") {
