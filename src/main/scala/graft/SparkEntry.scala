@@ -39,8 +39,8 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2.
     *
-    * Every query runs with the engine's extensions live (the rank-limit
-    * → native-top-K lowering and the native SQL functions): the driver
+    * Every query runs with the engine's extensions live (the planner
+    * strategy of `TopKPerKey` and the native SQL functions): the driver
     * constructs its own SparkSession without `spark.sql.extensions`,
     * so the session is enrolled here — one line, every entry point, no
     * per-query opt-in. */

@@ -524,9 +524,8 @@ object AnalyticsOps extends QueryModule {
     * orderkey make the top-2 deterministic on both engines). Scale
     * note: the decorrelated window shuffles the inner side once by
     * join key; the hand-optimized twin of this shape is
-    * x_native_topk's rank-limit→TopKPerKeyExec rewrite — this entry
-    * certifies the FRONT DOOR, that one the bounded-buffer fast
-    * path. */
+    * x_native_topk's explicit TopKPerKey call — this entry certifies
+    * the FRONT DOOR, that one the bounded-heap operator. */
   private def lateralTopk(s: SparkSession, d: String): DataFrame = {
     Tbl.customer(s, d).createOrReplaceTempView("cust_lt")
     Tbl.orders(s, d).createOrReplaceTempView("ord_lt")

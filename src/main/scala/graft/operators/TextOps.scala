@@ -977,8 +977,8 @@ object TextOps extends QueryModule {
     * input partition), the 8-row query relation and 1-row (N, T) totals
     * are broadcast, and the only per-match exchange carries (qid, term,
     * doc_id) triples for documents actually containing a query term.
-    * Final top-10-per-qid is the rank≤k window TopKPerKeyStrategy
-    * lowers to the native bounded-heap exec — no global sort. */
+    * Final top-10-per-qid is the rank≤k window, which Spark plans as a
+    * per-qid sort-based group limit — no global sort. */
   private def bm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // ONE token-stream scan, reduced to the (doc_id, term, c) posting

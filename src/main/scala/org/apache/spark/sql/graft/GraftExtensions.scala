@@ -21,8 +21,9 @@ object NativeFunctions {
     (FunctionIdentifier(name), new ExpressionInfo(classTag[T].runtimeClass.getName, name), build)
 }
 
-/** The engine's one extension registry: the rank-limit lowering
-  * ([[TopKPerKeyStrategy]]) and [[NativeFunctions]]. Enable it at launch
+/** The engine's one extension registry: the planner strategy of the
+  * explicit top-K operator ([[TopKPerKeyStrategy]]) and
+  * [[NativeFunctions]]. Enable it at launch
   * with `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
   * (SQL CLI, thrift server, notebooks), or apply it to a session that is
   * already built with [[GraftExtensions.install]]. */

@@ -26,8 +26,11 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *    the exchange moves O(keys·K) rows, not O(rows);
   *  - a FINAL instance (child clustered by key — `EnsureRequirements`
   *    inserts the exchange) merges to the exact per-key top K.
-  * Memory is O(distinct-keys-per-partition · K), never a full sort
-  * buffer; no spill path is needed because K is a small constant.
+  * Memory is O(distinct keys per partition · K), held in an in-memory
+  * `HashMap` of heaps with no spill path and no bound on the number of
+  * keys. So the operator serves only explicit [[TopKPerKey]] callers;
+  * the `row_number() <= K` idiom plans Spark's own window group limit,
+  * which sits on a spillable sort.
   *
   * Row order within the output is unspecified (heap order) — callers
   * rank/sort the ≤K survivors, which is O(keys·K) work.
@@ -36,6 +39,7 @@ case class TopKPerKeyPlan(k: Int, keyExprs: Seq[Expression],
                           order: Seq[SortOrder], child: LogicalPlan)
     extends UnaryNode {
   require(k > 0, s"top-k needs k > 0, got $k")
+  require(keyExprs.nonEmpty, "top-k needs at least one key column")
   override def output: Seq[Attribute] = child.output
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKeyPlan =
     copy(child = newChild)
@@ -85,45 +89,17 @@ case class TopKPerKeyExec(k: Int, keyExprs: Seq[Expression],
     copy(child = newChild)
 }
 
-/** Plans [[TopKPerKeyPlan]], and lowers Catalyst's own rank-limit node
-  * to the same exec pair. `InferWindowGroupLimit` recognizes the
-  * `row_number() OVER (PARTITION BY k ORDER BY o) <= K` idiom (filter
-  * above ranking window) and inserts a logical `WindowGroupLimit`, whose
-  * stock exec fully sorts each key's rows before discarding all but K.
-  * Matching it here gives any query written in the plain window idiom,
-  * SQL or DataFrame, the bounded heap without naming `TopKPerKey`. The
-  * match is at the planner because a strategy sees the fully optimized
-  * plan: an optimizer rule injected through `spark.sql.extensions` runs
-  * in the 'Operator Optimization' batches, before 'Infer window group
-  * limit' creates the node, and would never fire.
-  *
-  * Scope guards, with Spark's sort-based `WindowGroupLimitExec` as the
-  * fall-through:
-  *  - `RowNumber` only: the heap emits exactly K rows per key, which is
-  *    row_number semantics; rank/dense_rank keep more than K on ties.
-  *  - non-empty partition spec: a global top-K would plan a
-  *    ClusteredDistribution over zero expressions; Spark's own limit
-  *    machinery handles that case.
-  *  - K ≤ [[MaxK]] bounds heap memory (Spark's
-  *    windowGroupLimitThreshold discipline). */
+/** Plans [[TopKPerKeyPlan]] as a partial + final [[TopKPerKeyExec]] pair.
+  * Only the explicit [[TopKPerKey]] call builds that node; the plain
+  * `row_number() <= K` idiom stays on Spark's sort-based window group
+  * limit. */
 object TopKPerKeyStrategy extends SparkStrategy {
-  import org.apache.spark.sql.catalyst.expressions.RowNumber
-  import org.apache.spark.sql.catalyst.plans.logical.WindowGroupLimit
-
-  private[graft] val MaxK = 1024
-
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyPlan(k, keys, order, child) => execPair(k, keys, order, child)
-    case WindowGroupLimit(parts, order, _: RowNumber, k, child)
-        if parts.nonEmpty && k > 0 && k <= MaxK =>
-      execPair(k, parts, order, child)
+    case TopKPerKeyPlan(k, keys, order, child) =>
+      TopKPerKeyExec(k, keys, order, partial = false,
+        TopKPerKeyExec(k, keys, order, partial = true, planLater(child))) :: Nil
     case _ => Nil
   }
-
-  private def execPair(k: Int, keys: Seq[Expression], order: Seq[SortOrder],
-                       child: LogicalPlan): Seq[SparkPlan] =
-    TopKPerKeyExec(k, keys, order, partial = false,
-      TopKPerKeyExec(k, keys, order, partial = true, planLater(child))) :: Nil
 }
 
 object TopKPerKey {

@@ -26,13 +26,13 @@ class GraftExtensionsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("a3_top3_per_key plans the same after install as in a GraftExtensions session") {
+  test("x_native_topk: install and extensions plan alike") {
     // the module's own entry: SparkEntry.queries would install into the
     // extensions session too
-    val a3 = RelationalOps.queries("a3_top3_per_key")
+    val topk = RelationalOps.queries("x_native_topk")
     // (expression ids and exchange plan ids count per JVM, not per plan)
     def plan(s: SparkSession): (String, Int) = {
-      val p = a3(s, d).queryExecution.executedPlan
+      val p = topk(s, d).queryExecution.executedPlan
       (p.toString.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N"),
        collect(p) { case t: TopKPerKeyExec => t }.size)
     }

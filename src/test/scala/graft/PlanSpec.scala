@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.window.WindowGroupLimitExec
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.graft.TopKPerKeyExec
 
 /** Physical-plan regression tests: the 100 TB posture is a property of
   * the PLAN, not the result — a query can hash-match the oracle while
@@ -667,33 +669,20 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
            s"sample fraction $frac should be ~1/64")
   }
 
-  test("rank-limit lowering declines rank(): ties must keep more than K rows") {
-    // the heap exec emits EXACTLY k rows per key — row_number semantics.
-    // rank()/dense_rank() keep every tied row at the boundary, so the
-    // strategy must leave them on the stock path; this pin guards the
-    // RowNumber-only match from being silently widened
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
-    org.apache.spark.sql.graft.GraftExtensions.install(spark)
-    val w = Window.partitionBy($"user_id").orderBy($"event_type") // heavy ties
-    val df = Tbl.events(spark, d)
-      .withColumn("rk", org.apache.spark.sql.functions.rank().over(w))
-      .where($"rk" <= 3)
-    val p = executed(df)
-    val topk = collectWithSubqueries(p) {
-      case e: org.apache.spark.sql.graft.TopKPerKeyExec => e
-    }
-    assert(topk.isEmpty, s"lowering must not fire on rank():\n$p")
-    // rank ≤ 3 with ties keeps more rows than 3 distinct keys × 3
-    val perKey = df.groupBy($"user_id").count()
-    assert(perKey.where($"count" > 3).count() > 0,
-           "fixture produced no rank ties — tie guard untested")
+  /** `p`'s stock rank-limit nodes, after asserting that `p` holds no
+    * native `TopKPerKeyExec`: `row_number() <= K` has one physical plan,
+    * Spark's sort-based group limit. */
+  private def groupLimits(p: SparkPlan): Seq[WindowGroupLimitExec] = {
+    assert(collectWithSubqueries(p) { case e: TopKPerKeyExec => e }.isEmpty,
+           s"row_number() <= K planned the native heap:\n$p")
+    collectWithSubqueries(p) { case w: WindowGroupLimitExec => w }
   }
+  private def modes(p: SparkPlan): Seq[String] =
+    groupLimits(p).map(_.mode.toString).sorted
 
-  test("rank-limit auto-rewrite fires on the SQL-string surface too") {
-    // same engine semantics through spark.sql over a temp view — the
-    // strategy lowers Catalyst's inferred group limit regardless of
-    // which API authored the plan
+  test("SQL row_number() <= K plans the stock group-limit pair") {
+    // the SQL-string surface over a temp view: Catalyst infers the group
+    // limit, and Spark plans it Partial before the exchange, Final after
     org.apache.spark.sql.graft.GraftExtensions.install(spark)
     Tbl.events(spark, d).createOrReplaceTempView("rank_rw_events")
     try {
@@ -704,25 +693,16 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
           |                            ORDER BY ts DESC, event_id DESC) AS rn
           |  FROM rank_rw_events) WHERE rn <= 3""".stripMargin)
       val p = executed(df)
-      val topk = collectWithSubqueries(p) {
-        case e: org.apache.spark.sql.graft.TopKPerKeyExec => e
-      }
-      assert(topk.size == 2, s"SQL path did not lower to TopKPerKeyExec:\n$p")
+      assert(modes(p) == Seq("Final", "Partial"), s"expected Partial + Final group limit:\n$p")
     } finally spark.catalog.dropTempView("rank_rw_events")
   }
 
-  test("rank-limit auto-rewrite: the plain window idiom lowers to the native heap operator") {
-    // a3 is written as row_number().over(window).where(rn <= 3) — the
-    // stock idiom. Catalyst infers a WindowGroupLimit; TopKPerKeyStrategy
-    // lowers it to TopKPerKeyExec (partial heap before the exchange,
-    // final after), so users get the native operator without asking.
+  test("a3's window idiom plans the stock group-limit pair") {
+    // a3 is written as row_number().over(window).where(rn <= 3), with the
+    // extensions installed: the idiom stays on Spark's spillable
+    // sort-based limit, one Partial instance and one Final
     val p = executed(SparkEntry.queries("a3_top3_per_key")(spark, d))
-    val topk = collectWithSubqueries(p) {
-      case e: org.apache.spark.sql.graft.TopKPerKeyExec => e
-    }
-    assert(topk.size == 2, s"expected partial+final TopKPerKeyExec in:\n$p")
-    assert(topk.exists(_.partial) && topk.exists(!_.partial),
-           s"expected one partial and one final instance in:\n$p")
+    assert(modes(p) == Seq("Final", "Partial"), s"expected Partial + Final group limit:\n$p")
   }
 
   test("dynamic-gap session window: one user_id exchange feeds the session merge") {
@@ -768,31 +748,32 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
            s"recall must join broadcast-side only:\n$p")
   }
 
-  test("rank-limit lowering fires via the spark.sql.extensions path too") {
+  test("an extensions session plans the same group limit as install") {
     // extensions-built sessions (thrift server, notebooks) never call
-    // install. The lowering is anchored in TopKPerKeyStrategy, which sees
-    // the fully optimized plan (an injected optimizer rule would run in
-    // the 'Operator Optimization' batches, BEFORE InferWindowGroupLimit
-    // creates the node — round-4 ADVICE); this pin builds a genuine
-    // extensions session (no imperative registration anywhere) and
-    // asserts the native exec.
+    // install; this pin builds a genuine extensions session (no
+    // imperative registration anywhere) and asserts that the rank-limit
+    // idiom plans the same stock pair there as in an installed session
+    import org.apache.spark.sql.SparkSession
+    def limits(s: SparkSession): Seq[String] = {
+      import org.apache.spark.sql.expressions.Window
+      import org.apache.spark.sql.functions.row_number
+      import s.implicits._
+      val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
+      val df = Tbl.events(s, d)
+        .withColumn("rn", row_number().over(w)).where($"rn" <= 3)
+        .select($"user_id", $"event_id", $"rn")
+      groupLimits(executed(df)).map(_.simpleString(100).replaceAll("#\\d+", "#N")).sorted
+    }
+    val installed = spark.newSession()
+    org.apache.spark.sql.graft.GraftExtensions.install(installed)
+    val viaInstall = limits(installed)
+    assert(viaInstall.size == 2 && viaInstall.exists(_.contains("Partial")) &&
+           viaInstall.exists(_.contains("Final")), viaInstall.mkString("\n"))
     SparkSpec.withExtensionsSession { ext =>
       assert(ext ne spark, "extensions test must not reuse the shared session")
       assert(ext.experimental.extraStrategies.isEmpty,
              "session must rely on the extensions conf alone")
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.row_number
-      import ext.implicits._
-      val w = Window.partitionBy($"user_id").orderBy($"ts".desc, $"event_id".desc)
-      val df = Tbl.events(ext, d)
-        .withColumn("rn", row_number().over(w)).where($"rn" <= 3)
-        .select($"user_id", $"event_id", $"rn")
-      val p = executed(df)
-      val topk = collectWithSubqueries(p) {
-        case e: org.apache.spark.sql.graft.TopKPerKeyExec => e
-      }
-      assert(topk.size == 2,
-             s"extensions path did not lower to TopKPerKeyExec:\n$p")
+      assert(limits(ext) == viaInstall)
       // and every native function arrived through injectFunction, not
       // install
       nativeFunctionNames.foreach { name =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.graft.{TopKPerKey, TopKPerKeyExec, TopKPerKeyStrategy}
+import org.apache.spark.sql.graft.{TopKPerKey, TopKPerKeyExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.Assertions
 
@@ -38,6 +38,13 @@ class TopKPerKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(execs.map(_.partial).sorted == Seq(false, true), s"plan:\n$p")
   }
 
+  test("an empty key list fails at the TopKPerKey call") {
+    val e = intercept[IllegalArgumentException] {
+      TopKPerKey(sample, 3, Nil, Seq(("t", true)))
+    }
+    assert(e.getMessage == "requirement failed: top-k needs at least one key column")
+  }
+
   test("equals the window-rank formulation on the fixture table") {
     val d = "/root/testdata/sf0.001"
     val native = SparkEntry.queries("x_native_topk")(spark, d)
@@ -49,20 +56,14 @@ class TopKPerKeySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 }
 
 object TopKPerKeySpec extends Assertions with AdaptiveSparkPlanHelper {
-  /** `df`'s rows planned without [[TopKPerKeyStrategy]], the engine's one
-    * rank-limit lowering: the stock reference of a top-K differential.
-    * Otherwise both sides plan the native exec and the differential is
-    * a tautology, so the reference's plan must hold no TopKPerKeyExec. */
+  /** `df`'s rows, the stock reference of a top-K differential. Its plan
+    * must hold no TopKPerKeyExec: otherwise both sides run the native
+    * exec and the differential is a tautology. */
   def stockRows(df: DataFrame): Seq[Row] = {
-    val exps = df.sparkSession.experimental
-    val saved = exps.extraStrategies
-    exps.extraStrategies = saved.filterNot(_ == TopKPerKeyStrategy)
-    try {
-      val rows = df.collect().toSeq
-      val p = df.queryExecution.executedPlan
-      assert(collectWithSubqueries(p) { case t: TopKPerKeyExec => t }.isEmpty,
-             s"stock reference planned the native exec:\n$p")
-      rows
-    } finally exps.extraStrategies = saved
+    val rows = df.collect().toSeq
+    val p = df.queryExecution.executedPlan
+    assert(collectWithSubqueries(p) { case t: TopKPerKeyExec => t }.isEmpty,
+           s"stock reference planned the native exec:\n$p")
+    rows
   }
 }
