@@ -89,10 +89,8 @@ case class TopKPerKeyExec(k: Int, keyExprs: Seq[Expression],
     copy(child = newChild)
 }
 
-/** Plans [[TopKPerKeyPlan]] as a partial + final [[TopKPerKeyExec]] pair.
-  * Only the explicit [[TopKPerKey]] call builds that node; the plain
-  * `row_number() <= K` idiom stays on Spark's sort-based window group
-  * limit. */
+/** Plans [[TopKPerKeyPlan]], which only the explicit [[TopKPerKey]] call
+  * builds, as a partial + final [[TopKPerKeyExec]] pair. */
 object TopKPerKeyStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerKeyPlan(k, keys, order, child) =>
